@@ -253,25 +253,6 @@ def main() -> None:
         )
     )
 
-    # ---- OPT-IN core-scaling leg (r12 VERDICT #4; additions-only) ---------
-    # At sf0.1 the suite above measures per-stage scheduling constants,
-    # not parallelism (r12: the 8-core run BEAT the 32-core run), so
-    # the driver's low/high-core comparison of it is uninformative.
-    # When SPARK_GRAFT_SCALING_LEG=<k> is set, a small honest-shuffle
-    # subset runs over events x k (disjoint time-shifted unions) with
-    # the noop sink and a SECOND one-line JSON is printed — see
-    # plans/scaling_leg.py. The driver never sets the env var, so its
-    # invocation prints exactly one JSON line as before.
-    leg = os.environ.get("SPARK_GRAFT_SCALING_LEG", "")
-    if leg:
-        from piholelongtermstats_spark.plans.scaling_leg import (
-            run_scaling_leg,
-        )
-
-        print(
-            json.dumps(run_scaling_leg(spark, sf_dir, int(leg), sf))
-        )
-
 
 if __name__ == "__main__":
     main()

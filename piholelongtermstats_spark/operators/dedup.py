@@ -22,10 +22,12 @@ bit-for-bit (operators/text.md5_hash60).
 from __future__ import annotations
 
 import hashlib
+import itertools
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from piholelongtermstats_spark.operators.fixpoint import iterate
 from piholelongtermstats_spark.operators.text import md5_hash60, tokens
 
 NUM_PERMS = 16
@@ -470,14 +472,10 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
     Each round is at most two shuffle joins + a groupBy — no
     single-task stage.
 
-    Lineage control: the per-round result is localCheckpoint-ed every
-    CHECKPOINT_EVERY rounds (cached otherwise), so the logical plan
-    stays O(CHECKPOINT_EVERY) deep instead of growing with rounds and
-    blowing up Catalyst planning time on deep components. If the
-    round cap is hit without a fixpoint the function raises — wrong
-    (unconverged) labels must never be returned silently.
+    The loop runs on fixpoint.iterate, probing the labels that changed
+    each round; hitting max_rounds without a fixpoint raises — wrong
+    (unconverged) labels are never returned silently.
     """
-    CHECKPOINT_EVERY = 5
     JUMP_AFTER = 2
     # Pin the edge list: every round re-reads it, and without this the
     # LSH shingle→minhash→band candidate pipeline upstream would be
@@ -488,10 +486,9 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
         .distinct()
         .cache()
     )
-    labels = edges.select("src").distinct().withColumn("comp", F.col("src"))
-    converged = False
-    prev = None
-    for rnd in range(max_rounds):
+    rounds = itertools.count()
+
+    def propagate(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             edges.join(labels.withColumnRenamed("src", "dst_"), F.col("dst") == F.col("dst_"))
             .groupBy("src")
@@ -502,71 +499,43 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
             F.col("comp").alias("comp0"),
             F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias("comp"),
         )
-        if rnd < JUMP_AFTER:
-            # shallow components (the near-dup common case) converge in
-            # 2-3 plain min-label rounds — don't pay the jump join yet
-            stepped_cached = None
-            updated = stepped.select(
-                "src", "comp", (F.col("comp") < F.col("comp0")).alias("_chg")
-            )
-        else:
+        # shallow components (the near-dup common case) converge in
+        # 2-3 plain min-label rounds — don't pay the jump join yet
+        if next(rounds) >= JUMP_AFTER:
             # pointer jump: comp values are themselves node ids, so
             # chase one level (comp ← comp[comp]) — doubles the
             # propagation horizon per round for deep chains; every
             # label is a node's current minimum, so the jump never
-            # overshoots the true min. Cached: the self-join reads
-            # stepped twice.
-            stepped_cached = stepped.cache()
-            updated = (
-                stepped_cached.join(
-                    stepped_cached.select(
-                        F.col("src").alias("j_src"), F.col("comp").alias("j_comp")
-                    ),
-                    F.col("comp") == F.col("j_src"),
-                    "left",
-                )
-                .select(
-                    "src",
-                    F.least(
-                        F.col("comp"), F.coalesce(F.col("j_comp"), F.col("comp"))
-                    ).alias("comp"),
-                    "comp0",
-                )
-                .select(
-                    "src", "comp", (F.col("comp") < F.col("comp0")).alias("_chg")
-                )
+            # overshoots the true min.
+            stepped = stepped.join(
+                stepped.select(
+                    F.col("src").alias("j_src"), F.col("comp").alias("j_comp")
+                ),
+                F.col("comp") == F.col("j_src"),
+                "left",
+            ).select(
+                "src",
+                F.least(
+                    F.col("comp"), F.coalesce(F.col("j_comp"), F.col("comp"))
+                ).alias("comp"),
+                "comp0",
             )
-        if (rnd + 1) % CHECKPOINT_EVERY == 0:
-            updated = updated.localCheckpoint(eager=True)
-        else:
-            updated = updated.cache()
-        changed = updated.filter(F.col("_chg")).limit(1).count()
-        if stepped_cached is not None:
-            stepped_cached.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        prev = updated
-        labels = updated.select("src", "comp")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_rounds} rounds; "
-            "component diameter exceeds 2^rounds — raise max_rounds"
+        return stepped.select(
+            "src", "comp", (F.col("comp") < F.col("comp0")).alias("_chg")
         )
-    result = labels.select(
+
+    try:
+        labels, _ = iterate(
+            edges.select("src").distinct().withColumn("comp", F.col("src")),
+            propagate,
+            max_rounds,
+            lambda _, labels: labels.filter(F.col("_chg")),
+        )
+    finally:
+        edges.unpersist()
+    return labels.select(
         F.col("src").alias("doc_id"), F.col("comp").alias("cluster_id")
-    ).localCheckpoint(eager=True)
-    # Release loop state AFTER materializing the result: the cached
-    # edge relation and the final round's cached labels would
-    # otherwise pin executor storage for the rest of the session
-    # (repeated calls accumulate); the checkpointed result no longer
-    # references either.
-    edges.unpersist()
-    if prev is not None:
-        prev.unpersist()
-    return result
+    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -622,40 +591,36 @@ def duplicate_clusters_star(pairs: DataFrame, max_rounds: int = 30) -> DataFrame
     min doc_id in component), one row per non-isolated node. Fixpoint =
     one full large+small round leaves the canonical edge set unchanged;
     raises if max_rounds is hit first (wrong labels are never returned
-    silently). localCheckpoint every round caps lineage — each round's
-    plan would otherwise stack two joins + three shuffles deep.
+    silently). The loop runs on fixpoint.iterate (a checkpoint and one
+    probe per round).
     """
-    edges = (
+
+    def contract(edges: DataFrame) -> DataFrame:
+        return _small_star(_large_star(edges))
+
+    def moved(edges: DataFrame, stepped: DataFrame) -> DataFrame:
+        # Both sides are distinct, so stepped == edges iff stepped∖edges
+        # is empty and the cardinalities agree; a row here means either
+        # check failed.
+        n = F.count(F.lit(1))
+        resized = (
+            stepped.agg(n.alias("n"))
+            .crossJoin(edges.agg(n.alias("m")))
+            .filter(F.col("n") != F.col("m"))
+        )
+        return stepped.exceptAll(edges).select(F.lit(1)).union(resized.select(F.lit(1)))
+
+    edges, _ = iterate(
         pairs.select(
             F.least("doc_a", "doc_b").alias("a"),
             F.greatest("doc_a", "doc_b").alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        contract,
+        max_rounds,
+        moved,
     )
-    # The previous round's cardinality is remembered in Python (r12,
-    # guide §1.2): re-counting the already-checkpointed edge set every
-    # round was one redundant job per round.
-    edges_cnt = edges.count()
-    for _ in range(max_rounds):
-        stepped = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        stepped_cnt = stepped.count()
-        # Set equality: same cardinality and no row in stepped∖edges.
-        # (Both sides are distinct, so the two checks imply equality.)
-        if (
-            stepped_cnt == edges_cnt
-            and stepped.exceptAll(edges).limit(1).count() == 0
-        ):
-            edges = stepped
-            break
-        edges = stepped
-        edges_cnt = stepped_cnt
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters_star did not converge in {max_rounds} "
-            "rounds — pathological input or max_rounds too low"
-        )
     # Fixpoint edge set is a union of stars centered at component
     # minima: every (a, b) pins b's label to a, and centers label
     # themselves. groupBy-min is belt-and-braces for the (impossible at

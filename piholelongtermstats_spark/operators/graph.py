@@ -12,9 +12,10 @@ DISTINCT client↔domain pairs in both directions (so the bipartite
 walk is symmetric and no sink handling is needed — every node has
 out-degree ≥ 1 by construction). Each power iteration is one
 edges⋈ranks hash join on src + one dst partial-agg — the same two
-shuffles regardless of iteration count — with localCheckpoint every
-few rounds to bound lineage/planning time (the dedup-components
-lesson). Nothing is collected; the damping term is pure arithmetic.
+shuffles regardless of iteration count. The loops (power iteration
+and k-core peeling) run on operators/fixpoint.iterate, which owns
+their caching, lineage truncation and convergence probes. Nothing is
+collected; the damping term is pure arithmetic.
 
 fp: rank mass is a float sum whose accumulation order is partition-
 dependent, so the registry entry is rows-only (like the trained
@@ -27,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from piholelongtermstats_spark.operators.fixpoint import iterate
 
 DAMPING = 0.85
 N_ITER = 10
@@ -53,6 +56,51 @@ def bipartite_edges(fact: DataFrame) -> DataFrame:
     )
 
 
+def _power_iteration(
+    fact: DataFrame, n_iter: int, top, rank: str, dtype: str, exprs, serve
+) -> DataFrame:
+    """Top-``top`` (node, ``rank``) after ``n_iter`` power iterations
+    over the bipartite walk, (rank DESC, node ASC) tie-break, the rank
+    served as the ``serve`` expression.
+
+    ``exprs(n)`` is the step for an n-node graph: (initial rank,
+    per-edge contribution, damped update of the summed ``in_mass``).
+    A round is one edges⋈ranks hash join on src plus one dst
+    partial-agg; the fixed rounds chain lazily (fixpoint.iterate) and
+    execute once, in the final checkpoint."""
+    edges = bipartite_edges(fact)
+    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+    edges = edges.join(deg, "src").persist()
+    try:
+        n = edges.select("src").distinct().count()
+        if n == 0:  # empty graph: well-formed empty result
+            ranks = fact.sparkSession.createDataFrame([], f"node string, {rank} {dtype}")
+        else:
+            init, contrib, update = exprs(n)
+
+            def power_step(ranks: DataFrame):
+                in_mass = (
+                    edges.join(ranks, edges.src == ranks.node)
+                    .select("dst", contrib.alias("c"))
+                    .groupBy("dst")
+                    .agg(F.sum("c").alias("in_mass"))
+                )
+                return in_mass.select(F.col("dst").alias("node"), update.alias(rank))
+
+            ranks = edges.select("src").distinct().select(
+                F.col("src").alias("node"), init.alias(rank)
+            )
+            ranks = iterate(ranks, power_step, n_iter)[0]
+    finally:
+        edges.unpersist()
+    out = ranks.select("node", serve.alias(rank)).orderBy(
+        F.col(rank).desc(), F.col("node").asc()
+    )
+    # top=None returns the full ranking (a huge literal limit would
+    # make TakeOrdered allocate a k-sized heap per partition)
+    return out if top is None else out.limit(top)
+
+
 def pagerank(
     fact: DataFrame,
     n_iter: int = N_ITER,
@@ -62,49 +110,16 @@ def pagerank(
     """(node, rank) — top-``top`` nodes by PageRank after ``n_iter``
     power iterations, rank rounded to 8 digits, (rank DESC, node ASC)
     tie-break."""
-    edges = bipartite_edges(fact)
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    edges = edges.join(deg, "src").persist()
-    n = edges.select("src").distinct().count()
-    if n == 0:  # empty graph: well-formed empty result (driver probe)
-        edges.unpersist()
-        return fact.sparkSession.createDataFrame(
-            [], "node string, rank double"
+
+    def exprs(n: int):
+        return (
+            F.lit(1.0) / n,
+            F.col("rank") / F.col("outdeg"),
+            F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("in_mass"),
         )
-    ranks = edges.select("src").distinct().select(
-        F.col("src").alias("node"), (F.lit(1.0) / n).alias("rank")
-    )
-    base = (1.0 - damping) / n
-    for i in range(n_iter):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.node)
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = contrib.select(
-            F.col("dst").alias("node"),
-            (F.lit(base) + F.lit(damping) * F.col("in_mass")).alias("rank"),
-        )
-        # No MID-LOOP checkpoints (r12 optimization, guide §1.2/§2.4):
-        # the loop is a LINEAR chain over the persisted edge relation,
-        # so one final action executes every iteration exactly once —
-        # the old every-4-rounds localCheckpoint added two extra job
-        # submissions + rank materializations per call and saved no
-        # recompute. Planning cost stays bounded because n_iter is a
-        # fixed constant (10), not data-dependent; a data-dependent
-        # round count (the dedup CC loop) still checkpoints.
-    # eager checkpoint truncates the remaining edges lineage, so the
-    # shared edge relation can be released without a recompute at
-    # consumption (no leaked persist — the dsir lesson)
-    ranks = ranks.localCheckpoint()
-    edges.unpersist()
-    out = ranks.select(
-        "node", F.round(F.col("rank"), 8).alias("rank")
-    ).orderBy(F.col("rank").desc(), F.col("node").asc())
-    # top=None returns the full ranking (a huge literal limit would
-    # make TakeOrdered allocate a k-sized heap per partition)
-    return out if top is None else out.limit(top)
+
+    serve = F.round(F.col("rank"), 8)
+    return _power_iteration(fact, n_iter, top, "rank", "double", exprs, serve)
 
 
 PPT_SCALE = 1_000_000_000_000  # fixed-point: rank mass in parts-per-10^12
@@ -140,52 +155,24 @@ def pagerank_fixedpoint(
     quality is unchanged at any realistic degree (pytest pins top-k
     agreement and exact equality against an integer numpy replay).
     The float variant remains the production default; this is the
-    auditable twin.
-
-    Scale: identical plan shape to ``pagerank`` — two shuffles per
-    iteration (edges⋈ranks on src, dst partial-agg), localCheckpoint
-    cadence, nothing collected but the node count. Σrank ≤ 10¹² and
-    num·in_mass ≤ 17·10¹² — far inside BIGINT.
+    auditable twin, running the same power-iteration body with the
+    integer step. Σrank ≤ 10¹² and num·in_mass ≤ 17·10¹² — far inside
+    BIGINT.
     """
-    edges = bipartite_edges(fact)
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    edges = edges.join(deg, "src").persist()
-    n = edges.select("src").distinct().count()
-    if n == 0:
-        edges.unpersist()
-        return fact.sparkSession.createDataFrame(
-            [], "node string, rank_ppt long"
-        )
-    ranks = edges.select("src").distinct().select(
-        F.col("src").alias("node"),
-        F.lit(PPT_SCALE // n).cast("long").alias("rank_ppt"),
-    )
-    base = ((damping_den - damping_num) * PPT_SCALE) // (damping_den * n)
-    for i in range(n_iter):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.node)
-            .select(
-                "dst",
-                F.expr("rank_ppt DIV outdeg").alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        ranks = contrib.select(
-            F.col("dst").alias("node"),
+
+    def exprs(n: int):
+        base = ((damping_den - damping_num) * PPT_SCALE) // (damping_den * n)
+        return (
+            F.lit(PPT_SCALE // n).cast("long"),
+            F.expr("rank_ppt DIV outdeg"),
             (
                 F.lit(base)
                 + F.expr(f"({damping_num} * in_mass) DIV {damping_den}")
-            ).cast("long").alias("rank_ppt"),
+            ).cast("long"),
         )
-        # No mid-loop checkpoints — same rationale as ``pagerank``:
-        # linear chain over persisted edges, fixed iteration count,
-        # one final action executes each iteration once; the old
-        # cadence only added job submissions (r12, guide §1.2).
-    ranks = ranks.localCheckpoint()
-    edges.unpersist()
-    out = ranks.orderBy(F.col("rank_ppt").desc(), F.col("node").asc())
-    return out if top is None else out.limit(top)
+
+    serve = F.col("rank_ppt")
+    return _power_iteration(fact, n_iter, top, "rank_ppt", "long", exprs, serve)
 
 
 def domain_cograph_triangles(fact: DataFrame) -> DataFrame:
@@ -372,64 +359,44 @@ def kcore_decomposition(
     sequential peel — pytest pins this against a brute-force
     sequential peel.
 
-    Scale: each round is two keyed degree aggregations + two
-    LEFT ANTI hash joins on the edge relation — no windows, no
-    all-pairs; rounds ≤ O(peeling depth) (≤ longest chain of
-    dependent removals). Each round's survivor relation is cached and
-    materialized by ONE count job whose value doubles as the
-    convergence probe: peeling only ever REMOVES edges, so
-    |edges'| == |edges| ⟺ edges' == edges ⟺ no node was dropped
-    (r13, guide §1.2/§5 — the old shape ran two uncached isEmpty
-    probes per round, each re-executing the whole un-checkpointed
-    peel lineage, and the edge relation appeared three times per
-    round's tree with no reuse guarantee). Non-convergence within
+    Scale: the loop state (fixpoint.iterate) is the surviving edges
+    with both endpoint degrees (dc, dd); a round keeps the edges whose
+    endpoints both have degree ≥ k and re-derives the degrees — two
+    keyed aggregations joined back, no windows, no all-pairs; rounds
+    ≤ the peeling depth. Convergence is probed on the below-k client
+    and domain sets (bad_c ∪ bad_d) read off the checkpointed state,
+    not on a count of the edges. Non-convergence within
     ``max_rounds`` raises rather than returning a wrong core.
 
     Registered rows-only: iterative fixpoints are not one SQL
     statement; correctness is pinned by the brute-force differential
     and the disjoint-doubling invariance test.
     """
-    edges = fact.select("client", "domain").distinct().cache()
-    n_edges = edges.count()
-    rounds = 0
-    while True:
-        if rounds >= max_rounds:
-            raise RuntimeError(
-                f"k-core peeling did not converge in {max_rounds} rounds"
-            )
-        degc = edges.groupBy("client").agg(
-            F.count(F.lit(1)).cast("long").alias("dc")
-        )
-        degd = edges.groupBy("domain").agg(
-            F.count(F.lit(1)).cast("long").alias("dd")
-        )
-        bad_c = degc.filter(F.col("dc") < k).select("client")
-        bad_d = degd.filter(F.col("dd") < k).select("domain")
-        stepped = (
-            edges.join(bad_c, "client", "left_anti")
-            .join(bad_d, "domain", "left_anti")
-            .cache()
-        )
-        n_stepped = stepped.count()
-        if n_stepped == n_edges:
-            # fixpoint: the attempted peel removed nothing (a dropped
-            # node always owns >= 1 edge, so "no edges removed" and
-            # "no nodes dropped" coincide). Pin the core with an eager
-            # checkpoint, then release every loop cache (no leaked
-            # persist — the dsir lesson).
-            core = stepped.localCheckpoint(eager=True)
-            stepped.unpersist()
-            edges.unpersist()
-            edges = core
-            break
-        edges.unpersist()
-        edges, n_edges = stepped, n_stepped
-        rounds += 1
-    summary = edges.agg(
+    cnt = F.count(F.lit(1)).cast("long")
+
+    def with_degrees(edges: DataFrame) -> DataFrame:
+        return edges.join(
+            edges.groupBy("client").agg(cnt.alias("dc")), "client"
+        ).join(edges.groupBy("domain").agg(cnt.alias("dd")), "domain")
+
+    def peel(edges: DataFrame) -> DataFrame:
+        kept = edges.filter((F.col("dc") >= k) & (F.col("dd") >= k))
+        return with_degrees(kept.select("client", "domain"))
+
+    def below_k(edges: DataFrame, _) -> DataFrame:  # bad_c ∪ bad_d
+        bad_c = edges.filter(F.col("dc") < k).select("client")
+        return bad_c.union(edges.filter(F.col("dd") < k).select("domain"))
+
+    core, rounds = iterate(
+        with_degrees(fact.select("client", "domain").distinct()),
+        peel,
+        max_rounds,
+        below_k,
+    )
+    return core.agg(
         F.lit(int(k)).cast("long").alias("k"),
         F.lit(rounds).cast("long").alias("rounds"),
         F.count_distinct("client").cast("long").alias("n_clients_core"),
         F.count_distinct("domain").cast("long").alias("n_domains_core"),
-        F.count(F.lit(1)).cast("long").alias("n_edges_core"),
+        cnt.alias("n_edges_core"),
     )
-    return summary

@@ -29,9 +29,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from piholelongtermstats_spark.operators.fixpoint import lloyd
 from piholelongtermstats_spark.operators.similarity import _dot, _norm
 from piholelongtermstats_spark.operators.text import md5_hash60
 
@@ -94,8 +95,43 @@ def _assign_udf(centroids: list[list[float]]):
     return assign
 
 
-def _nearest_cell(v: Column, centroids: list[list[float]]) -> Column:
-    return _assign_udf(centroids)(v)
+def training_sample(
+    emb: DataFrame, n_seeds: int, sample_mod: int | None = None
+) -> "tuple[DataFrame, list[list[float]]]":
+    """Every trained quantizer's start: the training vectors as one
+    ``v`` column, and the ``n_seeds`` with the smallest md5(vec_id)
+    as lists (a fixed pseudo-random sample; [] for an empty corpus).
+    ``sample_mod`` trains on the vec_id % mod == 0 subsample (the
+    quantizer needs a representative sample, not the corpus; FAISS
+    trains on ~256 vectors/centroid); assign_cells still assigns the
+    FULL corpus."""
+    if sample_mod and sample_mod > 1:
+        emb = emb.filter(F.col("vec_id") % sample_mod == 0)
+    v = F.col("embedding").cast("array<double>")
+    seeds = (
+        emb.select("vec_id", v.alias("v"))
+        .orderBy(md5_hash60(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc())
+        .limit(n_seeds)
+        .collect()
+    )
+    return emb.select(v.alias("v")), [list(r["v"]) for r in seeds]
+
+
+def train_cells(
+    emb: DataFrame, k: int, n_iters: int, sample_mod: int | None, assign_udf
+) -> list[list[float]]:
+    """k centroids by fixpoint.lloyd from the training_sample seeds,
+    each vector assigned to the cell ``assign_udf(centroids)`` picks;
+    [] for an empty corpus (search then yields 0 rows)."""
+    base, seeds = training_sample(emb, k, sample_mod)
+    if not seeds:
+        return []
+
+    def members(centroids: dict) -> DataFrame:
+        cell = assign_udf(list(centroids.values()))(F.col("v"))
+        return base.select(cell.alias("cell"), "v")
+
+    return list(lloyd(members, dict(enumerate(seeds)), n_iters).values())
 
 
 def train_centroids(
@@ -104,39 +140,9 @@ def train_centroids(
     n_iters: int = N_ITERS,
     sample_mod: int | None = None,
 ) -> list[list[float]]:
-    """Deterministic Lloyd iterations; returns k centroids as plain
-    lists (driver-side, kilobytes).
-
-    ``sample_mod`` trains the quantizer on the deterministic
-    vec_id % mod == 0 subsample — the standard IVF practice (the
-    coarse quantizer needs a representative sample, not the corpus;
-    FAISS trains on ~256 vectors/centroid). Assignment of the FULL
-    corpus still happens in assign_cells."""
-    if sample_mod and sample_mod > 1:
-        emb = emb.filter(F.col("vec_id") % sample_mod == 0)
-    v = F.col("embedding").cast("array<double>")
-    seeds = (
-        emb.select("vec_id", v.alias("v"))
-        .orderBy(md5_hash60(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc())
-        .limit(n_cells)
-        .collect()
-    )
-    if not seeds:
-        return []  # empty corpus → empty index (search yields 0 rows)
-    dim = len(seeds[0]["v"])
-    centroids = [list(r["v"]) for r in seeds]
-    base = emb.select(v.alias("v"))
-    for _ in range(n_iters):
-        assigned = base.withColumn("cell", _nearest_cell(F.col("v"), centroids))
-        means = (
-            assigned.groupBy("cell")
-            .agg(*[F.avg(F.col("v")[i]).alias(f"c{i}") for i in range(dim)])
-            .collect()
-        )
-        new = {r["cell"]: [r[f"c{i}"] for i in range(dim)] for r in means}
-        # empty cells keep their previous centroid
-        centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
-    return centroids
+    """Deterministic euclidean Lloyd iterations (train_cells); returns
+    k centroids as plain lists (kilobytes)."""
+    return train_cells(emb, n_cells, n_iters, sample_mod, _assign_udf)
 
 
 def assign_cells(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
@@ -145,7 +151,7 @@ def assign_cells(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     v = F.col("embedding").cast("array<double>")
     return emb.select(
         "vec_id", "label", v.alias("v"),
-        _nearest_cell(v, centroids).alias("cell"),
+        _assign_udf(centroids)(v).alias("cell"),
     )
 
 
@@ -164,7 +170,10 @@ def ivf_ann_topk(
     cells. Pass pre-trained `centroids` to skip index build (the
     production path: train once, search many). ``qv`` short-circuits
     the query-vector fetch when the caller already holds it (the
-    recall panel fetches it ONCE for all three single-query legs)."""
+    recall panel fetches it ONCE for all three single-query legs).
+    A caller-supplied ``qv`` also skips the check that
+    ``query_vec_id`` exists in ``emb`` (an absent id otherwise yields
+    the empty frame), so the caller must make that check itself."""
     if centroids is None:
         centroids = train_centroids(emb, n_cells, n_iters, sample_mod)
     if not centroids:

@@ -112,7 +112,10 @@ def ivfpq_ann_topk(
     """ADC top-K over the probed cells with exact re-rank. Pass both
     pinned quantizers for the SQL-reproducible path; ``None`` trains
     the data-adaptive ones (spherical k-means coarse + residual-free
-    PQ codebooks — the production default, pytest recall-covered)."""
+    PQ codebooks — the production default, pytest recall-covered).
+    A caller-supplied ``qv`` skips the check that ``query_vec_id``
+    exists in ``emb`` (an absent id otherwise yields the empty
+    frame), so the caller must make that check itself."""
     spark = emb.sparkSession
     empty = spark.createDataFrame([], "vec_id bigint, label int, cosine double")
     if centroids is None:

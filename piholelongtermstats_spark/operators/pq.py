@@ -41,8 +41,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from piholelongtermstats_spark.operators import ivf
+from piholelongtermstats_spark.operators.fixpoint import lloyd
 from piholelongtermstats_spark.operators.similarity import _dot, _norm
-from piholelongtermstats_spark.operators.text import md5_hash60
 
 N_SUB = 8
 N_CODES = 16
@@ -111,56 +112,36 @@ def train_pq_codebooks(
     n_iters: int = N_ITERS,
     sample_mod: int | None = None,
 ) -> list:
-    """Deterministic per-subspace Lloyd → codebooks
-    (n_sub × n_codes × subdim, driver-side, kilobytes).
+    """Deterministic per-subspace Lloyd (fixpoint.lloyd keyed by
+    (subspace, code)) → codebooks (n_sub × n_codes × subdim, kilobytes).
 
     One shuffle per iteration: the assignment UDF emits every
     subspace's code in one pass, then a single explode +
     groupBy(subspace, code) averages all subspaces at once."""
-    if sample_mod and sample_mod > 1:
-        emb = emb.filter(F.col("vec_id") % sample_mod == 0)
-    v = F.col("embedding").cast("array<double>")
-    seeds = (
-        emb.select("vec_id", v.alias("v"))
-        .orderBy(md5_hash60(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc())
-        .limit(n_codes)
-        .collect()
-    )
+    base, seeds = ivf.training_sample(emb, n_codes, sample_mod)
     if not seeds:
         return []
-    dim = len(seeds[0]["v"])
+    dim = len(seeds[0])
     if dim % n_sub:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     subdim = dim // n_sub
-    codebooks = [
-        [list(r["v"][s * subdim : (s + 1) * subdim]) for r in seeds]
-        for s in range(n_sub)
-    ]
-    base = emb.select(v.alias("v"))
-    for _ in range(n_iters):
-        assigned = base.withColumn("codes", _codes_udf(codebooks)(F.col("v")))
-        sub = F.slice(
-            F.col("v"), F.col("s") * subdim + 1, subdim
-        )  # 1-indexed slice of subspace s
-        means = (
-            assigned.select(
-                F.explode(F.array(*[F.lit(s) for s in range(n_sub)])).alias("s"),
-                "v",
-                "codes",
-            )
-            .select("s", F.get(F.col("codes"), F.col("s")).alias("code"), sub.alias("sub"))
-            .groupBy("s", "code")
-            .agg(*[F.avg(F.col("sub")[i]).alias(f"c{i}") for i in range(subdim)])
-            .collect()
+
+    def books(cb: dict) -> list:
+        return [[cb[s, j] for j in range(len(seeds))] for s in range(n_sub)]
+
+    def members(cb: dict) -> DataFrame:
+        assigned = base.withColumn("codes", _codes_udf(books(cb))(F.col("v")))
+        subspaces = F.explode(F.array(*[F.lit(s) for s in range(n_sub)]))
+        return assigned.select(subspaces.alias("s"), "v", "codes").select(
+            "s",
+            F.get(F.col("codes"), F.col("s")).alias("code"),
+            # 1-indexed slice of subspace s
+            F.slice(F.col("v"), F.col("s") * subdim + 1, subdim).alias("v"),
         )
-        new = {
-            (r["s"], r["code"]): [r[f"c{i}"] for i in range(subdim)] for r in means
-        }
-        codebooks = [
-            [new.get((s, j), codebooks[s][j]) for j in range(n_codes)]
-            for s in range(n_sub)
-        ]
-    return codebooks
+
+    # one shared seed set: every subspace starts from its slice of it
+    init = {(s, j): seed[s * subdim : (s + 1) * subdim] for s in range(n_sub) for j, seed in enumerate(seeds)}
+    return books(lloyd(members, init, n_iters))
 
 
 def encode_pq(emb: DataFrame, codebooks: list) -> DataFrame:
@@ -198,7 +179,10 @@ def pq_ann_topk(
     3. Top rerank·k candidates by approx score re-scored with exact
        cosine via a broadcast join on the candidate ids — the only
        touch of full vectors, O(rerank·k) rows.
-    Output schema matches ivf_ann_topk: (vec_id, label, cosine)."""
+    Output schema matches ivf_ann_topk: (vec_id, label, cosine).
+    A caller-supplied ``qv`` skips the check that ``query_vec_id``
+    exists in ``emb`` (an absent id otherwise yields the empty
+    frame), so the caller must make that check itself."""
     if codebooks is None:
         codebooks = train_pq_codebooks(emb, n_sub, n_codes, n_iters, sample_mod)
     spark = emb.sparkSession

@@ -54,7 +54,6 @@ from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import ivf
 from piholelongtermstats_spark.operators.similarity import _dot, _norm
-from piholelongtermstats_spark.operators.text import md5_hash60
 
 N_CLUSTERS = 16
 N_ITERS = 3
@@ -100,39 +99,11 @@ def train_spherical_centroids(
     n_iters: int = N_ITERS,
     sample_mod: int | None = None,
 ) -> list[list[float]]:
-    """Deterministic spherical k-means: seeds are the vectors with the
-    n_clusters smallest md5(vec_id) (same fixed pseudo-sample as
-    ivf.train_centroids); each iteration assigns by cosine and takes
-    the element-wise member mean as the new centroid direction
-    (assignment normalizes, so the mean need not be). Empty cells
-    keep their previous centroid. Driver traffic per iteration is
-    k×dim doubles — kilobytes."""
-    if sample_mod and sample_mod > 1:
-        emb = emb.filter(F.col("vec_id") % sample_mod == 0)
-    v = F.col("embedding").cast("array<double>")
-    seeds = (
-        emb.select("vec_id", v.alias("v"))
-        .orderBy(md5_hash60(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc())
-        .limit(n_clusters)
-        .collect()
-    )
-    if not seeds:
-        return []
-    dim = len(seeds[0]["v"])
-    centroids = [list(r["v"]) for r in seeds]
-    base = emb.select(v.alias("v"))
-    for _ in range(n_iters):
-        assigned = base.withColumn(
-            "cell", _spherical_assign_udf(centroids)(F.col("v"))
-        )
-        means = (
-            assigned.groupBy("cell")
-            .agg(*[F.avg(F.col("v")[i]).alias(f"c{i}") for i in range(dim)])
-            .collect()
-        )
-        new = {r["cell"]: [r[f"c{i}"] for i in range(dim)] for r in means}
-        centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
-    return centroids
+    """Deterministic spherical k-means: ivf.train_cells (the seeds of
+    ivf.train_centroids) assigning by cosine; the member mean is the
+    new centroid direction (assignment normalizes, so the mean need
+    not be)."""
+    return ivf.train_cells(emb, n_clusters, n_iters, sample_mod, _spherical_assign_udf)
 
 
 def semdedup_pairs(

@@ -113,10 +113,11 @@ def compute_stats(fact: DataFrame, timezone: str = "UTC") -> dict[str, Any]:
     """The reference's full stats dict (§2.11 contract).
 
     ``fact`` is the enriched fact table (sources/events.dns_fact or
-    functions/derive.preprocess output). Caches it for the multi-job
-    assembly and unpersists before returning.
+    functions/derive.preprocess output). The assembly runs many jobs
+    over it, so the caller persists it and owns its release
+    (api.run_dashboard does both); unpersisting here would drop the
+    caller's cache too, since Spark caches by plan.
     """
-    fact = fact.cache()
     stats: dict[str, Any] = {}
 
     # J1 — global scalars (stats.py:14-52, 441-455)
@@ -393,5 +394,4 @@ def compute_stats(fact: DataFrame, timezone: str = "UTC") -> dict[str, Any]:
             round(val, 2) if val is not None else 0.0
         )
 
-    fact.unpersist()
     return stats

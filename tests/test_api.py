@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
+
 from piholelongtermstats_spark.api import reload, run_dashboard
 
 SF = "/root/testdata/sf0.001"
@@ -39,6 +41,21 @@ def test_range_and_exclusion_parameters(spark):
     )
     assert excluded["stats"]["total_queries"] <= full["stats"]["total_queries"]
     excluded["fact"].unpersist()
+
+
+def test_dashboard_owns_the_fact_cache_until_reload(spark):
+    """run_dashboard persists the fact for the stats jobs, the plot
+    payloads and the rollup: it must still be cached when returned,
+    and reload must release it."""
+    first = run_dashboard(spark, SF, collect_plots=False)
+    assert first["fact"].storageLevel != StorageLevel.NONE
+    second = reload(
+        spark, first, parquet_dir=SF, start_date="2024-01-05",
+        end_date="2024-01-10", collect_plots=False,
+    )
+    assert first["fact"].storageLevel == StorageLevel.NONE
+    assert second["fact"].storageLevel != StorageLevel.NONE
+    second["fact"].unpersist()
 
 
 def test_build_corpus_surface(spark):

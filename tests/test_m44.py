@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 
 from piholelongtermstats_spark.operators import graph, timeagg
 from tests.conftest import make_fact
@@ -61,9 +62,10 @@ def _graph_fact(spark, edges):
 
 
 def _brute_kcore(edges, k):
-    """Sequential peel — any order (k-core is unique)."""
+    """Synchronous peel (the k-core is unique, so any order gives the
+    same core) → (core edges, rounds that removed something)."""
     es = set(edges)
-    while True:
+    for rounds in itertools.count():
         from collections import Counter
 
         dc = Counter(c for c, _ in es)
@@ -72,7 +74,7 @@ def _brute_kcore(edges, k):
             ("d", d) for d in dd if dd[d] < k
         }
         if not bad:
-            return es
+            return es, rounds
         es = {
             (c, d)
             for c, d in es
@@ -89,7 +91,7 @@ def test_kcore_matches_bruteforce(spark):
     ]
     fact = _graph_fact(spark, edges)
     r = graph.kcore_decomposition(fact, 2).collect()[0]
-    core = _brute_kcore(edges, 2)
+    core, _ = _brute_kcore(edges, 2)
     assert r.n_edges_core == len(core) == 4
     assert r.n_clients_core == len({c for c, _ in core}) == 2
     assert r.n_domains_core == len({d for _, d in core}) == 2
