@@ -47,7 +47,7 @@ sys.path.insert(0, REPO)
 # before any registry import so every dns_fact call routes through it.
 os.environ.setdefault("SPARK_GRAFT_USE_LAYOUT", "1")
 
-from piholelongtermstats_spark.plans import QUERIES  # noqa: E402
+from piholelongtermstats_spark.plans import META, QUERIES  # noqa: E402
 from piholelongtermstats_spark.plans.metrics import executed_plan_metrics  # noqa: E402
 from piholelongtermstats_spark.session import get_spark  # noqa: E402
 
@@ -57,85 +57,48 @@ N_TIMED_PASSES = 5
 # The suite grew 182 -> 209 s in one round purely by addition; this gate
 # makes a heavy new entry VISIBLE at landing time instead of three
 # artifacts later. Any query whose per-query min exceeds BUDGET_SEC at
-# sf >= 0.1 and is not on the waiver list below is reported in
+# sf >= 0.1 and is not budget-waived (below) is reported in
 # bench_metrics.json ("budget_violations") and counted on the stdout
 # line ("over_budget"). The gate never fails the bench — the driver
 # must always get its JSON line — it makes the violation diffable.
 BUDGET_SEC = 2.5
-# Waivers: queries that are over budget BY DESIGN, each with its OWN
-# ceiling (r10 ADVICE: an unconditional exemption would let a waived
-# query regress many-fold while the gate still reports clean) and the
-# reason the cost is inherent (all plan-audited spill-free; see
-# PLAN_AUDIT.md). Ceilings are ~1.5x the committed per-query min, so
-# host noise passes but a real regression (the setsim_scale_2x 4.94s
-# class) flags. name -> (ceiling_sec, reason).
-BUDGET_WAIVERS = {
-    "pagerank_top": (
-        6.0,
-        "ten real distributed power iterations; cost is the"
-        " iteration count, not a scale defect",
-    ),
-    "dedup_scale_2x": (
-        6.0,
-        "end-to-end LSH -> star-contraction -> survivors"
-        " over a deliberately DOUBLED corpus",
-    ),
-    "ngram_jaccard_capped": (
-        5.5,
-        "df_cap-bounded exact Jaccard; the ~900k-row"
-        " shingle shuffle is the operator's honest work",
-    ),
-    "basket_scale_2x": (
-        4.5,
-        "association rules over a deliberately doubled"
-        " basket volume (slope 1.98x at 8x, SCALING.md)",
-    ),
-    "trained_ann_recall_panel": (
-        4.5,
-        "five-leg composite audit - every"
-        " trained index family plus both exact-truth legs scans the"
-        " corpus once by design (~2.7s)",
-    ),
-    "dedup_clusters": (
-        4.0,
-        "the deliberately UNcached iterative label-propagation"
-        " differential baseline (registry_m7._star_clusters keeps the"
-        " shared star-contraction variant; this one recomputes its"
-        " iterations from the pairs cache every call by design)",
-    ),
-}
+# Waivers: queries that are over budget BY DESIGN declare their OWN
+# ceiling and the reason the cost is inherent at their registration
+# site, register(budget=(ceiling_sec, reason)) (r10 ADVICE: an
+# unconditional exemption would let a waived query regress many-fold
+# while the gate still reports clean). Ceilings are ~1.5x the committed
+# per-query min, so host noise passes but a real regression (the
+# setsim_scale_2x 4.94s class) flags.
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    spark = get_spark("phlts-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def time_queries(spark, sf_dir: str, names: list) -> dict:
+    """Time `names` with the bench methodology and return the per-query
+    record: an UNTIMED warm pass, then N_TIMED_PASSES timed passes of
+    plan construction + collect, keeping each query's minimum.
 
-    # ---- UNTIMED warm pass -------------------------------------------------
-    # Materializes the partitioned layout, every shared persisted
-    # input (plans/cache.py), the quantizer/probe memos, and JVM/
-    # codegen state — the load-then-serve model: the reference likewise
-    # preprocesses its resident frame before answering anything
-    # (process.py:100-113). Also a correctness smoke: a query that
-    # throws fails the bench HERE, not mid-timing.
+    The warm pass materializes the partitioned layout, every shared
+    persisted input (plans/cache.py), the quantizer/probe memos, and
+    JVM/codegen state — the load-then-serve model: the reference
+    likewise preprocesses its resident frame before answering anything
+    (process.py:100-113). Also a correctness smoke: a query that throws
+    fails HERE, not mid-timing.
+    """
     if os.environ.get("SPARK_GRAFT_USE_LAYOUT", "").lower() in ("1", "true", "auto"):
         from piholelongtermstats_spark.sources.layout import ensure_layout
 
         ensure_layout(spark, sf_dir)
-    for name, fn in QUERIES.items():
-        fn(spark, sf_dir).collect()
+    for name in names:
+        QUERIES[name](spark, sf_dir).collect()
 
-    # ---- timed passes ------------------------------------------------------
     timings: dict[str, float] = {}
     build_sec: dict[str, float] = {}
     exec_sec: dict[str, float] = {}
     plan_metrics: dict[str, dict] = {}
     pass_sec: dict[str, list] = {}
     for rnd in range(N_TIMED_PASSES):
-        for name, fn in QUERIES.items():
+        for name in names:
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
+            df = QUERIES[name](spark, sf_dir)
             t1 = time.perf_counter()
             df.collect()
             t2 = time.perf_counter()
@@ -155,8 +118,25 @@ def main() -> None:
                     # A py4j/plan-shape regression must be visible, not
                     # read downstream as "zero-shuffle plan".
                     plan_metrics[name] = {"err": repr(e)[:200]}
+    return {
+        "timings_sec": timings,
+        "build_sec": build_sec,
+        "exec_sec": exec_sec,
+        "pass_sec": pass_sec,
+        "query_metrics": plan_metrics,
+    }
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    spark = get_spark("phlts-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    rec = time_queries(spark, sf_dir, list(QUERIES))
+    timings, pass_sec = rec["timings_sec"], rec["pass_sec"]
     total = round(sum(timings.values()), 4)
-    exec_total = round(sum(exec_sec.values()), 4)
+    exec_total = round(sum(rec["exec_sec"].values()), 4)
 
     # Noise summary: per-query median/min ratio plus suite aggregates.
     # The suite total is a sum of MINs; "median_total" is what a
@@ -192,11 +172,12 @@ def main() -> None:
     # Budget gate: evaluated on the per-query MIN (the same number the
     # round-over-round diff reads) so host noise can't flag a query.
     # A waived query is still gated — against its own ceiling.
+    waivers = {n: m.budget for n, m in META.items() if m.budget}
     budget_violations = (
         {
             k: v
             for k, v in sorted(timings.items(), key=lambda kv: -kv[1])
-            if v > BUDGET_WAIVERS.get(k, (BUDGET_SEC,))[0]
+            if v > waivers.get(k, (BUDGET_SEC,))[0]
         }
         if sf >= 0.1
         else {}
@@ -223,17 +204,17 @@ def main() -> None:
                 "sf": sf,
                 "n_timed_passes": N_TIMED_PASSES,
                 "timings_sec": timings,
-                "build_sec": build_sec,
-                "exec_sec": exec_sec,
+                "build_sec": rec["build_sec"],
+                "exec_sec": rec["exec_sec"],
                 "pass_sec": pass_sec,
                 "noise": noise,
                 "budget_sec": BUDGET_SEC,
                 "budget_violations": budget_violations,
                 "budget_waivers": {
                     k: {"ceiling_sec": c, "reason": r}
-                    for k, (c, r) in sorted(BUDGET_WAIVERS.items())
+                    for k, (c, r) in sorted(waivers.items())
                 },
-                "query_metrics": plan_metrics,
+                "query_metrics": rec["query_metrics"],
             },
             f,
             indent=1,

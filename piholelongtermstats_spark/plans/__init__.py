@@ -1,17 +1,16 @@
-"""Aggregated query registry (core + the M7–M34 wave modules + fused
-panels).
+"""Aggregated query registry: every registry module's queries, in
+driver order.
 
-Importing the wave modules below registers every query; the public
-``QUERIES`` / ``ORACLE`` dicts are then re-ordered so the curated
-TOP-50 list comes first, in its listed order.
+Importing the modules below registers every query; the public
+``QUERIES`` / ``ORACLE`` / ``META`` dicts are then re-ordered so the
+curated TOP-50 list comes first, in its listed order.
 
 Why exactly 50: the driver's correctness gate verifies only the FIRST
-50 ``queries()`` entries — CORRECTNESS_r01 and CORRECTNESS_r02 both
-contain exactly 50 rows, cut mid-registry in dict insertion order.
-Everything after #50 runs in bench and in the local oracle-parity
-suite (tests/test_oracle_parity.py executes the IDENTICAL
-Spark-vs-DuckDB comparison over ALL registered queries), but gets no
-driver row — so the top 50 is curated, not accidental:
+50 ``queries()`` entries, cut in dict insertion order. Everything after
+#50 runs in bench and in the local oracle-parity suite
+(tests/test_oracle_parity.py executes the IDENTICAL Spark-vs-DuckDB
+comparison over ALL registered queries), but gets no driver row — so
+the top 50 is curated, not accidental:
 
 - every reference-parity operator (the PiHole dashboard surface),
 - the TPC-H-shaped join suite,
@@ -21,75 +20,78 @@ driver row — so the top 50 is curated, not accidental:
   over their differential baselines — same oracle, same result, the
   baseline stays pytest-verified below the line.
 
-Below-the-line order: previously-green queries first (if the cap is
-ever raised they regain rows immediately), rows-only entries last
-(their driver row is the weakest signal).
+Below the line the order is derived, not kept by hand: oracle-checked
+entries in registration order, then rows-only entries in registration
+order (their driver row is the weakest signal).
 """
 
-from piholelongtermstats_spark.plans import registry_m7  # noqa: F401  (registers M7 queries)
-from piholelongtermstats_spark.plans import registry_m8  # noqa: F401  (registers M8 queries)
-from piholelongtermstats_spark.plans import registry_m9  # noqa: F401  (registers M9 queries)
-from piholelongtermstats_spark.plans import registry_m10  # noqa: F401  (registers M10 queries)
-from piholelongtermstats_spark.plans import registry_m11  # noqa: F401  (registers M11 queries)
-from piholelongtermstats_spark.plans import registry_m12  # noqa: F401  (registers M12 queries)
-from piholelongtermstats_spark.plans import registry_m13  # noqa: F401  (registers M13 queries)
-from piholelongtermstats_spark.plans import registry_m14  # noqa: F401  (registers M14 queries)
-from piholelongtermstats_spark.plans import registry_m15  # noqa: F401  (registers M15 queries)
-from piholelongtermstats_spark.plans import registry_m16  # noqa: F401  (registers M16 queries)
-from piholelongtermstats_spark.plans import registry_m17  # noqa: F401  (registers M17 queries)
-from piholelongtermstats_spark.plans import registry_m18  # noqa: F401  (registers M18 queries)
-from piholelongtermstats_spark.plans import registry_m19  # noqa: F401  (registers M19 queries)
-from piholelongtermstats_spark.plans import registry_m20  # noqa: F401  (registers M20 queries)
-from piholelongtermstats_spark.plans import registry_m21  # noqa: F401  (registers M21 queries)
-from piholelongtermstats_spark.plans import registry_m22  # noqa: F401  (registers M22 queries)
-from piholelongtermstats_spark.plans import registry_m23  # noqa: F401  (registers M23 queries)
-from piholelongtermstats_spark.plans import registry_m24  # noqa: F401  (registers M24 queries)
-from piholelongtermstats_spark.plans import registry_m25  # noqa: F401  (registers M25 queries)
-from piholelongtermstats_spark.plans import registry_m26  # noqa: F401  (registers M26 queries)
-from piholelongtermstats_spark.plans import registry_m27  # noqa: F401  (registers M27 queries)
-from piholelongtermstats_spark.plans import registry_m28  # noqa: F401  (registers M28 queries)
-from piholelongtermstats_spark.plans import registry_m29  # noqa: F401  (registers M29 queries)
-from piholelongtermstats_spark.plans import registry_m30  # noqa: F401  (registers M30 queries)
-from piholelongtermstats_spark.plans import registry_m31  # noqa: F401  (registers M31 queries)
-from piholelongtermstats_spark.plans import registry_m32  # noqa: F401  (registers M32 queries)
-from piholelongtermstats_spark.plans import registry_m33  # noqa: F401  (registers M33 queries)
-from piholelongtermstats_spark.plans import registry_m34  # noqa: F401  (registers M34 queries)
-from piholelongtermstats_spark.plans import registry_m35  # noqa: F401  (registers M35 queries)
-from piholelongtermstats_spark.plans import registry_m36  # noqa: F401  (registers M36 queries)
-from piholelongtermstats_spark.plans import registry_m37  # noqa: F401  (registers M37 queries)
-from piholelongtermstats_spark.plans import registry_m38  # noqa: F401  (registers M38 queries)
-from piholelongtermstats_spark.plans import registry_m39  # noqa: F401  (registers M39 queries)
-from piholelongtermstats_spark.plans import registry_m40  # noqa: F401  (registers M40 queries)
-from piholelongtermstats_spark.plans import registry_m41  # noqa: F401  (registers M41 queries)
-from piholelongtermstats_spark.plans import registry_m42  # noqa: F401  (registers M42 queries)
-from piholelongtermstats_spark.plans import registry_m43  # noqa: F401  (registers M43 queries)
-from piholelongtermstats_spark.plans import registry_m44  # noqa: F401  (registers M44 queries)
-from piholelongtermstats_spark.plans import registry_m45  # noqa: F401  (registers M45 queries)
-from piholelongtermstats_spark.plans import registry_m46  # noqa: F401  (registers M46 queries)
-from piholelongtermstats_spark.plans import registry_m47  # noqa: F401  (registers M47 queries)
-from piholelongtermstats_spark.plans import registry_m48  # noqa: F401  (registers M48 queries)
-from piholelongtermstats_spark.plans import registry_m49  # noqa: F401  (registers M49 queries)
-from piholelongtermstats_spark.plans import registry_m50  # noqa: F401  (registers M50 queries)
-from piholelongtermstats_spark.plans import registry_m51  # noqa: F401  (registers M51 queries)
-from piholelongtermstats_spark.plans import registry_m52  # noqa: F401  (registers M52 queries)
-from piholelongtermstats_spark.plans import registry_m53  # noqa: F401  (registers M53 queries)
-from piholelongtermstats_spark.plans import registry_m54  # noqa: F401  (registers M54 queries)
-from piholelongtermstats_spark.plans import registry_m55  # noqa: F401  (registers M55 queries)
-from piholelongtermstats_spark.plans import registry_m56  # noqa: F401  (registers M56 queries)
-from piholelongtermstats_spark.plans import registry_m57  # noqa: F401  (registers M57 queries)
-from piholelongtermstats_spark.plans import registry_m58  # noqa: F401  (registers M58 queries)
-from piholelongtermstats_spark.plans import registry_m59  # noqa: F401  (registers M59 queries)
-from piholelongtermstats_spark.plans import registry_m60  # noqa: F401  (registers M60 queries)
-from piholelongtermstats_spark.plans import registry_m61  # noqa: F401  (registers M61 queries)
-from piholelongtermstats_spark.plans import registry_m62  # noqa: F401  (registers M62 queries)
-from piholelongtermstats_spark.plans import registry_m63  # noqa: F401  (registers M63 queries)
-from piholelongtermstats_spark.plans import registry_m64  # noqa: F401  (registers M64 queries)
-from piholelongtermstats_spark.plans import registry_m65  # noqa: F401  (registers M65 queries)
-from piholelongtermstats_spark.plans import registry_m66  # noqa: F401  (registers M66 queries)
-from piholelongtermstats_spark.plans import registry_m67  # noqa: F401  (registers M67 queries)
-from piholelongtermstats_spark.plans import registry_m68  # noqa: F401  (registers M68 queries)
-from piholelongtermstats_spark.plans import registry_panels  # noqa: F401  (fused panels)
-from piholelongtermstats_spark.plans.registry import ORACLE, QUERIES  # noqa: F401
+# Each import registers its module's queries.
+from piholelongtermstats_spark.plans import (  # noqa: F401
+    registry_m7,
+    registry_m8,
+    registry_m9,
+    registry_m10,
+    registry_m11,
+    registry_m12,
+    registry_m13,
+    registry_m14,
+    registry_m15,
+    registry_m16,
+    registry_m17,
+    registry_m18,
+    registry_m19,
+    registry_m20,
+    registry_m21,
+    registry_m22,
+    registry_m23,
+    registry_m24,
+    registry_m25,
+    registry_m26,
+    registry_m27,
+    registry_m28,
+    registry_m29,
+    registry_m30,
+    registry_m31,
+    registry_m32,
+    registry_m33,
+    registry_m34,
+    registry_m35,
+    registry_m36,
+    registry_m37,
+    registry_m38,
+    registry_m39,
+    registry_m40,
+    registry_m41,
+    registry_m42,
+    registry_m43,
+    registry_m44,
+    registry_m45,
+    registry_m46,
+    registry_m47,
+    registry_m48,
+    registry_m49,
+    registry_m50,
+    registry_m51,
+    registry_m52,
+    registry_m53,
+    registry_m54,
+    registry_m55,
+    registry_m56,
+    registry_m57,
+    registry_m58,
+    registry_m59,
+    registry_m60,
+    registry_m61,
+    registry_m62,
+    registry_m63,
+    registry_m64,
+    registry_m65,
+    registry_m66,
+    registry_m67,
+    registry_m68,
+    registry_panels,
+)
+from piholelongtermstats_spark.plans.registry import META, ORACLE, QUERIES  # noqa: F401
 
 TOP_50 = [
     # --- reference dashboard parity (stats card, top-K families,
@@ -106,20 +108,6 @@ TOP_50 = [
     "session_summary",
     "client_running_zscore",
     # --- beyond-reference scale operators ---
-    # r12 rotation (r11 VERDICT #4 — oldest-never-hashed first; only
-    # 115 of 304 registry queries had ever carried a driver hash):
-    # binary_quant_ann takes salted_top_domains' slot (top-K keeps
-    # top_domain_top_client + top_clients_stacked driver rows, and
-    # salted shares top_domains' byte-identical oracle in parity);
-    # gaps_scale_2x takes pii_scrub_panel's (the W2 consecutive-gap
-    # doubling proof gets its first driver hash, as streaks_scale_2x
-    # did in r6; the text family keeps text_panel's driver row);
-    # span_dedup takes winnowing_fingerprints' (same fingerprint
-    # family, winnowing driver-green r7-r11, span never hashed);
-    # stratified_sample takes incremental_dedup_ingest's (driver-green
-    # r7-r11; dedup keeps dedup_scale_2x + ngram_jaccard_capped +
-    # semantic_dedup_trained rows — and the stratified leg of
-    # sampling_panel gets its own first-class hash).
     "binary_quant_ann",
     "asof_rollup_enrich",
     "range_join_blocked_windows",
@@ -134,56 +122,20 @@ TOP_50 = [
     "ngram_jaccard_capped",
     "funnel_conversion",
     "text_panel",
-    # r12 (M67) same-round graduation: the COMPRESSED video tier
-    # takes the uncompressed AVI panel's slot — mjpeg_frames_audit
-    # runs the same RIFF container walk PLUS a full baseline-JPEG
-    # entropy/DCT decode per frame with per-frame hashed promises,
-    # strictly more surface than the '00db' DIB path; avi_decode_panel
-    # stays parity-green below (r11 note for its own landing kept in
-    # git history).
     "mjpeg_frames_audit",
-    # r12 same-round rotation of this round's own graduations (the
-    # r11 protocol — new hash-green entries get their driver row the
-    # round they land): fd_spectrum_audit takes heavy_hitters_exact's
-    # slot (driver-green r7-r11; the exact/sketch audit family keeps
-    # hll_distinct_audit + quantile_sketch_eval driver rows), and
-    # png_decode_panel takes wav_decode_panel's (media keeps the BMP
-    # and AVI decode driver rows; the PNG row is strictly stronger —
-    # deflate + five scanline filters vs the WAV container walk; WAV
-    # stays parity-green below the line).
     "fd_spectrum_audit",
     "stratified_sample",
-    # r12 (M66) same-round graduation: the REAL baseline JPEG codec's
-    # contract audit takes bmp_decode_panel's slot — the strongest
-    # media row yet (canonical Huffman + DCT + EXTEND entropy decode
-    # vs BMP's header walk; a codec bug breaks the hashed promise
-    # bits). Media keeps png_decode_panel + avi_decode_panel driver
-    # rows; BMP stays parity-green below (its byte-level parse is a
-    # strict subset of what PNG+JPEG exercise).
     "jpeg_decode_audit",
     "corpus_build",
-    # r12 (M68) same-round graduation: FLAC takes png_decode_panel's
-    # slot so the three media driver rows carry the strongest codec
-    # per MODALITY — audio (FLAC: rice + fixed-LPC + CRC-8/16/MD5),
-    # image (JPEG: DCT + canonical Huffman), video (MJPEG: container
-    # + per-frame codec). PNG stays parity-green below — its inflate/
-    # un-filter surface overlaps what JPEG+FLAC exercise (entropy
-    # decode, per-row reconstruction) while FLAC's does not overlap
-    # anything else in the window.
     "flac_decode_panel",
     "bootstrap_daily_mean_ci",
     "bloom_contamination",
     "dedup_scale_2x",
-    # --- r10 rotation (r9 VERDICT #1): M54–M57 representatives ---
+    # --- one representative per later oracle-checked wave ---
     "hll_distinct_audit",
     "scd2_pit_enrich",
     "dp_noised_daily_counts",
     "quality_lift_table",
-    # --- r11 rotation (r10 VERDICT #1): the eight oracle-green
-    # entries that had never been driver-hashed — M59–M62
-    # representatives plus the r10 pagerank graduation. Local parity
-    # green is not driver green (the r8 welch incident); every wave
-    # gets its driver row the round after it lands. ---
     "weekday_anova_reply",
     "kruskal_wallis_weekday",
     "weekday_status_cramers_v",
@@ -192,406 +144,28 @@ TOP_50 = [
     "topk_domain_stability",
     "domain_tail_hill",
     "pagerank_top",
-    # --- r11 same-round rotation of this round's own graduations:
-    # these went oracle-green THIS round and would otherwise wait a
-    # full round driver-unseen (the r8 gap class). Representatives:
-    # semantic_dedup_trained takes semantic_dedup's slot (same
-    # machinery + the trained path; the fixed twin stays parity-green
-    # below), ivf_ann_topk_trained takes ann_scale_2x's (the trained
-    # recall panel beside it VALUE-audits all four trained families),
-    # quantile_sketch_eval takes levene_day_night's (the day/night
-    # two-sample family handed duty to the anova/kruskal/effect trio
-    # above), dsir_logweights takes gopher_quality_panel's (the
-    # gopher gate rides inside quality_lift_table's label leg and
-    # corpus_build), ppl_bucket_split takes top_unshipped_orders'
-    # (the TPC-H join suite keeps three driver rows). ---
     "semantic_dedup_trained",
     "ivf_ann_topk_trained",
     "quantile_sketch_eval",
     "dsir_logweights",
     "ppl_bucket_split",
-    # r10 (r9 VERDICT #4): the trained-index recall audit. Was the one
-    # deliberately rows-only TOP_50 row; ORACLE-CHECKED since r11 via
-    # the unrolled-Lloyd trainer replay (plans/oracle_train.py) — the
-    # driver's last no_oracle TOP_50 column goes green.
     "trained_ann_recall_panel",
-]
-
-# Below the line: previously-green queries first, then never-checked
-# extras, rows-only last. minhash_signatures and dedup_survivors were
-# demoted in r4 to give the newly oracle-checked IVF/PQ entries driver
-# rows (r3 VERDICT #4): signatures feed lsh_candidate_pairs (still
-# checked) and survivors are composed inside corpus_build (still
-# checked); both remain green in the local parity suite. r5 (r4
-# VERDICT #3): dedup_scale_2x and range_scan_pruned took driver rows
-# from top_domains (byte-identical output verified through
-# salted_top_domains — same oracle SQL, same 10 rows) and
-# hourly_histogram (the hour marginal of day_hour_heatmap_panel; A6
-# semantics stay parity-tested below the line). Late-r5 swaps:
-# semantic_dedup (new SemDeDup tier) displaced lsh_candidate_pairs
-# (its banding path stays verified inside dedup_clusters_star, which
-# consumes the same shared LSH-pair frame), and ann_scale_2x
-# displaced lsh_ann_topk (the scale proof runs the IDENTICAL bucketed
-# multiprobe path over a 2× corpus with the same oracle family —
-# strictly more evidence per slot). quality_classifier needs no slot:
-# its columns are fused into the checked text_panel row. ivfpq_ann_topk
-# (the composed index) displaced flat pq_ann_topk: its oracle replays
-# the identical ADC + exact-re-rank machinery — on residuals — plus
-# coarse routing and the probe cut; flat PQ stays parity-checked below.
-# Continued-r5 swap: knn_join (batched exact k-NN join) displaced
-# single-query cosine_topk — the batch runs the identical rounded-
-# cosine machinery for 8 query vectors (strictly more scored pairs
-# verified per slot) and adds the WindowGroupLimit rank-cut evidence;
-# cosine_topk stays parity-green below the line, and tests pin that
-# knn_join_ivf's all-probe limit reproduces knn_join verbatim.
-# Continued-r5 swaps (2): pii_scrub_panel took exact_dedup's row (the
-# hash-groupBy dedup shape stays exercised inside the checked dedup
-# tier and exact_dedup stays parity-green below the line; the PII
-# panel hash-audits 500 per-document redactions per slot), and
-# doc_chunks took simhash's row (the sketch is still consumed and
-# parity-verified by simhash_near_dup below the line; chunking is a
-# new operator family with a token-for-token md5 oracle).
-# Third swap: rollup_delta (incremental-maintenance identity hash-
-# verified against the full recompute, both legs pushed-down range
-# scans) took hour_spine_zerofill's row — the J3 spine zero-fill and
-# A13 re-aggregation stay driver-verified through
-# filtered_timeseries_client and client_activity, and
-# hour_spine_zerofill stays parity-green below the line.
-# r6 swap (r5 VERDICT #1): streaks_scale_2x — the W3 total-order
-# doubling proof, the repo's most load-bearing distributed-algorithm
-# claim (SURVEY §2.6) — took daily_avg_reply's row. The A15 per-date
-# avg shape stays driver-verified through daily_counts +
-# reply_time_stats' avg legs and daily_avg_reply stays parity-green
-# below the line.
-# r6 swap (2): gopher_quality_panel (the published Gopher heuristic
-# gate — a new data-selection family with an integer-exact keep
-# decision) took tfidf_top_terms' row; the tf-idf explode→partial-agg
-# shape stays driver-verified through bm25-adjacent machinery inside
-# contamination_overlap/corpus_build and tfidf_top_terms stays
-# parity-green below the line.
-# r7 swap (r6 VERDICT #1): semantic_contamination (benchmark
-# decontamination via the SemDeDup cell-bounded cosine path — a
-# first-class training-data concern) took rollup_delta's row; the
-# A12/A13 incremental-maintenance shapes stay driver-verified through
-# hourly_rollup, client_activity, and daily_counts, and rollup_delta
-# stays parity-green below the line.
-# r7 swap (2): heavy_hitters_exact (two-pass Misra–Gries + exact
-# recount — the unbounded-key-cardinality aggregation family, new in
-# M13) took ivf_ann_topk's row. The IVF cell-routed ANN shape stays
-# driver-verified through ivfpq_ann_topk (ADC over the same pinned
-# IVF cells) and knn_join's family evidence; ivf_ann_topk stays
-# parity-green below the line with its trained twin.
-# r7 swap (4): waiting_suppliers (Q21 — the EXISTS/NOT-EXISTS pair
-# reformulated as ONE per-order aggregate, turning three fact-sized
-# shuffles into one; with M17 the registry carries all 22 TPC-H
-# shapes) took returned_item_customers' row. The Q10 join-agg-topK
-# shape stays driver-verified through top_unshipped_orders and
-# region_nation_revenue; returned_item_customers stays parity-green
-# below the line.
-# r7 swap (5): winnowing_fingerprints (MOSS winnowing — window-min
-# fingerprint selection with the rightmost-tie rule; the driver row
-# hash-verifies a published algorithm's output, and the local-copy-
-# detection family previously had no row) took contamination_overlap's
-# slot. Shingle-containment decontamination stays driver-verified
-# through bloom_contamination (same shingle machinery behind the Bloom
-# gate) and semantic_contamination; contamination_overlap stays
-# parity-green below the line.
-# r7 swap (3): incremental_dedup_ingest — the end-to-end ingest-dedup
-# pipeline (asymmetric batch-vs-corpus prefix-filter join with a
-# per-document accept/reject audit; the suite's most comprehensive
-# single plan, 14 exchanges) — took ivfpq_ann_topk's row. The ANN
-# tier keeps four driver rows (binary_quant_ann, ann_scale_2x,
-# embedding_near_dup, semantic_dedup) and IVFPQ keeps its trained
-# twin, the measured recall curve (tests/test_ivfpq.py), and
-# parity-green status below the line.
-# r7 swap (4): bloom_contamination — Bloom-filter decontamination
-# with BOTH sketch-error classes carried by real mass in the audit
-# row (n_flagged == n_exact_dup + n_false_pos; M15) — took
-# sampling_panel's row. Each of the panel's constituents keeps its
-# own oracle-checked entry below the line (stratified_sample,
-# hash_sample, mix_sample), so sampling evidence stays triple-covered
-# in parity while the slot verifies a new one-sided-error contract.
-# r8 swap (1): welch_day_night — the M23 inference tier's
-# representative (exact BIGINT/DECIMAL moments + one fixed IEEE
-# expression; the policy every M21-M23 statistic shares) — took
-# avg_gap_per_status's row. The stream-keyed consecutive-gap kernel
-# stays driver-verified through idle_gaps_top (same consecutive_gaps
-# decomposition, same boundary stitch) and avg_gap_per_status stays
-# parity-green below the line.
-# r8 swap (2): domain_cograph_triangles — the graph-census family's
-# first oracle-checked driver row (top-decile support cut + ordered
-# node-iterator triangle join; pagerank is rows-only by fp-policy) —
-# took binary_quant_ann's row. The ANN tier keeps three driver rows
-# (ann_scale_2x, embedding_near_dup, semantic_dedup) and binary
-# quantization keeps its integer-exact hamming differential
-# (tests) and parity-green status below the line.
-# r8 swap (3): mad_outlier_days — the M28 robust-anomaly family's
-# representative (integer-exact doubled-median/MAD gate, the
-# operational "which days are broken" audit) — took
-# client_domain_scatter's row. The J1/A14 multi-key count + semi-join
-# shape stays driver-verified through top_clients_stacked (same
-# operator file, same broadcast left-semi plan) and
-# client_domain_scatter stays parity-green below the line.
-# r8 swap (4): mmr_rerank — retrieval SERVING gets its first driver
-# row (the Carbonell–Goldstein diversity greedy as a pure catalyst
-# fold; the registry's retrieval rows were all index-side until now)
-# — took filtered_timeseries_client's row. The J3 spine zero-fill /
-# A13 rollup re-aggregation shapes stay driver-verified through
-# client_activity (the same per-client spine plan), and
-# filtered_timeseries_client stays parity-green below the line.
-# r9 swaps (r8 VERDICT #5): the repaired M36 inference entries get
-# driver rows now that the DECIMAL-output serialization fix landed.
-# mann_whitney_day_night took doc_chunks' row (the text family keeps
-# three driver rows — text_panel, pii_scrub_panel,
-# gopher_quality_panel — and chunking stays parity-green below the
-# line with its token-for-token md5 oracle). levene_day_night took
-# embedding_near_dup's row (the dedup family keeps five driver rows;
-# the LSH-bucketed embedding near-dup machinery stays driver-verified
-# through ann_scale_2x — the identical bucketed multiprobe path over
-# a 2× corpus — and semantic_dedup's cosine-threshold removal;
-# embedding_near_dup stays parity-green below the line). With these
-# the two-sample inference family (mean/rank/variance shift) is
-# driver-checked end to end.
-# r9 swaps (2): funnel_conversion — the ordered-sequence user-journey
-# family's FIRST DRIVER ROW (strictly-after chaining over the RAW
-# event stream; M11's funnel_counts carries the same anchor semantics
-# but sat below the line — tests pin stage-count equality between the
-# two, so the slot verifies both) — took dedup_clusters_star's row. Star contraction stays driver-verified
-# INSIDE dedup_scale_2x (which runs LSH → star contraction →
-# survivors end-to-end on the doubled corpus with zero-spill plan
-# assertions) and dedup_clusters_star stays parity-green below the
-# line. bootstrap_daily_mean_ci — the resampling-inference family's
-# representative (deterministic Poisson bootstrap; pinned inverse-CDF
-# thresholds; the uncertainty machinery every dashboard claim needs)
-# — took semantic_contamination's row. Decontamination keeps
-# bloom_contamination's driver row (the same shingle machinery behind
-# the Bloom gate) and the SemDeDup cell path keeps semantic_dedup's;
-# semantic_contamination stays parity-green below the line.
-# r9 swaps (3, late-round): kaplan_meier_clients — the SURVIVAL
-# family's first driver row (right-censored product-limit estimator,
-# the recursive-CTE fold twin) — took streaks_scale_2x's row. The W3
-# streak machinery keeps longest_streaks' driver row (the very same
-# stitched kernel; the 2× doubling proof stays parity-green below the
-# line with its zero-spill plan test still in pytest).
-# client_running_zscore — the PREQUENTIAL anomaly row (each day scored
-# against strictly-prior history; the batch twin of the streaming
-# Welford state processor, so one slot evidences both the causal
-# scoring semantics and the stream≡batch contract) — took
-# mad_outlier_days' row. The robust-anomaly family keeps its evidence
-# through seasonal_adjusted_outliers' MAD gate arithmetic inside the
-# parity suite and robust_scale_2x's doubling differential;
-# mad_outlier_days stays parity-green below the line.
-# r10 rotation (r9 VERDICT #1): the four newest waves (M54–M57) had
-# never been hashed by the driver — local parity green is not driver
-# green (the r8 welch incident). Promoted: hll_distinct_audit (the
-# fully register-replayed HLL sketch), scd2_pit_enrich (point-in-time
-# SCD2 containment join), dp_noised_daily_counts (ε-DP Laplace release
-# audit), wav_decode_panel (real binary audio decode, synthesis-replay
-# oracle), quality_lift_table (decile lift/calibration eval). Retired
-# to parity (all green since round 1, every operator family keeps a
-# driver row): most_persistent_client (A4 — 2-key counts + global
-# top-1 stay driver-checked through top_clients_stacked and
-# top_domain_top_client), most_diverse_client (A9 — per-group distinct
-# via uniques' exact COUNT DISTINCT + top-1 via top_clients_per_status),
-# daily_counts (A5 — per-date grain stays through hourly_rollup's
-# finer rollup and client_activity's zero-filled spine), weekday_avg
-# (A7 — the weekday×hour grain plus avg legs stay through
-# day_hour_heatmap_panel and reply_time_stats), slowest_domains (A11 —
-# per-key avg with pinned NULL ordering stays through reply_time_stats
-# and the topk family). All five stay parity-green below the line.
-_OVERFLOW = [
-    # r12 rotation retirees (rationales at the TOP_50 comments; all
-    # stay parity-green here, every family keeps a driver row):
-    "salted_top_domains",
-    "pii_scrub_panel",
-    "winnowing_fingerprints",
-    "incremental_dedup_ingest",
-    "heavy_hitters_exact",
-    "wav_decode_panel",
-    "bmp_decode_panel",
-    "avi_decode_panel",
-    "png_decode_panel",
-    # r11 same-round-rotation retirees (all green since their landing
-    # round; each family keeps a driver row — rationale at the TOP_50
-    # rotation comment): semantic_dedup, ann_scale_2x,
-    # levene_day_night, gopher_quality_panel, top_unshipped_orders.
-    "semantic_dedup",
-    "ann_scale_2x",
-    "levene_day_night",
-    "gopher_quality_panel",
-    "top_unshipped_orders",
-    # r11 retirees (r10 VERDICT #1): the longest-green reference rows,
-    # every one driver-hashed green for 9-10 consecutive rounds;
-    # each operator family keeps at least one driver row.
-    # status_counts / day_night_counts (A1/P7 — the day/night grain
-    # goes driver-checked through the incoming day_night_effect_panel,
-    # conditional counts through funnel_conversion + source_pipeline);
-    # uniques (A8 — exact COUNT DISTINCT stays driver-checked as
-    # hll_distinct_audit's n_exact leg); top_clients (A2 —
-    # value_counts keeps top_clients_stacked's driver row);
-    # hourly_rollup (A12 — the rollup grain stays through
-    # day_hour_heatmap_panel, re-aggregation through client_activity);
-    # reply_time_stats (A10 — min/max/avg reply legs ride inside the
-    # incoming weekday_anova_reply's per-group moment sums);
-    # welch_day_night / mann_whitney_day_night (the two-sample family
-    # hands driver duty to the incoming weekday_anova_reply /
-    # kruskal_wallis_weekday / day_night_effect_panel trio — same
-    # moment and rank machinery, k-group generalisations).
-    "status_counts",
-    "day_night_counts",
-    "uniques",
-    "top_clients",
-    "hourly_rollup",
-    "reply_time_stats",
-    "welch_day_night",
-    "mann_whitney_day_night",
-    "top_clients_per_status",
-    "most_persistent_client",
-    "most_diverse_client",
-    "daily_counts",
-    "weekday_avg",
-    "slowest_domains",
-    "streaks_scale_2x",
-    "mad_outlier_days",
-    "doc_chunks",
-    "embedding_near_dup",
-    "dedup_clusters_star",
-    "semantic_contamination",
-    "client_domain_scatter",
-    "filtered_timeseries_client",
-    "avg_gap_per_status",
-    "sampling_panel",
-    "ivfpq_ann_topk",
-    "ivf_ann_topk",
-    "rollup_delta",
-    "daily_avg_reply",
-    "tfidf_top_terms",
-    "hour_spine_zerofill",
-    "exact_dedup",
-    "simhash",
-    "cosine_topk",
-    "top_domains",
-    "hourly_histogram",
-    "lsh_candidate_pairs",
-    "lsh_ann_topk",
-    "pq_ann_topk",
-    "minhash_signatures",
-    "dedup_survivors",
-    "day_hour_heatmap",
-    "day_hour_heatmap_blocked",
-    "range_scan",
-    "union_all_sources",
-    "regex_exclusion",
-    "client_sessions",
-    "activity_rollup_hierarchy",
-    "ngram_jaccard_pairs",
-    "dedup_clusters",
-    "text_stats",
-    "token_count_bpe",
-    "lang_id",
-    "doc_fingerprint",
-    "media_byte_stats",
-    "media_resize_check",
-    "media_frames_check",
-    "hash_sample",
-    "mix_sample",
-    "corpus_delta",
-    "doc_repetition",
-    "sessions_scale_2x",
-    "pricing_scale_2x",
-    "scd2_history_n",
-    "dsir_bucket_counts",
-    "jsonl_ingest_check",
-    "bucketed_join_revenue",
-    "pack_manifest",
-    "conversion_attribution",
-    "gopher_repetition_panel",
-    "c4_rules_panel",
-    "bpe_pair_counts",
-    "order_priority_counts",
-    "supplier_part_counts",
-    "embedding_random_projection",
-    "rolling_active_clients",
-    "merge_upsert_audit",
-    "rp_prefilter_topk",
-    "scalar_quantize_audit",
-    "bpe_encode_vocab",
-    "kanon_domain_daily",
-    "inverted_postings_audit",
-    # r7 swap (3): binary_quant_ann (sign-bit codes, integer-exact
-    # hamming candidate cut, house rerank) took knn_join's row —
-    # test_binquant pins that binary_quant_ann with the candidate
-    # budget opened to the whole corpus reproduces knn_join row for
-    # row, so the slot now verifies the exact-knn machinery PLUS the
-    # packing and the integer cut; knn_join stays parity-green here.
-    "knn_join",
-    # r7 M14: TPC-H completion wave + LM counts
-    "product_profit_by_nation",
-    "late_shipment_priority",
-    "promo_revenue_share",
-    "top_revenue_supplier",
-    "large_volume_customers",
-    "brand_disjunction_revenue",
-    "inactive_customer_balance",
-    "lm_bigram_topk",
-    # M47 — survival / changepoint / inequality (all oracle-checked;
-    # kaplan_meier_clients holds a TOP_50 row)
-    "pettitt_changepoint",
-    "client_gini",
-    # M48 — prequential anomaly / diversity / governance (all oracle;
-    # client_running_zscore holds a TOP_50 row)
-    "renyi2_entropy_daily",
-    "l_diversity_audit",
-    # M49 — seasonal forecasting + robust center (all oracle)
-    "holt_winters_daily",
-    "trimmed_mean_reply_daily",
-    # M50 — portmanteau / survival doubling / ORC interchange (all oracle)
-    "ljung_box_daily",
-    "survival_scale_2x",
-    "orc_ingest_check",
-    # M51 — truncation eval / rank concordance (all oracle)
-    "matryoshka_recall_eval",
-    "kendall_tau_volume_reply",
-    # M52 — seasonality-robust trend / composition drift (all oracle)
-    "seasonal_mann_kendall",
-    "blocked_rate_trend",
-    # M53–M57 representatives hold TOP_50 rows since r10; the
-    # remaining oracle-checked siblings stay parity-green here.
-    "interchange_consistency_panel",
-    "weekend_adjusted_trend",
-    "zscore_scale_2x",
-    # (pagerank_top graduated r10, promoted to TOP_50 in r11)
-    # r11 graduations: the whole trained-quantizer tier left the
-    # rows-only tier via the unrolled-Lloyd oracle replay
-    # (plans/oracle_train.py) — pq here (ivf took a TOP_50 row; the
-    # rest are covered by the in-TOP_50 recall panel and stay
-    # parity-green in registration order below).
-    "pq_ann_topk_trained",
-    # r11 graduations (the ln-grid protocol): lm_doc_logprob here
-    # (dsir_logweights and ppl_bucket_split took TOP_50 rows).
-    "lm_doc_logprob",
-    # rows-only by design: sketch VALUES aren't portable SQL (their
-    # accuracy contracts are hash-checked by hll_distinct_audit /
-    # quantile_sketch_eval), media decode is environment-stubbed.
-    "uniques_approx",
-    "reply_time_quantiles",
-    "media_features",
-    "media_resize",
-    "media_frames",
-    "rolling_active_approx",
 ]
 
 
 def _reorder() -> None:
     assert len(TOP_50) == 50, len(TOP_50)
-    ordered = TOP_50 + _OVERFLOW
-    dups = [n for n in set(ordered) if ordered.count(n) > 1]
+    dups = [n for n in set(TOP_50) if TOP_50.count(n) > 1]
     assert not dups, f"duplicate ordered names: {dups}"
-    missing = [n for n in ordered if n not in QUERIES]
+    missing = [n for n in TOP_50 if n not in QUERIES]
     assert not missing, f"ordered names not registered: {missing}"
-    unlisted = [n for n in QUERIES if n not in set(TOP_50) | set(_OVERFLOW)]
-    order = TOP_50 + _OVERFLOW + unlisted  # new queries land below the line
-    for d in (QUERIES, ORACLE):
+    rest = [n for n in QUERIES if n not in set(TOP_50)]
+    order = (
+        TOP_50
+        + [n for n in rest if n in ORACLE]
+        + [n for n in rest if n not in ORACLE]
+    )
+    for d in (QUERIES, ORACLE, META):
         snapshot = dict(d)
         d.clear()
         for name in order:

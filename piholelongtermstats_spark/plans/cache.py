@@ -48,10 +48,8 @@ def shared_input(
 # pays ~0.1-0.25 s of extra tiny-stage scheduling (32 tasks for
 # kilobyte stages: corpus_build +0.21, pack_manifest +0.22,
 # exact_dedup +0.26, …). A partial fan keeps most of the parallel win
-# at a quarter of the scheduling tax; env-tunable for other hosts.
-import os as _os
-
-_DOC_FAN = int(_os.environ.get("SPARK_GRAFT_DOC_FAN", "8"))
+# at a quarter of the scheduling tax.
+_DOC_FAN = 8
 
 
 def fan_degenerate(
@@ -82,18 +80,14 @@ def shared_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from piholelongtermstats_spark.sources.parquet import load_table
 
-    fan = min(spark.sparkContext.defaultParallelism, _DOC_FAN)
-
-    def build() -> DataFrame:
-        df = load_table(spark, sf_dir, "documents")
-        # Conditional: only degenerate layouts (fewer source splits
-        # than the fan target) are reshuffled — a well-partitioned
-        # production table passes through untouched.
-        if df.rdd.getNumPartitions() < fan:
-            df = df.repartition(fan, "doc_id")
-        return df
-
-    return shared_input(spark, "documents", sf_dir, build)
+    return shared_input(
+        spark,
+        "documents",
+        sf_dir,
+        lambda: fan_degenerate(
+            spark, load_table(spark, sf_dir, "documents"), "doc_id"
+        ),
+    )
 
 
 def shared_emb(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,7 +13,7 @@ cost on the executors and runs outside any timed region in bench.py.
 
 from __future__ import annotations
 
-from typing import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -23,27 +23,39 @@ from pyspark.sql import DataFrame
 _KEYS = ("shuffleBytesWritten", "shuffleRecordsWritten", "spillSize")
 
 
-def _walk(node) -> Iterator:
+def _walk(node, prune: Callable | None = None) -> Iterator:
     """Yield every physical node, descending through AQE wrappers.
 
     AdaptiveSparkPlanExec hides the final (re-planned) tree behind
     .executedPlan(); ShuffleQueryStageExec / BroadcastQueryStageExec
     hide their materialized subtree behind .plan(). Plain children()
     misses both, which is exactly where the shuffle metrics live.
+    A node for which ``prune(node)`` is true is yielded but not
+    descended into. This is the one plan walker: every plan census
+    (scripts/query.py) filters its output.
     """
     yield node
+    if prune is not None and prune(node):
+        return
     if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         # Final plan after AQE re-optimization; its subtree contains
         # the query stages that actually ran.
-        yield from _walk(node.executedPlan())
+        yield from _walk(node.executedPlan(), prune)
         return
     ch = node.children()
     for i in range(ch.size()):
-        yield from _walk(ch.apply(i))
+        yield from _walk(ch.apply(i), prune)
     try:
-        yield from _walk(node.plan())  # query-stage wrappers
+        yield from _walk(node.plan(), prune)  # query-stage wrappers
     except Exception:  # most nodes have no .plan()
         pass
+
+
+def _leaves(node) -> Iterator:
+    """The nodes of _walk(node) that have no children."""
+    for n in _walk(node):
+        if n.children().size() == 0:
+            yield n
 
 
 # Physical nodes that provably bound the row count of everything above
@@ -119,26 +131,6 @@ def _walk_through_caches(node) -> Iterator:
                 yield from _walk_through_caches(n.relation().cachedPlan())
             except Exception:
                 pass
-
-
-# Funnels that are bounded by an operator CONTRACT the plan cannot
-# express — the BUDGET_WAIVERS pattern (bench.py): every entry names
-# the query, the funnel it waives, and why the input is counts-sized
-# anyway. The plan-gate (scripts/plan_audit.py, tests/test_plan_gate.py)
-# fails on any unbounded funnel NOT listed here, so a new scale hazard
-# can't land silently.
-FUNNEL_WAIVERS = {
-    "fd_sketch_spectrum": (
-        "FD sketch merge (operators/fd.py): mapInPandas emits <= ell "
-        "(=2*k) sketch rows PER PARTITION regardless of input rows — "
-        "the repartition(1) moves P*ell rows (P = #partitions), never "
-        "the embedding relation. Bounded by the streaming-sketch "
-        "contract, invisible to the physical plan. (fd_spectrum_audit "
-        "runs the same merge, but eagerly inside the query function — "
-        "its RETURNED plan is a literal relation, so the gate never "
-        "sees that funnel and it needs no waiver.)"
-    ),
-}
 
 
 def single_partition_funnels(df: DataFrame) -> list:

@@ -5,7 +5,9 @@ Every implemented operator from SURVEY.md §2 appears here twice:
 DataFrame, and ``ORACLE[name]`` is the equivalent ANSI SQL DuckDB runs
 on the same parquet tables. The driver hash-compares the two at
 sf0.01; tests/test_oracle_parity.py runs the identical comparison
-locally at sf0.001 and sf0.01.
+locally at sf0.001 and sf0.01. ``META[name]`` holds the query's policy
+(rows-only reason, bench budget, funnel waiver), declared in the same
+``register(...)`` call.
 
 Determinism rules applied throughout (the hash is exact):
 - every top-K pins a total tie-break order (cnt DESC, key ASC);
@@ -19,24 +21,53 @@ Determinism rules applied throughout (the hash is exact):
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.functions.exclude import exclude_domains
 from piholelongtermstats_spark.operators import counts, sequential, timeagg, topk
-from piholelongtermstats_spark.plans.cache import shared_input
+from piholelongtermstats_spark.plans.cache import shared_docs, shared_emb, shared_input
 from piholelongtermstats_spark.session import ensure_session_defaults
 from piholelongtermstats_spark.sources.events import FACT_CTE, dns_fact
 from piholelongtermstats_spark.sources.parquet import load_table, union_all
 
 QuerySpec = Callable[[SparkSession, str], DataFrame]
 
+
+class Meta(NamedTuple):
+    """Per-query policy, declared at the registration site.
+
+    rows_only: why the query has no DuckDB oracle (checked for rows and
+      schema only). budget: (ceiling_sec, reason) for a query over the
+      bench's per-query budget by design. funnel_waiver: why an
+      unbounded single-partition funnel in its plan is counts-sized
+      anyway (tests/test_plan_gate.py).
+    """
+
+    rows_only: str | None
+    budget: tuple[float, str] | None
+    funnel_waiver: str | None
+
+
 QUERIES: dict[str, QuerySpec] = {}
 ORACLE: dict[str, str] = {}
+META: dict[str, Meta] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def register(
+    name: str,
+    oracle: str | None = None,
+    *,
+    rows_only: str | None = None,
+    budget: tuple[float, str] | None = None,
+    funnel_waiver: str | None = None,
+):
+    # Every query is either oracle-checked or declares why it is not.
+    if (oracle is None) == (rows_only is None):
+        raise ValueError(f"{name}: give exactly one of oracle and rows_only")
+
     def deco(fn: QuerySpec) -> QuerySpec:
         # Duplicate names silently SHADOW an earlier wave's entry (a
         # first-draft M61 Benford overwrote the richer M23 one before
@@ -46,6 +77,7 @@ def register(name: str, oracle: str | None = None):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
+        META[name] = Meta(rows_only, budget, funnel_waiver)
         return fn
 
     return deco
@@ -58,6 +90,18 @@ def _fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_input(
         spark, "dns_fact", sf_dir, lambda: dns_fact(spark, sf_dir)
     )
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared persisted documents corpus (plans/cache.shared_docs)."""
+    ensure_session_defaults(spark)
+    return shared_docs(spark, sf_dir)
+
+
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared persisted embeddings table (plans/cache.shared_emb)."""
+    ensure_session_defaults(spark)
+    return shared_emb(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -906,9 +950,12 @@ def q_filtered_timeseries_client(spark: SparkSession, sf_dir: str) -> DataFrame:
     return plotdata.filtered_timeseries(timeagg.hourly_rollup(fact), client)
 
 
-@register("uniques_approx")  # rows-only: HLL++ sketch values aren't portable
-# SQL; the accuracy contract of the HLL approach is hash-checked by the
-# register-replayed hll_distinct_audit (registry_m57)
+@register(
+    "uniques_approx",
+    rows_only="HLL++ sketch values aren't portable SQL; the accuracy"
+    " contract of the HLL approach is hash-checked by the"
+    " register-replayed hll_distinct_audit (registry_m57)",
+)
 def q_uniques_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ distinct counts — the constant-space scale
     variant of `uniques` (tests bound the error vs exact). rsd=0.016
@@ -920,9 +967,12 @@ def q_uniques_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return approx.uniques_approx(_fact(spark, sf_dir), rsd=0.016)
 
 
-@register("reply_time_quantiles")  # rows-only: GK-sketch percentile
-# VALUES aren't portable SQL; the sketch's rank-error contract is
-# hash-checked by quantile_sketch_eval (registry_m42, graduated r11)
+@register(
+    "reply_time_quantiles",
+    rows_only="GK-sketch percentile VALUES aren't portable SQL; the"
+    " sketch's rank-error contract is hash-checked by"
+    " quantile_sketch_eval (registry_m42, graduated r11)",
+)
 def q_reply_time_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass mergeable reply-time percentiles (no distributed
     full sort)."""

@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import corpus, knn
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m9 import _SEM_CENTS, _arr, _docs, _emb
+from piholelongtermstats_spark.plans.registry import _docs, _emb, register
+from piholelongtermstats_spark.plans.registry_m9 import _SEM_CENTS, _arr
 
 # ---------------------------------------------------------------------------
 # Batched k-NN join (operators/knn.py) — top-k neighbors for EVERY

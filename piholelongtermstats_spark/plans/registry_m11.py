@@ -220,7 +220,7 @@ def _snapshot_root(spark: SparkSession, sf_dir: str) -> str:
     )
     key = (spark.sparkContext.applicationId, root)
     if key not in _SNAP_READY:
-        from piholelongtermstats_spark.plans.registry_m9 import _docs
+        from piholelongtermstats_spark.plans.registry import _docs
 
         docs = _docs(spark, sf_dir)
         if not _snap.versions(root):
@@ -376,7 +376,7 @@ def _snapshot_root_n(spark: SparkSession, sf_dir: str) -> str:
     )
     key = (spark.sparkContext.applicationId, root)
     if key not in _SNAP_READY:
-        from piholelongtermstats_spark.plans.registry_m9 import _docs
+        from piholelongtermstats_spark.plans.registry import _docs
 
         docs = _docs(spark, sf_dir)
         if not _snap.versions(root):

@@ -15,8 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import dsir as _dsir
 from piholelongtermstats_spark.operators import text as _text
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, register
 
 # ---------------------------------------------------------------------------
 # Gopher quality rules (operators/text.py:gopher_rules)
@@ -456,7 +455,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from piholelongtermstats_spark.operators import similarity as _sim  # noqa: E402
-from piholelongtermstats_spark.plans.registry_m7 import _emb  # noqa: E402
+from piholelongtermstats_spark.plans.registry import _emb  # noqa: E402
 
 _RP_EMB_DIM = 64  # driver testdata embedding dimensionality (all SFs)
 _RP_K = 8
@@ -703,7 +702,15 @@ ORDER BY rank_ppt DESC, node LIMIT {k}"""
     return "".join(parts)
 
 
-@register("pagerank_top", _pagerank_sql())
+@register(
+    "pagerank_top",
+    _pagerank_sql(),
+    budget=(
+        6.0,
+        "ten real distributed power iterations; cost is the"
+        " iteration count, not a scale defect",
+    ),
+)
 def q_pagerank_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 client/domain nodes by bipartite fixed-point PageRank
     (10 integer power iterations, damping 17/20;
@@ -818,9 +825,12 @@ def q_kanon_domain_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _counts.kanon_domain_daily(_fact(spark, sf_dir), _KANON_K)
 
 
-@register("rolling_active_approx")  # rows-only: sketch internals aren't
-# portable SQL; the HLL accuracy contract is hash-checked by
-# hll_distinct_audit and the exact twin rolling_active_clients is green
+@register(
+    "rolling_active_approx",
+    rows_only="sketch internals aren't portable SQL; the HLL accuracy"
+    " contract is hash-checked by hll_distinct_audit and the exact twin"
+    " rolling_active_clients is green",
+)
 def q_rolling_active_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-merge (DataSketches HLL) rolling 7-day distinct actives
     — the constant-width scale path of rolling_active_clients; error

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from piholelongtermstats_spark.plans.registry import _DEC, register
+from piholelongtermstats_spark.plans.registry import _DEC, _docs, _emb, register
 from piholelongtermstats_spark.session import ensure_session_defaults
 from piholelongtermstats_spark.sources.parquet import load_table
 
@@ -469,7 +469,7 @@ def q_inactive_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from piholelongtermstats_spark.operators import binquant  # noqa: E402
-from piholelongtermstats_spark.plans.cache import shared_emb, shared_input  # noqa: E402
+from piholelongtermstats_spark.plans.cache import shared_input  # noqa: E402
 
 _BQ_Q = binquant.N_QUERIES
 _BQ_K = binquant.K
@@ -511,11 +511,6 @@ ORDER BY query_id, rank
 """
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_defaults(spark)
-    return shared_emb(spark, sf_dir)
-
-
 @register("binary_quant_ann", _BINQUANT_SQL)
 def q_binary_quant_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-bit ANN: 32× smaller candidate state, integer-exact
@@ -532,7 +527,6 @@ def q_binary_quant_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from piholelongtermstats_spark.operators import lm  # noqa: E402
-from piholelongtermstats_spark.plans.registry_m9 import _docs  # noqa: E402
 
 _LM_TOPK_SQL = r"""
 WITH tk AS (

@@ -29,9 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import bloom, freq, lm, mixture, pca
-from piholelongtermstats_spark.plans.registry import FACT_CTE, _fact, register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
-from piholelongtermstats_spark.plans.registry_m14 import _emb, _lm_bigrams
+from piholelongtermstats_spark.plans.registry import (
+    FACT_CTE,
+    _docs,
+    _emb,
+    _fact,
+    register,
+)
+from piholelongtermstats_spark.plans.registry_m14 import _lm_bigrams
 
 # ---------------------------------------------------------------------------
 # Count-Min sketch audit (operators/freq.py): the top-10 exact domains

@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import approx, corpus, lm
-from piholelongtermstats_spark.plans.registry import FACT_CTE, _fact, register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import FACT_CTE, _docs, _fact, register
 from piholelongtermstats_spark.plans.registry_m14 import _lm_bigrams
 
 # ---------------------------------------------------------------------------

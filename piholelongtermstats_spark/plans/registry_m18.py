@@ -21,19 +21,10 @@ exact integer counts once and round to 6 on both sides.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import sequential, text
-from piholelongtermstats_spark.plans.registry import _fact, register
-from piholelongtermstats_spark.plans.cache import shared_docs, shared_input
-from piholelongtermstats_spark.session import ensure_session_defaults
+from piholelongtermstats_spark.plans.registry import _docs, _fact, register
 from piholelongtermstats_spark.sources.events import FACT_CTE
-from piholelongtermstats_spark.sources.parquet import load_table
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_defaults(spark)
-    return shared_docs(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------

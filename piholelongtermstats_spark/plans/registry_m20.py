@@ -145,7 +145,15 @@ LIMIT 25
 )
 
 
-@register("basket_scale_2x", _BASKET2X_SQL)
+@register(
+    "basket_scale_2x",
+    _BASKET2X_SQL,
+    budget=(
+        4.5,
+        "association rules over a deliberately doubled"
+        " basket volume (slope 1.98x at 8x, SCALING.md)",
+    ),
+)
 def q_basket_scale_2x(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules at 2× basket volume — supports double,
     confidence/lift invariant (the ratio-measure doubling proof).

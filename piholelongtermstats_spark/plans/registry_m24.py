@@ -15,14 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import corpus, graph
-from piholelongtermstats_spark.plans.cache import shared_docs, shared_input
-from piholelongtermstats_spark.plans.registry import _fact, register
+from piholelongtermstats_spark.plans.registry import _docs, _fact, register
 from piholelongtermstats_spark.sources.events import FACT_CTE
-from piholelongtermstats_spark.sources.parquet import load_table
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shared_docs(spark, sf_dir)
 
 
 _WSAMPLE_SQL = """

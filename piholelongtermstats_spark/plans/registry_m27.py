@@ -13,11 +13,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import fd
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m14 import _emb
+from piholelongtermstats_spark.plans.registry import _emb, register
 
 
-@register("fd_sketch_spectrum")  # rows-only: SVD fp edge, numpy-pinned
+@register(
+    "fd_sketch_spectrum",
+    rows_only="SVD fp edge, numpy-pinned",
+    funnel_waiver=(
+        "FD sketch merge (operators/fd.py): mapInPandas emits <= ell "
+        "(=2*k) sketch rows PER PARTITION regardless of input rows — "
+        "the repartition(1) moves P*ell rows (P = #partitions), never "
+        "the embedding relation. Bounded by the streaming-sketch "
+        "contract, invisible to the physical plan. (fd_spectrum_audit "
+        "runs the same merge, but eagerly inside the query function — "
+        "its RETURNED plan is a literal relation, so the gate never "
+        "sees that funnel and it needs no waiver.)"
+    ),
+)
 def q_fd_sketch_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed FD sketch spectrum, ℓ=16 over the 64-dim corpus
     (operators/fd.py). Raw sigmas stay rows-only; the accuracy

@@ -17,10 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import knn, robust
-from piholelongtermstats_spark.plans.registry import _DBL_CTE, _fact2x, register
+from piholelongtermstats_spark.plans.registry import _DBL_CTE, _emb, _fact2x, register
 from piholelongtermstats_spark.plans.registry_m9 import _SEM_CENTS
 from piholelongtermstats_spark.plans.registry_m10 import _KNN_CENT_VALUES
-from piholelongtermstats_spark.plans.registry_m14 import _emb
 
 _Q = knn.N_QUERIES
 _K = knn.K

@@ -16,8 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import text as _text
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, register
 from piholelongtermstats_spark.sources import csvsource as _csv
 
 _CSV_MOD = 17

@@ -27,8 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import robust, text
-from piholelongtermstats_spark.plans.registry import _fact, register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, _fact, register
 from piholelongtermstats_spark.sources import snapshots
 from piholelongtermstats_spark.sources.events import FACT_CTE
 

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import behavior, ranks, robust, semdedup, stattests
-from piholelongtermstats_spark.plans.registry import _fact, register
-from piholelongtermstats_spark.plans.registry_m9 import _SEM_CENT_VALUES, _emb
+from piholelongtermstats_spark.plans.registry import _emb, _fact, register
+from piholelongtermstats_spark.plans.registry_m9 import _SEM_CENT_VALUES
 from piholelongtermstats_spark.plans.registry_m31 import _RANKS_SQL
 from piholelongtermstats_spark.sources.events import FACT_CTE
 

@@ -28,7 +28,7 @@ from piholelongtermstats_spark.plans.registry import (
     _fact2x,
     register,
 )
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs
 from piholelongtermstats_spark.sources.events import FACT_CTE
 
 _CONFORMAL_SQL = (

@@ -27,8 +27,7 @@ from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import stattests, survival
 from piholelongtermstats_spark.operators import text as _text
-from piholelongtermstats_spark.plans.registry import _fact, register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, _fact, register
 from piholelongtermstats_spark.sources import orcsource as _orc
 from piholelongtermstats_spark.sources.events import FACT_CTE
 

@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import knn, stattests
-from piholelongtermstats_spark.plans.registry import _fact, register
-from piholelongtermstats_spark.plans.registry_m7 import _emb
+from piholelongtermstats_spark.plans.registry import _emb, _fact, register
 from piholelongtermstats_spark.sources.events import FACT_CTE
 
 _MAT_DIM = 16

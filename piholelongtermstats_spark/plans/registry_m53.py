@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import multimodal
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, register
 
 _WAV_SQL = """
 SELECT d.doc_id AS media_id,

@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import counts
 from piholelongtermstats_spark.operators import text as _text
-from piholelongtermstats_spark.plans.registry import _fact, register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, _fact, register
 from piholelongtermstats_spark.plans.registry_m32 import _CSV_MOD, _csv_root
 from piholelongtermstats_spark.plans.registry_m50 import _orc_root
 from piholelongtermstats_spark.sources import csvsource as _csv

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import text as _text
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m9 import _QC_W, _docs
+from piholelongtermstats_spark.plans.registry import _docs, register
+from piholelongtermstats_spark.plans.registry_m9 import _QC_W
 from piholelongtermstats_spark.plans.registry_m11 import (
     _SCD2_SQL,
     _snapshot_root,

@@ -131,7 +131,16 @@ def _overlap(
     )
 
 
-@register("trained_ann_recall_panel", _PANEL_SQL)
+@register(
+    "trained_ann_recall_panel",
+    _PANEL_SQL,
+    budget=(
+        4.5,
+        "five-leg composite audit - every"
+        " trained index family plus both exact-truth legs scans the"
+        " corpus once by design (~2.7s)",
+    ),
+)
 def q_trained_ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of every trained retrieval index vs the exact cosine
     truth (operators/knn.py, ivf.py, pq.py, ivfpq.py, semdedup.py).

@@ -35,8 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import multimodal
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, register
 
 # Channel byte in stored (R,G,B) order: (id·31 + r·13 + c·17 + ch·7)
 # % 256. Dims: w = 13 + id%8 (≤ 20), h = 9 + id%5 (≤ 13) — the BMP

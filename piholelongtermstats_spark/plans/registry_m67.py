@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import jpegc
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, register
 
 _MJPEG_SQL = """
 WITH fr AS (

@@ -11,8 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import flacc
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.plans.registry_m9 import _docs
+from piholelongtermstats_spark.plans.registry import _docs, register
 
 _FLAC_SQL = """
 SELECT d.doc_id AS media_id,

@@ -13,10 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import dedup, multimodal, similarity, text
-from piholelongtermstats_spark.plans.cache import shared_docs, shared_emb, shared_input
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.session import ensure_session_defaults
-from piholelongtermstats_spark.sources.parquet import load_table
+from piholelongtermstats_spark.plans.cache import shared_input
+from piholelongtermstats_spark.plans.registry import _docs, _emb, register
 
 # DuckDB equivalents of the shared building blocks.
 _TOKS = r"list_filter(string_split_regex(trim(text), '\s+'), tk -> tk <> '')"
@@ -56,16 +54,6 @@ _SIG_CTE = f"""
   GROUP BY 1, 2
 )
 """
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_defaults(spark)
-    return shared_docs(spark, sf_dir)
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_defaults(spark)
-    return shared_emb(spark, sf_dir)
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,7 +126,15 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("ngram_jaccard_capped", _JACCARD_ORACLE)
+@register(
+    "ngram_jaccard_capped",
+    _JACCARD_ORACLE,
+    budget=(
+        5.5,
+        "df_cap-bounded exact Jaccard; the ~900k-row"
+        " shingle shuffle is the operator's honest work",
+    ),
+)
 def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stop-shingle-mitigated candidate path (df_cap) checked
     against the SAME exact-Jaccard oracle: candidates come from
@@ -208,7 +204,17 @@ FROM reach GROUP BY src
 )
 
 
-@register("dedup_clusters", _CLUSTERS_ORACLE)
+@register(
+    "dedup_clusters",
+    _CLUSTERS_ORACLE,
+    budget=(
+        4.0,
+        "the deliberately UNcached iterative label-propagation"
+        " differential baseline (registry_m7._star_clusters keeps the"
+        " shared star-contraction variant; this one recomputes its"
+        " iterations from the pairs cache every call by design)",
+    ),
+)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over LSH candidate pairs → duplicate
     clusters (transitive near-dup groups); iterative min-label
@@ -707,19 +713,19 @@ def q_media_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.byte_stats(multimodal.docs_as_media(_docs(spark, sf_dir)))
 
 
-@register("media_features")  # rows-only: decode is a stubbed Pandas UDF
+@register("media_features", rows_only="decode is a stubbed Pandas UDF")
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.docs_as_media(_docs(spark, sf_dir))
     return multimodal.extract_features(media, fake=True)
 
 
-@register("media_resize")  # rows-only: stubbed decode, real metadata math
+@register("media_resize", rows_only="stubbed decode, real metadata math")
 def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.docs_as_media(_docs(spark, sf_dir))
     return multimodal.resize_images(media, max_side=256)
 
 
-@register("media_frames")  # rows-only: stubbed decode, real fan-out shape
+@register("media_frames", rows_only="stubbed decode, real fan-out shape")
 def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.docs_as_media(_docs(spark, sf_dir)).limit(100)
     return multimodal.sample_frames(media, every_ms=1000, duration_ms=5000)

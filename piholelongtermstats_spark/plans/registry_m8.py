@@ -323,6 +323,11 @@ SELECT d.doc_id
 FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
 WHERE coalesce(l.cluster_id, d.doc_id) = d.doc_id
 """,
+    budget=(
+        6.0,
+        "end-to-end LSH -> star-contraction -> survivors"
+        " over a deliberately DOUBLED corpus",
+    ),
 )
 def q_dedup_scale_2x(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F

@@ -18,22 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.operators import ivf, packing, semdedup, similarity, text
-from piholelongtermstats_spark.plans.cache import shared_docs, shared_emb, shared_input
-from piholelongtermstats_spark.plans.registry import register
-from piholelongtermstats_spark.session import ensure_session_defaults
-from piholelongtermstats_spark.sources.parquet import load_table
+from piholelongtermstats_spark.plans.cache import shared_input
+from piholelongtermstats_spark.plans.registry import _docs, _emb, register
 
 _EMB_DIM = 64  # driver testdata embedding dimensionality (all SFs)
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_defaults(spark)
-    return shared_emb(spark, sf_dir)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_session_defaults(spark)
-    return shared_docs(spark, sf_dir)
 
 
 def _arr(vals) -> str:

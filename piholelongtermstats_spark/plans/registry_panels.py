@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.functions.exclude import exclude_domains
 from piholelongtermstats_spark.operators import corpus, multimodal, text, timeagg
-from piholelongtermstats_spark.plans.registry import FACT_CTE, _fact, register
-from piholelongtermstats_spark.plans.registry_m7 import _SW, _TOKS, _docs
+from piholelongtermstats_spark.plans.registry import FACT_CTE, _docs, _fact, register
+from piholelongtermstats_spark.plans.registry_m7 import _SW, _TOKS
 from piholelongtermstats_spark.plans.registry_m8 import _MIX_RATES
 from piholelongtermstats_spark.session import ensure_session_defaults
 from piholelongtermstats_spark.sources.events import dns_fact

@@ -42,11 +42,11 @@ def test_plan_audit_matches_registry():
     n = _registry_size()
     assert declared == n, (
         f"PLAN_AUDIT.md is stale: header says {declared} queries,"
-        f" registry has {n} — rerun scripts/plan_audit.py"
+        f" registry has {n} — rerun scripts/query.py audit"
     )
     assert len(rows) == n, (
         f"PLAN_AUDIT.md is stale: {len(rows)} table rows,"
-        f" registry has {n} — rerun scripts/plan_audit.py"
+        f" registry has {n} — rerun scripts/query.py audit"
     )
 
 
