@@ -26,11 +26,11 @@ Every pass's timing is recorded in bench_metrics.json
 (``noise``: median/min ratios), so the next round's verdict can
 condition regressions on the measured spread instead of guessing.
 
-The events tier runs against the date-partitioned p_date layout
-(SPARK_GRAFT_USE_LAYOUT, sources/layout.py) so range queries exercise
-directory-level PartitionFilters in the bench itself, not just in the
-plan tests (r4 VERDICT #8). The layout write happens in the untimed
-warmup (daily-ingest model: layout is a property of the data at rest).
+The events tier reads the date-partitioned p_date layout, the only
+fact path (sources/events.dns_fact, sources/layout.py), so range
+queries exercise directory-level PartitionFilters. The layout write
+happens in the untimed warmup, on the first dns_fact call
+(daily-ingest model: layout is a property of the data at rest).
 """
 
 from __future__ import annotations
@@ -42,10 +42,6 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-# The partitioned events layout is the bench's physical design; set
-# before any registry import so every dns_fact call routes through it.
-os.environ.setdefault("SPARK_GRAFT_USE_LAYOUT", "1")
 
 from piholelongtermstats_spark.plans import META, QUERIES  # noqa: E402
 from piholelongtermstats_spark.plans.metrics import executed_plan_metrics  # noqa: E402
@@ -83,10 +79,6 @@ def time_queries(spark, sf_dir: str, names: list) -> dict:
     (process.py:100-113). Also a correctness smoke: a query that throws
     fails HERE, not mid-timing.
     """
-    if os.environ.get("SPARK_GRAFT_USE_LAYOUT", "").lower() in ("1", "true", "auto"):
-        from piholelongtermstats_spark.sources.layout import ensure_layout
-
-        ensure_layout(spark, sf_dir)
     for name in names:
         QUERIES[name](spark, sf_dir).collect()
 

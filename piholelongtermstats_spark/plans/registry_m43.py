@@ -84,15 +84,10 @@ def q_dq_expectations_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _raw_with_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw events with the nanos→µs ts conversion but every original
     column kept (the DQ panel checks the raw columns)."""
-    from pyspark.sql import functions as F
+    from piholelongtermstats_spark.sources.events import canonical_ts
 
-    from piholelongtermstats_spark.sources.events import filter_raw_ts
-
-    ev = load_table(spark, sf_dir, "events")
-    ev, ts = filter_raw_ts(ev, None, None)
-    return ev.select(
-        "event_id", ts.alias("ts"), "user_id", "event_type", "value", "props"
-    )
+    ev = canonical_ts(load_table(spark, sf_dir, "events"))
+    return ev.select("event_id", "ts", "user_id", "event_type", "value", "props")
 
 
 _TWAP_SQL = (

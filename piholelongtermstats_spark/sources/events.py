@@ -15,12 +15,11 @@ with session timezone pinned to UTC.
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from piholelongtermstats_spark.functions.derive import day_period, enrich_time
+from piholelongtermstats_spark.functions.derive import enrich_time
 from piholelongtermstats_spark.sources.parquet import load_table
 
 
@@ -36,94 +35,68 @@ EVENT_BLOCKED = ("error",)
 # everything else (signup) → 'Other'
 
 
+def canonical_ts(ev: DataFrame) -> DataFrame:
+    """Decode the stored ts column to UTC TimestampType — the one
+    place that knows the stored encodings of events.ts: parquet
+    TIMESTAMP(NANOS) (read as nanos-long via
+    session.ensure_session_defaults), TIMESTAMP(MICROS) without
+    timezone (read as TIMESTAMP_NTZ), or a plain timestamp. Nanos are
+    truncated to µs exactly like DuckDB's TIMESTAMP_NS → TIMESTAMP
+    cast (integer DIV keeps full int64 precision); NTZ wall-clock is
+    reinterpreted as a UTC instant (session TZ is pinned to UTC, so
+    derived date/hour/day_name match DuckDB's naive-timestamp
+    semantics).
+
+    Layout writes run this under `layout.micros_write` so ts lands as
+    INT64 micros: Spark's default INT96 encoding carries NO usable
+    parquet statistics, and TIMESTAMP_NTZ stats are ignored by the
+    reader's row-group filter (both measured in sources/zorder.py: a
+    2-day window over a ts-SORTED 16-file layout read 10000/10000 rows
+    under either default, 1236 under INT64 micros)."""
+    ts_type = dict(ev.dtypes).get("ts")
+    if ts_type == "bigint":
+        return ev.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return ev.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
 def filter_raw_ts(
     ev: DataFrame,
     lo: "dt.datetime | None" = None,
     hi: "dt.datetime | None" = None,
-) -> "tuple[DataFrame, F.Column]":
-    """Apply [lo, hi) bounds to the RAW stored ts column and return
-    (filtered frame, canonical TimestampType ts expression).
+) -> DataFrame:
+    """Apply [lo, hi) bounds to the STORED ts column of a layout
+    written through canonical_ts (UTC TimestampType).
 
-    The driver has shipped events.ts as either parquet
-    TIMESTAMP(NANOS) (read as nanos-long via
-    session.ensure_session_defaults) or TIMESTAMP(MICROS) without
-    timezone (read as TIMESTAMP_NTZ). Handle both: truncate nanos to
-    µs exactly like DuckDB's TIMESTAMP_NS → TIMESTAMP cast (integer
-    DIV keeps full int64 precision), and reinterpret NTZ wall-clock
-    as a UTC instant (session TZ is pinned to UTC, so derived
-    date/hour/day_name match DuckDB's naive-timestamp semantics).
-
-    Bounds compare against the raw column with literals of the SAME
-    type so the comparison needs no column-side cast and reaches
-    PushedFilters on the scan. Literals are built from UTC epoch
-    micros — a naive-datetime literal would be converted through the
-    driver OS timezone, shifting the window on a non-UTC host;
+    The bounds compare the column itself, with no column-side
+    expression, so they reach PushedFilters on the scan and skip row
+    groups. Literals are built from UTC epoch micros — a
+    naive-datetime literal would be converted through the host OS
+    timezone, shifting the window on a non-UTC host;
     timestamp_micros(lit) is OS-independent and constant-folds BEFORE
     pushdown, so PushedFilters still sees a plain literal.
     """
-    ts = F.col("ts")
-    ts_type = dict(ev.dtypes).get("ts")
-    if ts_type == "bigint":
-        if lo is not None:
-            ev = ev.filter(F.col("ts") >= _epoch_us(lo) * 1000)
-        if hi is not None:
-            ev = ev.filter(F.col("ts") < _epoch_us(hi) * 1000)
-        ts = F.timestamp_micros(F.expr("ts DIV 1000"))
-    else:
-        lit_type = "timestamp_ntz" if ts_type == "timestamp_ntz" else "timestamp"
-
-        def _bound(t: dt.datetime):
-            return F.timestamp_micros(F.lit(_epoch_us(t))).cast(lit_type)
-
-        if lo is not None:
-            ev = ev.filter(F.col("ts") >= _bound(lo))
-        if hi is not None:
-            ev = ev.filter(F.col("ts") < _bound(hi))
-        if ts_type == "timestamp_ntz":
-            ts = F.col("ts").cast("timestamp")
-    return ev, ts
+    if lo is not None:
+        ev = ev.filter(F.col("ts") >= F.timestamp_micros(F.lit(_epoch_us(lo))))
+    if hi is not None:
+        ev = ev.filter(F.col("ts") < F.timestamp_micros(F.lit(_epoch_us(hi))))
+    return ev
 
 
-def dns_fact(
-    spark: SparkSession,
-    sf_dir: str,
+def project_fact(
+    ev: DataFrame,
     lo: "dt.datetime | None" = None,
     hi: "dt.datetime | None" = None,
+    client_id: "int | None" = None,
 ) -> DataFrame:
-    """Load `events` and produce the enriched DNS fact table.
-
-    Columns: event_id, ts, client, domain, status_type, reply_time,
-    date, hour, day_name, day_period. Pure projection — fuses into the
-    parquet scan; no shuffle.
-
-    ``lo``/``hi`` (UTC, end-exclusive — db.py:133/S4 contract) are
-    applied to the RAW stored column, not the derived timestamp: the
-    nanos→µs truncation is monotone, so ``derived >= lo ⟺ raw >=
-    lo_µs·1000`` exactly (positive epochs; DIV truncation == floor).
-    Filtering the raw column is what lets the predicate reach
-    ``PushedFilters`` on the parquet scan and skip row groups — a
-    filter on the derived column would evaluate post-scan and read
-    everything at 100 TB.
-
-    With ``SPARK_GRAFT_USE_LAYOUT`` set (bench does, r4 VERDICT #8),
-    the scan routes through the date-partitioned hive layout
-    (sources/layout.py) instead of the flat file: identical rows and
-    schema (tests/test_scale_layout.py), but [lo, hi) additionally
-    prunes whole date DIRECTORIES at plan time (PartitionFilters) —
-    the physical design every events query runs against at 100 TB.
-    The flag is opt-in so oracle comparisons and the driver's
-    correctness runs stay on the exact files DuckDB reads.
-    """
-    if os.environ.get("SPARK_GRAFT_USE_LAYOUT", "").lower() in ("1", "true", "auto"):
-        from piholelongtermstats_spark.sources import layout as _layout
-
-        path = _layout.ensure_layout(spark, sf_dir)
-        return _layout.scan_events_date_partitioned(spark, path, lo, hi)
-    ev = load_table(spark, sf_dir, "events")
-    ev, ts = filter_raw_ts(ev, lo, hi)
-    df = ev.select(
+    """Canonical-ts events → the enriched fact table, with the
+    optional user_id equality and [lo, hi) bounds applied to the raw
+    columns first so both reach PushedFilters. Pure projection — fuses
+    into the parquet scan; no shuffle."""
+    if client_id is not None:
+        ev = ev.filter(F.col("user_id") == client_id)
+    df = filter_raw_ts(ev, lo, hi).select(
         F.col("event_id"),
-        ts.alias("ts"),
+        F.col("ts"),
         F.col("user_id").cast("string").alias("client"),
         F.col("props").alias("domain"),
         (
@@ -134,6 +107,32 @@ def dns_fact(
         F.col("value").alias("reply_time"),
     )
     return enrich_time(df, "ts")
+
+
+def dns_fact(
+    spark: SparkSession,
+    sf_dir: str,
+    lo: "dt.datetime | None" = None,
+    hi: "dt.datetime | None" = None,
+) -> DataFrame:
+    """The enriched DNS fact table over `events`.
+
+    Columns: event_id, ts, client, domain, status_type, reply_time,
+    date, hour, day_name, day_period.
+
+    The scan always reads the date-partitioned hive layout
+    (sources/layout.py), materialized from ``events.parquet`` on first
+    use and reused while the source bytes are unchanged. ``lo``/``hi``
+    (UTC, end-exclusive — db.py:133/S4 contract) prune whole p_date
+    directories at plan time (PartitionFilters) and bound the stored
+    ts column of the boundary days (PushedFilters) — a filter on a
+    derived column would evaluate post-scan and read everything at
+    100 TB.
+    """
+    from piholelongtermstats_spark.sources import layout
+
+    path = layout.ensure_layout(spark, sf_dir)
+    return layout.scan_events_date_partitioned(spark, path, lo, hi)
 
 
 # DuckDB oracle prelude: the exact same fact derivation in ANSI-ish SQL.
@@ -163,10 +162,8 @@ WITH fact AS (
 def raw_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_id, ts, user_id, event_type) — the UNBUCKETED event
     stream for journey analytics (funnels need the raw step names the
-    fact's 3-way status mapping collapses). Same nanos→µs ts handling
-    as dns_fact; pure projection, fuses into the parquet scan."""
-    ev = load_table(spark, sf_dir, "events")
-    ev, ts = filter_raw_ts(ev, None, None)
-    return ev.select(
-        "event_id", ts.alias("ts"), "user_id", "event_type"
-    )
+    fact's 3-way status mapping collapses). Same ts decoding as the
+    fact (canonical_ts); pure projection, fuses into the parquet
+    scan."""
+    ev = canonical_ts(load_table(spark, sf_dir, "events"))
+    return ev.select("event_id", "ts", "user_id", "event_type")

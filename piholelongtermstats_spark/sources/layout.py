@@ -2,17 +2,18 @@
 scan (reference db.py:133, the date-window query) runs against at
 100 TB.
 
-The flat single-file layout serves correctness tests, and parquet
-row-group statistics already skip most of an out-of-range file. But
-at 100 TB a date-range query must prune ENTIRE partitions at planning
-time — directory-level `PartitionFilters`, before any file footer is
+Every events read goes through it: sources/events.dns_fact
+materializes it from the flat ``events.parquet`` on first use and
+scans nothing else. Parquet row-group statistics alone would skip most
+of an out-of-range file, but at 100 TB a date-range query must prune
+ENTIRE partitions at planning time — directory-level `PartitionFilters`, before any file footer is
 opened — not just row groups inside files the scan already touched.
 Hive-style `p_date=YYYY-MM-DD/` partitioning gives exactly that:
 
   - the [lo, hi) window becomes a p_date range predicate that Catalyst
     turns into PartitionFilters (pruned at plan time, visible in
     `.explain("formatted")`);
-  - the raw-ts bounds stay as PushedFilters for the boundary days'
+  - the ts bounds stay as PushedFilters for the boundary days'
     row groups (sources/events.filter_raw_ts);
   - daily ingest appends one new directory — no rewrite of history,
     and retention is a directory drop.
@@ -24,24 +25,24 @@ maxRecordsPerFile at real scale.
 
 tests/test_scale_layout.py asserts PartitionFilters appears in the
 plan, the pruned scan reads only the in-range partitions, and the
-result matches the flat-layout range scan row-for-row.
+result matches DuckDB's FACT_CTE over the flat file row-for-row.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from piholelongtermstats_spark.functions.derive import enrich_time
 from piholelongtermstats_spark.sources.events import (
-    EVENT_ALLOWED,
-    EVENT_BLOCKED,
     _epoch_us,
-    filter_raw_ts,
+    canonical_ts,
+    project_fact,
 )
 from piholelongtermstats_spark.sources.parquet import (
     invalidate_read_memo,
@@ -50,23 +51,6 @@ from piholelongtermstats_spark.sources.parquet import (
 )
 
 PARTITION_COL = "p_date"
-
-
-def canonical_ts(ev: DataFrame) -> DataFrame:
-    """Layout writes canonicalize ts to UTC TimestampType; run the
-    write under `micros_write` so it lands as INT64 micros. Spark's
-    default INT96 timestamp encoding carries NO usable parquet
-    statistics, and TIMESTAMP_NTZ stats are ignored by the reader's
-    row-group filter (both measured in sources/zorder.py: a 2-day
-    window over a ts-SORTED 16-file layout read 10000/10000 rows under
-    either default, 1236 under INT64 micros). For the p_date layout
-    this is what makes the BOUNDARY-day row groups skippable — the
-    directory pruning never needed stats, but the raw-ts PushedFilters
-    on the edge days did."""
-    ts_type = dict(ev.dtypes).get("ts")
-    if ts_type == "bigint":
-        return ev.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return ev.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 class micros_write:
@@ -84,20 +68,18 @@ class micros_write:
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.parquet.outputTimestampType", self.prev)
 
-# One layout write per (application, path): the existence check alone
+# One write per (application, layout path): the existence check alone
 # would race a concurrent in-session write of the same path.
-_LAYOUT_READY: set[tuple] = set()
+_READY: set[tuple] = set()
 
 
-def layout_path(sf_dir: str) -> str:
-    """Deterministic on-disk location of the partitioned layout for a
-    given source dir. Root overridable via SPARK_GRAFT_LAYOUT_DIR (the
+def _layout_path(sf_dir: str, name: str) -> str:
+    """Deterministic on-disk location of layout ``name`` for a given
+    source dir. Root overridable via SPARK_GRAFT_LAYOUT_DIR (the
     cluster deployment points it at the warehouse); default is a
     tmp-dir keyed by sf name + an abspath digest — basename alone
     would silently alias two different dirs that share a name (e.g.
     /a/sf0.1 and /b/sf0.1) onto one layout."""
-    import hashlib
-
     root = os.environ.get(
         "SPARK_GRAFT_LAYOUT_DIR",
         os.path.join(tempfile.gettempdir(), "phlts_layout"),
@@ -105,7 +87,7 @@ def layout_path(sf_dir: str) -> str:
     ap = os.path.abspath(sf_dir.rstrip("/"))
     sf_name = os.path.basename(ap) or "events"
     digest = hashlib.md5(ap.encode()).hexdigest()[:8]
-    return os.path.join(root, f"{sf_name}-{digest}", "events_by_date")
+    return os.path.join(root, f"{sf_name}-{digest}", name)
 
 
 _META_FILE = "_PHLTS_SRC_META"
@@ -123,31 +105,29 @@ def _src_stat(sf_dir: str) -> "str | None":
     return f"v{LAYOUT_VERSION}:{st.st_mtime_ns}:{st.st_size}"
 
 
-def layout_is_fresh(sf_dir: str) -> bool:
-    """True iff a completed layout exists for sf_dir and was derived
-    from the CURRENT source bytes. Freshness compares the source's
+def _is_fresh(sf_dir: str, path: str) -> bool:
+    """True iff a completed layout exists at path and was derived from
+    the CURRENT source bytes. Freshness compares the source's
     (mtime_ns, size) recorded at write time — a plain mtime>=mtime
     check misses a source regenerated within the filesystem's mtime
     granularity of the layout write (staleness must never win over
     correctness)."""
-    path = layout_path(sf_dir)
-    marker = os.path.join(path, "_SUCCESS")
-    meta = os.path.join(path, _META_FILE)
     cur = _src_stat(sf_dir)
-    if cur is None or not os.path.exists(marker):
+    if cur is None or not os.path.exists(os.path.join(path, "_SUCCESS")):
         return False
     try:
-        with open(meta) as f:
+        with open(os.path.join(path, _META_FILE)) as f:
             return f.read().strip() == cur
     except OSError:
         return False
 
 
-def ensure_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotently materialize the date-partitioned layout for sf_dir
-    and return its path. The write runs at most once per (application,
-    path); a fresh on-disk layout from an earlier session is reused
-    (daily-ingest model: history directories are immutable).
+def _materialize(spark: SparkSession, sf_dir: str, name: str, write) -> str:
+    """Idempotently materialize layout ``name`` of sf_dir with
+    ``write(spark, sf_dir, path)`` and return its path. The write runs
+    at most once per (application, path); a fresh on-disk layout from
+    an earlier session is reused (daily-ingest model: history
+    directories are immutable).
 
     Cross-PROCESS collisions (bench + a concurrent parity run on the
     same sf) are narrowed by writing to a pid-unique staging dir and
@@ -156,28 +136,34 @@ def ensure_layout(spark: SparkSession, sf_dir: str) -> str:
     one. (The production contract needs none of this — the warehouse
     layout is append-only daily ingest; the swap exists for the local
     regenerate-testdata loop.)"""
-    import shutil
-
-    path = layout_path(sf_dir)
+    path = _layout_path(sf_dir, name)
     key = (spark.sparkContext.applicationId, path)
-    if key in _LAYOUT_READY:
+    if key in _READY:
         return path
-    if not layout_is_fresh(sf_dir):
+    if not _is_fresh(sf_dir, path):
         src_stat = _src_stat(sf_dir)
         staging = f"{path}.staging.{os.getpid()}"
         shutil.rmtree(staging, ignore_errors=True)
-        write_events_date_partitioned(spark, sf_dir, staging)
+        write(spark, sf_dir, staging)
         with open(os.path.join(staging, _META_FILE), "w") as f:
             f.write(src_stat or "")
-        if layout_is_fresh(sf_dir):
+        if _is_fresh(sf_dir, path):
             # another process completed the same layout while we wrote
             shutil.rmtree(staging, ignore_errors=True)
         else:
             shutil.rmtree(path, ignore_errors=True)
             os.rename(staging, path)
         invalidate_read_memo(spark, path)
-    _LAYOUT_READY.add(key)
+    _READY.add(key)
     return path
+
+
+def ensure_layout(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize (once) the date-partitioned layout of sf_dir and
+    return its path (_materialize)."""
+    return _materialize(
+        spark, sf_dir, "events_by_date", write_events_date_partitioned
+    )
 
 
 def write_events_date_partitioned(
@@ -187,7 +173,7 @@ def write_events_date_partitioned(
     UTC date. Non-ts columns are preserved byte-for-byte; ts is
     canonicalized to INT64 UTC micros (canonical_ts — same µs-truncated
     instants the fact table derives, but now with USABLE parquet
-    statistics, so the boundary days' raw-ts PushedFilters skip row
+    statistics, so the boundary days' ts PushedFilters skip row
     groups instead of silently reading the whole edge directory)."""
     ev = canonical_ts(load_table(spark, sf_dir, "events"))
     keyed = ev.withColumn(PARTITION_COL, F.to_date(F.col("ts")))
@@ -205,34 +191,30 @@ def write_events_date_partitioned(
         keyed.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(path)
 
 
-def scan_events_date_partitioned(
-    spark: SparkSession,
-    path: str,
+def _utc_date(t: dt.datetime) -> dt.date:
+    return dt.datetime.fromtimestamp(_epoch_us(t) / 1e6, tz=dt.timezone.utc).date()
+
+
+def prune_dates(
+    ev: DataFrame,
     lo: "dt.datetime | None" = None,
     hi: "dt.datetime | None" = None,
 ) -> DataFrame:
-    """The S4 range scan over the partitioned layout: directory-level
-    pruning on p_date plus exact raw-ts bounds for the boundary days.
-    Returns the same enriched fact schema as sources/events.dns_fact.
+    """p_date range predicate for [lo, hi) — Catalyst turns it into
+    PartitionFilters, so out-of-range directories are pruned at plan
+    time.
 
     hi is END-EXCLUSIVE (db.py:85 contract): the last candidate
     partition is the date of (hi − 1µs), so a midnight hi does not
     touch the following day's directory at all.
 
     Partition bounds are taken from the UTC date of the bound INSTANT
-    (r4 ADVICE): p_date is derived from UTC event time, and
-    filter_raw_ts accepts tz-aware bounds, so a tz-aware bound (e.g.
-    UTC+14 early morning — already the previous day in UTC) must
-    prune on its UTC calendar date, not its local wall-clock date, or
-    the directory holding in-range rows would be pruned away.
+    (r4 ADVICE): p_date is derived from UTC event time, and the ts
+    bounds accept tz-aware datetimes, so a tz-aware bound (e.g. UTC+14
+    early morning — already the previous day in UTC) must prune on its
+    UTC calendar date, not its local wall-clock date, or the directory
+    holding in-range rows would be pruned away.
     """
-
-    def _utc_date(t: dt.datetime) -> dt.date:
-        return dt.datetime.fromtimestamp(
-            _epoch_us(t) / 1e6, tz=dt.timezone.utc
-        ).date()
-
-    ev = read_parquet_memo(spark, path)
     if lo is not None:
         ev = ev.filter(
             F.col(PARTITION_COL) >= F.lit(_utc_date(lo).isoformat()).cast("date")
@@ -240,20 +222,21 @@ def scan_events_date_partitioned(
     if hi is not None:
         last = _utc_date(hi - dt.timedelta(microseconds=1))
         ev = ev.filter(F.col(PARTITION_COL) <= F.lit(last.isoformat()).cast("date"))
-    ev, ts = filter_raw_ts(ev, lo, hi)
-    df = ev.select(
-        F.col("event_id"),
-        ts.alias("ts"),
-        F.col("user_id").cast("string").alias("client"),
-        F.col("props").alias("domain"),
-        (
-            F.when(F.col("event_type").isin(*EVENT_ALLOWED), F.lit("Allowed"))
-            .when(F.col("event_type").isin(*EVENT_BLOCKED), F.lit("Blocked"))
-            .otherwise(F.lit("Other"))
-        ).alias("status_type"),
-        F.col("value").alias("reply_time"),
-    )
-    return enrich_time(df, "ts")
+    return ev
+
+
+def scan_events_date_partitioned(
+    spark: SparkSession,
+    path: str,
+    lo: "dt.datetime | None" = None,
+    hi: "dt.datetime | None" = None,
+) -> DataFrame:
+    """The S4 range scan over the partitioned layout: directory-level
+    pruning on p_date (prune_dates) plus exact ts bounds for the
+    boundary days (events.filter_raw_ts). Returns the enriched fact
+    schema (events.project_fact)."""
+    ev = prune_dates(read_parquet_memo(spark, path), lo, hi)
+    return project_fact(ev, lo, hi)
 
 
 def compact_partition_files(
@@ -281,7 +264,6 @@ def compact_partition_files(
     rewritten."""
     import glob as _glob
     import math
-    import shutil
 
     out = {}
     for pdir in sorted(_glob.glob(os.path.join(root, partition_glob))):

@@ -5,9 +5,10 @@ Catalyst give us for free what the reference hand-rolls: predicate
 pushdown to row-group stats (db.py:130-135 → O1), column pruning
 (db.py:131 → O2), and chunked reads (db.py:144-150 → partitions).
 
-Scale note: at 100 TB the fact table would be written partitioned by
-date (``partitionBy('date')``) so time-range queries become partition
-pruning, and bucketed by the high-cardinality join key where relevant.
+Scale note: the events fact is read through its date-partitioned
+layout (sources/layout.py), so time-range queries become partition
+pruning; join-heavy tables would be bucketed by the high-cardinality
+join key where relevant (sources/bucketing.py).
 The readers here take any directory of ``<table>.parquet``.
 """
 
@@ -16,19 +17,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
@@ -73,10 +61,6 @@ def invalidate_read_memo(spark: SparkSession, root: str) -> None:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table from ``sf_dir``."""
     return read_parquet_memo(spark, os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def union_all(*dfs: DataFrame) -> DataFrame:

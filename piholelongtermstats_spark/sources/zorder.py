@@ -18,8 +18,9 @@ never mentions the z-value, so the layout is transparent to every
 existing predicate.
 
 The z-value is ONLY a clustering key: correctness never depends on it
-(tests pin z-scan ≡ flat-scan row-for-row), so clamping/wrapping the
-dimension encodings is harmless — worst case is weaker locality.
+(tests pin z-scan ≡ DuckDB's FACT_CTE row-for-row), so
+clamping/wrapping the dimension encodings is harmless — worst case is
+weaker locality.
 
 Scale shape: the one-time layout job is a repartitionByRange on the
 z-value (Spark samples range bounds — one pass) + per-partition local
@@ -34,26 +35,16 @@ identically-sized time-sorted layout.
 from __future__ import annotations
 
 import datetime as dt
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from piholelongtermstats_spark.functions.derive import enrich_time
-from piholelongtermstats_spark.sources.events import (
-    EVENT_ALLOWED,
-    EVENT_BLOCKED,
-    _epoch_us,
-    filter_raw_ts,
-)
+from piholelongtermstats_spark.sources.events import canonical_ts, project_fact
 from piholelongtermstats_spark.sources.layout import (
-    _META_FILE,
     PARTITION_COL,
-    _src_stat,
-    canonical_ts,
+    _materialize,
     micros_write,
+    prune_dates,
 )
 from piholelongtermstats_spark.sources.parquet import (
     invalidate_read_memo,
@@ -63,8 +54,6 @@ from piholelongtermstats_spark.sources.parquet import (
 
 BITS = 8  # per-dimension resolution: 2^8 = 256 cells/dim
 N_FILES = 16
-
-_ZLAYOUT_READY: set[tuple] = set()
 
 
 def zvalue(a: Column, b: Column, bits: int = BITS) -> Column:
@@ -85,18 +74,13 @@ def zvalue(a: Column, b: Column, bits: int = BITS) -> Column:
     return z
 
 
-def _raw_with_hour(ev: DataFrame) -> tuple[DataFrame, Column]:
-    """(events, epoch-hour Column) handling the three ts encodings the
-    driver has shipped (nanos-long / NTZ / timestamp — the
-    sources/events.filter_raw_ts gotcha)."""
-    ts_type = dict(ev.dtypes).get("ts")
-    if ts_type == "bigint":
-        us = F.expr("ts DIV 1000")
-    elif ts_type == "timestamp_ntz":
-        us = F.unix_micros(F.col("ts").cast("timestamp"))
-    else:
-        us = F.unix_micros(F.col("ts"))
-    return ev, F.floor(us / F.lit(3_600_000_000)).cast("long")
+def _events_with_hour(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, Column]:
+    """(canonical-ts events, epoch-hour Column)."""
+    ev = canonical_ts(load_table(spark, sf_dir, "events"))
+    hour = F.floor(F.unix_micros(F.col("ts")) / F.lit(3_600_000_000))
+    return ev, hour.cast("long")
 
 
 def write_events_zordered(
@@ -119,13 +103,12 @@ def write_events_zordered(
     near-uniform keys and costs one aggregate instead of two windows.
 
     Non-ts columns are preserved byte-for-byte, ts is canonicalized to
-    INT64 UTC micros (layout.canonical_ts — INT96/NTZ encodings carry
+    INT64 UTC micros (events.canonical_ts — INT96/NTZ encodings carry
     no usable stats), and the z column is NOT persisted; pruning acts
     through ordinary user_id/ts min-max file statistics."""
-    ev = load_table(spark, sf_dir, "events")
-    ev, hour = _raw_with_hour(ev)
+    ev, hour = _events_with_hour(spark, sf_dir)
     if ev.isEmpty():
-        canonical_ts(ev).write.mode("overwrite").parquet(path)
+        ev.write.mode("overwrite").parquet(path)
         invalidate_read_memo(spark, path)
         return
     r = ev.select(
@@ -148,7 +131,7 @@ def write_events_zordered(
     )
     with micros_write(spark):
         (
-            canonical_ts(ev.withColumn("_z", z))
+            ev.withColumn("_z", z)
             .repartitionByRange(n_files, "_z")
             .sortWithinPartitions("_z")
             .drop("_z")
@@ -180,12 +163,10 @@ def write_events_zordered_by_date(
     (p_date, z) gives every output task a contiguous (day, z-stripe)
     slice ⇒ ~files_per_day files per directory, each covering a tight
     (client, hour) rectangle."""
-    ev = load_table(spark, sf_dir, "events")
-    ev, hour = _raw_with_hour(ev)
+    ev, hour = _events_with_hour(spark, sf_dir)
     if ev.isEmpty():
-        canonical_ts(ev).withColumn(
-            PARTITION_COL, F.to_date(F.col("ts"))
-        ).write.mode("overwrite").parquet(path)
+        keyed = ev.withColumn(PARTITION_COL, F.to_date(F.col("ts")))
+        keyed.write.mode("overwrite").parquet(path)
         invalidate_read_memo(spark, path)
         return
     r = ev.select(
@@ -209,7 +190,7 @@ def write_events_zordered_by_date(
     n_part = max(int(r["n_days"] or 1), 1) * files_per_day
     with micros_write(spark):
         (
-            canonical_ts(ev.withColumn("_z", z))
+            ev.withColumn("_z", z)
             .withColumn(PARTITION_COL, F.to_date(F.col("ts")))
             .repartitionByRange(n_part, PARTITION_COL, "_z")
             .sortWithinPartitions(PARTITION_COL, "_z")
@@ -233,39 +214,8 @@ def scan_events_zdate(
     layout.scan_events_date_partitioned's contract) + user_id/raw-ts
     PushedFilters against the per-file stats the within-day z-sort
     tightened."""
-
-    def _utc_date(t: dt.datetime) -> dt.date:
-        return dt.datetime.fromtimestamp(
-            _epoch_us(t) / 1e6, tz=dt.timezone.utc
-        ).date()
-
-    ev = read_parquet_memo(spark, path)
-    if lo is not None:
-        ev = ev.filter(
-            F.col(PARTITION_COL)
-            >= F.lit(_utc_date(lo).isoformat()).cast("date")
-        )
-    if hi is not None:
-        last = _utc_date(hi - dt.timedelta(microseconds=1))
-        ev = ev.filter(
-            F.col(PARTITION_COL) <= F.lit(last.isoformat()).cast("date")
-        )
-    if client_id is not None:
-        ev = ev.filter(F.col("user_id") == client_id)
-    ev, ts = filter_raw_ts(ev, lo, hi)
-    df = ev.select(
-        F.col("event_id"),
-        ts.alias("ts"),
-        F.col("user_id").cast("string").alias("client"),
-        F.col("props").alias("domain"),
-        (
-            F.when(F.col("event_type").isin(*EVENT_ALLOWED), F.lit("Allowed"))
-            .when(F.col("event_type").isin(*EVENT_BLOCKED), F.lit("Blocked"))
-            .otherwise(F.lit("Other"))
-        ).alias("status_type"),
-        F.col("value").alias("reply_time"),
-    )
-    return enrich_time(df, "ts")
+    ev = prune_dates(read_parquet_memo(spark, path), lo, hi)
+    return project_fact(ev, lo, hi, client_id)
 
 
 def write_events_time_sorted(
@@ -286,54 +236,10 @@ def write_events_time_sorted(
     invalidate_read_memo(spark, path)
 
 
-def zorder_path(sf_dir: str) -> str:
-    import hashlib
-
-    root = os.environ.get(
-        "SPARK_GRAFT_LAYOUT_DIR",
-        os.path.join(tempfile.gettempdir(), "phlts_layout"),
-    )
-    ap = os.path.abspath(sf_dir.rstrip("/"))
-    digest = hashlib.md5(ap.encode()).hexdigest()[:8]
-    return os.path.join(
-        root, f"{os.path.basename(ap) or 'events'}-{digest}", "events_zorder"
-    )
-
-
 def ensure_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotent z-layout materialization (same freshness/staging
-    discipline as layout.ensure_layout: source (mtime_ns, size) meta,
-    pid-unique staging dir, atomic rename)."""
-    path = zorder_path(sf_dir)
-    key = (spark.sparkContext.applicationId, path)
-    if key in _ZLAYOUT_READY:
-        return path
-
-    def _fresh() -> bool:
-        cur = _src_stat(sf_dir)
-        if cur is None or not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return False
-        try:
-            with open(os.path.join(path, _META_FILE)) as f:
-                return f.read().strip() == cur
-        except OSError:
-            return False
-
-    if not _fresh():
-        src_stat = _src_stat(sf_dir)
-        staging = f"{path}.staging.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
-        write_events_zordered(spark, sf_dir, staging)
-        with open(os.path.join(staging, _META_FILE), "w") as f:
-            f.write(src_stat or "")
-        if _fresh():
-            shutil.rmtree(staging, ignore_errors=True)
-        else:
-            shutil.rmtree(path, ignore_errors=True)
-            os.rename(staging, path)
-        invalidate_read_memo(spark, path)
-    _ZLAYOUT_READY.add(key)
-    return path
+    """Materialize (once) the z-ordered layout of sf_dir and return
+    its path (layout._materialize)."""
+    return _materialize(spark, sf_dir, "events_zorder", write_events_zordered)
 
 
 def scan_events_zordered(
@@ -347,20 +253,4 @@ def scan_events_zordered(
     predicates (user_id equality, [lo, hi) raw-ts range — both reach
     the parquet reader as PushedFilters and prune via the tight
     per-file min/max the z-sort created)."""
-    ev = read_parquet_memo(spark, path)
-    if client_id is not None:
-        ev = ev.filter(F.col("user_id") == client_id)
-    ev, ts = filter_raw_ts(ev, lo, hi)
-    df = ev.select(
-        F.col("event_id"),
-        ts.alias("ts"),
-        F.col("user_id").cast("string").alias("client"),
-        F.col("props").alias("domain"),
-        (
-            F.when(F.col("event_type").isin(*EVENT_ALLOWED), F.lit("Allowed"))
-            .when(F.col("event_type").isin(*EVENT_BLOCKED), F.lit("Blocked"))
-            .otherwise(F.lit("Other"))
-        ).alias("status_type"),
-        F.col("value").alias("reply_time"),
-    )
-    return enrich_time(df, "ts")
+    return project_fact(read_parquet_memo(spark, path), lo, hi, client_id)

@@ -13,8 +13,6 @@ Usage: python scripts/query.py <subcommand> [args]
     bench [name ...] [--sf sf_dir]       bench.py's timing loop over a subset
 
 sf_dir defaults to the sf0.01 test data (bench: sf0.1).
-scans, paths, dump and bench read the events tier through the
-date-partitioned layout, as bench.py does (SPARK_GRAFT_USE_LAYOUT).
 Every plan walk goes through plans/metrics._walk.
 """
 
@@ -411,8 +409,6 @@ def main(argv: list | None = None) -> int:
     s.add_argument("names", nargs="*")
     s.add_argument("--sf", default="/root/testdata/sf0.1")
     args = p.parse_args(argv)
-    if args.cmd in ("scans", "paths", "dump", "bench"):
-        os.environ.setdefault("SPARK_GRAFT_USE_LAYOUT", "1")
     return args.fn(args)
 
 

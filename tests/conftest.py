@@ -38,3 +38,40 @@ def make_fact(spark: SparkSession, rows: list[tuple]) -> "DataFrame":  # noqa: F
         "status_type string, reply_time double",
     )
     return enrich_time(df, "ts")
+
+
+def duck_fact_rows(
+    sf_dir: str, lo=None, hi=None, client=None,
+    cols: str = "event_id, epoch_us(ts), status_type",
+) -> list:
+    """Sorted ``cols`` rows of DuckDB's FACT_CTE over the flat
+    ``events.parquet`` in [lo, hi) (tz-aware bounds taken at their UTC
+    instant) and for one client — the reference for a layout scan that
+    shares no code with it."""
+    import duckdb
+
+    from piholelongtermstats_spark.sources.events import FACT_CTE
+
+    def _utc(t: dt.datetime) -> dt.datetime:
+        return t.astimezone(UTC).replace(tzinfo=None) if t.tzinfo else t
+
+    where = ["TRUE"]
+    if lo is not None:
+        where.append(f"ts >= TIMESTAMP '{_utc(lo)}'")
+    if hi is not None:
+        where.append(f"ts < TIMESTAMP '{_utc(hi)}'")
+    if client is not None:
+        where.append(f"client = '{client}'")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+    sql = FACT_CTE + f"SELECT {cols} FROM fact WHERE {' AND '.join(where)}"
+    return sorted(con.sql(sql).fetchall())
+
+
+def fact_rows(df) -> list:
+    """Sorted (event_id, epoch µs, status_type) rows of a fact frame,
+    comparable with duck_fact_rows."""
+    from pyspark.sql import functions as F
+
+    cols = (F.col("event_id"), F.unix_micros("ts"), F.col("status_type"))
+    return sorted(tuple(r) for r in df.select(*cols).collect())

@@ -89,12 +89,10 @@ def test_m11_plan_shapes(spark):
 
     p = plan("client_retention")
     assert "Window" not in p, p
-    import os
-    if not os.environ.get("SPARK_GRAFT_USE_LAYOUT"):
-        p2 = plan("rollup_delta")
-        assert p2.count("PushedFilters: [IsNotNull(ts)") >= 2 or p2.count(
-            "GreaterThanOrEqual(ts"
-        ) + p2.count("LessThan(ts") >= 2, p2
+    p2 = plan("rollup_delta")
+    assert p2.count("PushedFilters: [IsNotNull(ts)") >= 2 or p2.count(
+        "GreaterThanOrEqual(ts"
+    ) + p2.count("LessThan(ts") >= 2, p2
 
 
 def test_rolling_active_clients_constructed(spark):

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from piholelongtermstats_spark.operators import skew
 from piholelongtermstats_spark.sources import bucketing
 from piholelongtermstats_spark.sources.parquet import load_table
+from tests.conftest import duck_fact_rows, fact_rows
 
 SF = "/root/testdata/sf0.001"
 
@@ -108,12 +109,11 @@ def test_date_partitioned_scan_prunes_partitions(spark, tmp_path_factory):
     """r3 VERDICT #7: the S4 range scan over the date-partitioned
     layout must prune whole date DIRECTORIES at plan time
     (PartitionFilters on p_date), keep the exact raw-ts bounds as
-    PushedFilters for the boundary days, and return exactly what the
-    flat-layout scan returns."""
+    PushedFilters for the boundary days, and return exactly what
+    DuckDB's fact derivation returns over the flat file."""
     import datetime as dt
 
     from piholelongtermstats_spark.sources import layout
-    from piholelongtermstats_spark.sources.events import dns_fact
 
     path = str(tmp_path_factory.mktemp("evpart") / "events_by_date")
     layout.write_events_date_partitioned(spark, SF, path)
@@ -140,12 +140,9 @@ def test_date_partitioned_scan_prunes_partitions(spark, tmp_path_factory):
     # exact ts bounds still reach the parquet row groups
     assert "PushedFilters" in plan and "ts" in plan.split("PushedFilters")[1][:200], plan
 
-    # row-for-row parity with the flat layout
-    flat = dns_fact(spark, SF, lo=lo, hi=hi)
-    assert scan.count() == flat.count()
-    assert (
-        scan.select("event_id").exceptAll(flat.select("event_id")).count() == 0
-    )
+    # row-for-row parity with the DuckDB reference
+    expected = duck_fact_rows(SF, lo, hi)
+    assert fact_rows(scan) == expected and expected
 
 
 def test_date_partitioned_scan_tz_aware_bounds(spark, tmp_path_factory):
@@ -157,7 +154,6 @@ def test_date_partitioned_scan_tz_aware_bounds(spark, tmp_path_factory):
     import datetime as dt
 
     from piholelongtermstats_spark.sources import layout
-    from piholelongtermstats_spark.sources.events import dns_fact
 
     path = str(tmp_path_factory.mktemp("evpart_tz") / "events_by_date")
     layout.write_events_date_partitioned(spark, SF, path)
@@ -171,15 +167,31 @@ def test_date_partitioned_scan_tz_aware_bounds(spark, tmp_path_factory):
     hi = dt.datetime(2024, 1, 12, 10, 0, 0, tzinfo=tz14)
 
     scan = layout.scan_events_date_partitioned(spark, path, lo, hi)
-    flat = dns_fact(spark, SF, lo=lo, hi=hi)
-    assert scan.count() == flat.count()
-    assert (
-        scan.select("event_id").exceptAll(flat.select("event_id")).count() == 0
-    )
+    expected = duck_fact_rows(SF, lo, hi)
+    assert fact_rows(scan) == expected and expected
     # the pruned window is the UTC dates [2024-01-05, 2024-01-11]
     plan = _explain(scan)
     pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert pf and "2024-01-05" in pf[0] and "2024-01-11" in pf[0], pf[0]
+
+
+def test_dns_fact_scans_date_layout(spark):
+    """dns_fact has one scan path, the date-partitioned layout, with
+    no environment switch: [lo, hi) prunes p_date directories at plan
+    time and bounds the stored ts in the parquet reader."""
+    import datetime as dt
+
+    from piholelongtermstats_spark.sources.events import dns_fact
+
+    lo = dt.datetime(2024, 1, 5, 6)
+    hi = dt.datetime(2024, 1, 12)
+    plan = _explain(dns_fact(spark, SF, lo, hi))
+    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+    assert pf and "(p_date" in pf[0], plan
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert pushed, plan
+    assert "GreaterThanOrEqual(ts," in pushed[0], pushed[0]
+    assert "LessThan(ts," in pushed[0], pushed[0]
 
 
 def test_bucketed_join_revenue_no_exchange_under_join(spark):
@@ -262,18 +274,11 @@ def test_dynamic_partition_pruning_on_date_layout(spark, tmp_path_factory):
     m = executed_plan_metrics(joined, keys=("numPartitions",))
     assert m.get("numPartitions", 10**9) < n_days / 2, (m, n_days)
     assert n_days == 30
-    # values match a non-partitioned computation
-    from piholelongtermstats_spark.sources.events import dns_fact
+    # values match DuckDB's fact derivation over the flat file
+    from collections import Counter
 
-    flat = (
-        dns_fact(spark, SF)
-        .withColumn("d", F.to_date("date"))
-        .join(dim.select("d"), "d")
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    flat_rows = {str(r["d"]): r["cnt"] for r in flat.collect()}
-    assert rows == flat_rows
+    days = Counter(str(d) for (d,) in duck_fact_rows(SF, cols="CAST(date AS DATE)"))
+    assert rows == {d: days[d] for d in rows}
 
 
 def test_aqe_splits_skewed_join_partitions(spark):

@@ -1,6 +1,6 @@
 """Z-order clustered layout (sources/zorder.py): Morton-interleave
 unit math, measured row-group pruning evidence vs the time-sorted
-baseline, and layout-transparency (z-scan ≡ flat-scan rows).
+baseline, and layout-transparency (z-scan ≡ DuckDB's FACT_CTE rows).
 
 The pruning numbers are EXECUTED evidence (scan numOutputRows = rows
 surviving the parquet reader's row-group statistics filter, before
@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.plans.metrics import _walk
 from piholelongtermstats_spark.sources import zorder
-from piholelongtermstats_spark.sources.events import dns_fact, filter_raw_ts
+from piholelongtermstats_spark.sources.events import filter_raw_ts
+from tests.conftest import duck_fact_rows, fact_rows
 
 SF = "/root/testdata/sf0.01"
 
@@ -77,8 +78,8 @@ def test_time_dim_still_prunes_on_zlayout(spark, layouts):
     give; the layout writes INT64 micros exactly for this)."""
     zp, tp = layouts
     lo, hi = dt.datetime(2024, 1, 10), dt.datetime(2024, 1, 12)
-    zf, _ = filter_raw_ts(spark.read.parquet(zp), lo, hi)
-    tf, _ = filter_raw_ts(spark.read.parquet(tp), lo, hi)
+    zf = filter_raw_ts(spark.read.parquet(zp), lo, hi)
+    tf = filter_raw_ts(spark.read.parquet(tp), lo, hi)
     z, t = _scan_rows(zf.select("event_id")), _scan_rows(tf.select("event_id"))
     total = spark.read.parquet(zp).count()
     assert t <= z, (t, z)  # sort leader stays best on its own dim
@@ -86,15 +87,14 @@ def test_time_dim_still_prunes_on_zlayout(spark, layouts):
 
 
 def test_zscan_matches_flat_scan(spark, layouts):
-    """Layout transparency: the z-ordered scan returns row-for-row the
-    flat dns_fact result for the same (client, window) predicate."""
+    """Layout transparency: the z-ordered scan returns row-for-row
+    DuckDB's fact over the flat file for the same (client, window)
+    predicate."""
     zp, _ = layouts
     lo, hi = dt.datetime(2024, 1, 10), dt.datetime(2024, 1, 18)
     zdf = zorder.scan_events_zordered(spark, zp, client_id=7, lo=lo, hi=hi)
-    flat = dns_fact(spark, SF, lo, hi).filter(F.col("client") == "7")
-    zrows = sorted((r.event_id, r.ts, r.status_type) for r in zdf.collect())
-    frows = sorted((r.event_id, r.ts, r.status_type) for r in flat.collect())
-    assert zrows == frows and len(zrows) > 0
+    expected = duck_fact_rows(SF, lo, hi, client="7")
+    assert fact_rows(zdf) == expected and expected
 
 
 def test_ensure_layout_idempotent(spark, tmp_path, monkeypatch):
@@ -137,8 +137,7 @@ def test_zdate_combined_pruning_beats_both_baselines(
 
     def _pred(df):
         df = df.filter(F.col("user_id") == 42)
-        df, _ = filter_raw_ts(df, lo, hi)
-        return df.select("event_id")
+        return filter_raw_ts(df, lo, hi).select("event_id")
 
     def _dated(path):
         df = spark.read.parquet(path)
@@ -161,11 +160,9 @@ def test_zdate_combined_pruning_beats_both_baselines(
 
 def test_zdate_scan_matches_flat_scan(spark, composed_layout):
     """Layout transparency for the composition: scan_events_zdate
-    returns row-for-row the flat dns_fact result."""
+    returns row-for-row DuckDB's fact over the flat file."""
     zd, _ = composed_layout
     lo, hi = dt.datetime(2024, 1, 10), dt.datetime(2024, 1, 18)
     zdf = zorder.scan_events_zdate(spark, zd, client_id=7, lo=lo, hi=hi)
-    flat = dns_fact(spark, SF, lo, hi).filter(F.col("client") == "7")
-    zrows = sorted((r.event_id, r.ts, r.status_type) for r in zdf.collect())
-    frows = sorted((r.event_id, r.ts, r.status_type) for r in flat.collect())
-    assert zrows == frows and len(zrows) > 0
+    expected = duck_fact_rows(SF, lo, hi, client="7")
+    assert fact_rows(zdf) == expected and expected
