@@ -28,7 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.functions.exclude import exclude_domains
-from piholelongtermstats_spark.operators import plotdata, stats
+from piholelongtermstats_spark.operators import plotdata, stats, timeagg
 from piholelongtermstats_spark.session import ensure_session_defaults
 from piholelongtermstats_spark.sources.daterange import date_range_epochs
 from piholelongtermstats_spark.sources.events import dns_fact
@@ -61,9 +61,9 @@ def run_dashboard(
     fact = fact.persist()
 
     frames = plotdata.generate_plot_data(fact)
-    rollup = plotdata.hourly_agg(fact)
+    rollup = timeagg.hourly_rollup(fact)
     return {
-        "stats": stats.compute_stats(fact, timezone or "UTC"),
+        "stats": stats.compute_stats(fact),
         "plot_data": plotdata.to_payload(frames) if collect_plots else frames,
         "hourly_agg": rollup,
         "fact": fact,

@@ -24,41 +24,3 @@ def ellipsize(col: Column, max_len: int = 45, keep: int = 20) -> Column:
         )
     )
 
-
-def duration_string(seconds: Column) -> Column:
-    """Decompose a seconds quantity into '{d}d,{h}h and {m}min'.
-
-    Reference: Timedelta decomposition at stats.py:25-29 (F10).
-    """
-    s = seconds.cast("long")
-    days = (s / 86400).cast("long")
-    hours = ((s % 86400) / 3600).cast("long")
-    mins = ((s % 3600) / 60).cast("long")
-    return F.format_string("%dd,%dh and %dmin", days, hours, mins)
-
-
-def fmt_date_long(ts: Column) -> Column:
-    """'%d %B %Y' → e.g. '05 January 2024' (stats.py:162-185)."""
-    return F.date_format(ts, "dd MMMM yyyy")
-
-
-def fmt_hhmm(ts: Column) -> Column:
-    """'%H:%M' (stats.py:343, 355)."""
-    return F.date_format(ts, "HH:mm")
-
-
-def fmt_span(ts: Column) -> Column:
-    """'%-d-%-m-%Y (%H:%M)' — non-zero-padded day/month (stats.py:17-20)."""
-    return F.date_format(ts, "d-M-yyyy (HH:mm)")
-
-
-def fmt_precise(ts: Column) -> Column:
-    """'%d-%b %Y %H:%M:%S.%f'[:-4] → 2-digit fractional (stats.py:392-400)."""
-    return F.date_format(ts, "dd-MMM yyyy HH:mm:ss.SS")
-
-
-def pct(numer: Column, denom: Column, digits: int = 4) -> Column:
-    """count/total*100 with div-by-zero → 0.0 (stats.py:43-48, F13)."""
-    return F.when(denom > 0, F.round(numer * 100.0 / denom, digits)).otherwise(
-        F.lit(0.0)
-    )

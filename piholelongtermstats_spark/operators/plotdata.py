@@ -2,8 +2,9 @@
 
 Reference: ``generate_plot_data`` (plot.py:12-162) builds 10 small
 frames consumed by the Dash figures, and
-``prepare_hourly_aggregated_data`` (process.py:86-113) builds the
-resident hourly rollup that every interactive callback re-queries
+``prepare_hourly_aggregated_data`` (process.py:86-113, here
+``timeagg.hourly_rollup``) builds the resident hourly rollup that
+every interactive callback re-queries
 (plot.py:165-364) — the reference's one real performance idea
 (materialized pre-aggregation, SURVEY.md §4 O5), which we keep.
 
@@ -65,12 +66,6 @@ def generate_plot_data(fact: DataFrame, top_k_clients: int = 5) -> dict[str, Dat
         "allowed_day_hour_heatmap": heat(fact, F.col("status_type") == "Allowed"),
         "top_clients": top_clients,
     }
-
-
-def hourly_agg(fact: DataFrame) -> DataFrame:
-    """The resident rollup (process.py:100-113). Persist this (cache
-    or parquet) — the interactive path below never touches ``fact``."""
-    return timeagg.hourly_rollup(fact)
 
 
 def filtered_timeseries(rollup: DataFrame, client: str | None = None) -> DataFrame:

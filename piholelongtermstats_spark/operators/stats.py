@@ -1,24 +1,30 @@
 """M5 — the full stats surface: every scalar of the reference's
 ``compute_stats`` dict (stats.py:474-528; keys asserted in
-tests/test_stats.py:67-291) assembled from shared intermediates.
+tests/test_stats.py:67-291) from one collect.
 
 The reference makes ~40 eager passes over its frame (one per metric
-family, with del/gc in between — stats.py:143-144 etc.). Here the
-enriched fact table is cached once and the whole surface is produced
-by 7 collect round-trips (r3 VERDICT #9: asserted ≤8 in
-tests/test_stats_surface.py), each collecting only ranked/aggregated
-rows; families with tiny results are UNIONed into one job so their
-subplans share the scan:
+family, with del/gc in between — stats.py:143-144 etc.). Here every
+family is one grouping set of a single aggregate over the enriched
+fact, told apart by ``grouping_id()``:
 
-  J1 global scalars (counts, span, reply stats)     — 1 row
-  J2 (day_period × status × client) tops            — ≤9 rows
-  J3 (day_period × status × domain [× client]) tops — ≤9 rows
-  J4 persistent client ∪ diverse client ∪ uniques   — ≤3 rows
-  J5 per-day rollup ∪ per-hour rollup               — days+24 rows
-     (weekday averages derive from the per-day rows DRIVER-side —
-     exact integer sums, one double division, same IEEE result)
-  J6 longest streaks                                — ≤3 rows
-  J7 idle gap top-1 ∪ avg gap per status            — ≤3 rows
+  ()                                  global scalars (counts, span, reply stats)
+  client, day_period+client,          top client per scope (All/Day/Night)
+  status_type+client,                   × status (Any/Allowed/Blocked)
+  day_period+status_type+client
+  status_type+domain+client,          top domain and its top client per
+  day_period+status_type+domain+client  scope × status; persistent pair
+  domain+client                       most diverse client
+  domain                              unique domains (clients: the client set)
+  date+day_name                       per-day rollup (weekday averages derive
+                                      driver-side: exact integer sums, one
+                                      double division)
+  hour                                per-hour rollup
+
+Unique and diverse counts are row counts over sets, not countDistinct,
+which would add a second Expand to the aggregate. One rank pass picks
+every top-1, and only top-1 rows and the small date/hour sets reach the
+driver. The streak and gap kernels (operators/sequential.py) join the
+same collect.
 
 Every top-1 pins the tie-break (cnt DESC, key ASC) — the pandas
 ``idxmax`` first-seen behavior is not reproducible in a distributed
@@ -38,6 +44,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import sequential
+
+# Grouping columns in grouping_id() bit order, most significant first.
+_DIMS = ("day_period", "status_type", "domain", "client", "date", "day_name", "hour")
+_SETS = (
+    (),
+    ("client",),
+    ("day_period", "client"),
+    ("status_type", "client"),
+    ("day_period", "status_type", "client"),
+    ("status_type", "domain", "client"),
+    ("day_period", "status_type", "domain", "client"),
+    ("domain", "client"),
+    ("domain",),
+    ("date", "day_name"),
+    ("hour",),
+)
+# The global row on empty input, where grouping sets emit no () row.
+_NO_ROWS = {
+    "cnt": 0, "min_ts": None, "max_ts": None, "blocked": 0, "allowed": 0,
+    "day_n": 0, "avg_rt": None, "max_rt": None, "min_rt": None,
+}
+
+
+def _gid(*cols: str) -> int:
+    """grouping_id() of the grouping set ``cols``: one bit per
+    rolled-up dimension."""
+    n = len(_DIMS)
+    return sum(1 << (n - 1 - i) for i, d in enumerate(_DIMS) if d not in cols)
 
 
 def _fmt_span(ts: dt.datetime | None) -> str:
@@ -63,89 +97,92 @@ def _fmt_precise(ts: dt.datetime | None) -> str:
     return ts.strftime("%d-%b %Y %H:%M:%S.%f")[:-4] if ts else "N/A"
 
 
-def _top1(rows: list, scope: str, status: str, key: str) -> tuple[Any, int]:
-    """Pick the collected top-1 for a (day_period-scope, status bucket)."""
-    for r in rows:
-        if r["scope"] == scope and r["status_type"] == status:
-            return r[key], r["cnt"]
-    return "N/A", 0
+def _ranked_groups(fact: DataFrame) -> DataFrame:
+    """The grouping-sets aggregate, cut to the rows the dict reads.
 
-
-def _scoped_tops(fact: DataFrame, key: str) -> list:
-    """Top-1 `key` per (scope ∈ {All, Day, Night}) × (status ∈
-    {Any, Allowed, Blocked}) in ONE job.
-
-    One (day_period, status_type, key) aggregate; the All/Any rollups
-    are re-aggregations of that small intermediate, not re-scans
-    (the reference filters the raw frame 2×3 times —
-    stats.py:215-216, 236-264, 285-314).
+    Each (gid, day_period, status_type) partition is one scope ×
+    status of one set (a rolled-up column is NULL). Per partition:
+    rn_cnt ranks (cnt DESC, client, domain) — top client, or the
+    persistent (client, domain) pair; rn_dom ranks the domain total
+    first — top domain, then that domain's top client; rn_div ranks
+    each client's distinct-domain count nd. n_clients/n_domains count
+    the partition's non-NULL keys (countDistinct ignores NULL too).
     """
-    base = fact.groupBy("day_period", "status_type", key).agg(
-        F.count(F.lit(1)).alias("cnt")
+    status = F.col("status_type")
+    rt = F.abs(F.col("reply_time"))
+    groups = fact.groupingSets([list(s) for s in _SETS], *_DIMS).agg(
+        F.grouping_id().alias("gid"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.min("ts").alias("min_ts"),
+        F.max("ts").alias("max_ts"),
+        F.sum(F.when(status == "Blocked", 1).otherwise(0)).alias("blocked"),
+        F.sum(F.when(status == "Allowed", 1).otherwise(0)).alias("allowed"),
+        F.sum(F.when(F.col("day_period") == "Day", 1).otherwise(0)).alias("day_n"),
+        F.avg(rt).alias("avg_rt"),
+        F.max(rt).alias("max_rt"),
+        F.min(rt).alias("min_rt"),
     )
-    variants = []
-    for scope_col, status_col in [
-        (F.lit("All"), F.lit("Any")),
-        (F.lit("All"), F.col("status_type")),
-        (F.col("day_period"), F.lit("Any")),
-        (F.col("day_period"), F.col("status_type")),
-    ]:
-        variants.append(
-            base.groupBy(
-                scope_col.alias("scope"), status_col.alias("status_type"), key
-            ).agg(F.sum("cnt").alias("cnt"))
-        )
-    from functools import reduce
-
-    cube = reduce(lambda a, b: a.unionByName(b), variants)
-    w = Window.partitionBy("scope", "status_type").orderBy(
-        F.col("cnt").desc(), F.col(key).asc()
-    )
+    # every window partitions by `part` plus at most one key, so one
+    # exchange on `part` serves them all
+    part = ("gid", "day_period", "status_type")
+    w = Window.partitionBy(*part)
+    cnt, dom_cnt, nd = (F.col(c).desc() for c in ("cnt", "dom_cnt", "nd"))
     return (
-        cube.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        .collect()
+        groups.withColumn("dom_cnt", F.sum("cnt").over(Window.partitionBy(*part, "domain")))
+        .withColumn("nd", F.count("domain").over(Window.partitionBy(*part, "client")))
+        .withColumn("n_clients", F.count("client").over(w))
+        .withColumn("n_domains", F.count("domain").over(w))
+        .withColumn("rn_cnt", F.row_number().over(w.orderBy(cnt, "client", "domain")))
+        .withColumn("rn_dom", F.row_number().over(w.orderBy(dom_cnt, "domain", cnt, "client")))
+        .withColumn("rn_div", F.row_number().over(w.orderBy(nd, "client")))
+        .filter(
+            F.col("gid").isin(_gid("date", "day_name"), _gid("hour"))
+            | (F.least("rn_cnt", "rn_dom", "rn_div") == 1)
+        )
     )
 
 
-def compute_stats(fact: DataFrame, timezone: str = "UTC") -> dict[str, Any]:
+def compute_stats(fact: DataFrame) -> dict[str, Any]:
     """The reference's full stats dict (§2.11 contract).
 
     ``fact`` is the enriched fact table (sources/events.dns_fact or
-    functions/derive.preprocess output). The assembly runs many jobs
-    over it, so the caller persists it and owns its release
+    functions/derive.preprocess output). The aggregate and the kernels
+    each scan it, so the caller persists it and owns its release
     (api.run_dashboard does both); unpersisting here would drop the
     caller's cache too, since Spark caches by plan.
     """
+    # streaks (stats.py:324-366) use the STITCHED kernel — identical
+    # result (tests pin equality), but no unpartitioned window over the
+    # fact table; gaps: stats.py:369-408, 382-388
+    frame = _ranked_groups(fact)
+    for kernel, out in (
+        ("streak", sequential.longest_streaks_stitched(fact)),
+        ("gap", sequential.idle_gaps_top(fact, 1)),
+        ("avg_gap", sequential.avg_gap_per_status(fact)),
+    ):
+        frame = frame.unionByName(
+            out.withColumn("kernel", F.lit(kernel)), allowMissingColumns=True
+        )
+    rows = frame.collect()
+
+    def top1(rank: str, cols: tuple, dp: str | None = None, st: str | None = None):
+        """Rank-1 row of set ``cols`` in partition (dp, st), or None."""
+        gid = _gid(*cols)
+        return next(
+            (
+                r for r in rows
+                if r["gid"] == gid and r[rank] == 1
+                and r["day_period"] == dp and r["status_type"] == st
+            ),
+            None,
+        )
+
     stats: dict[str, Any] = {}
 
-    # J1 — global scalars (stats.py:14-52, 441-455)
-    a = F.abs(F.col("reply_time"))
-    # conditional counts coalesce to 0: sum() over ZERO rows is NULL
-    # (an all-excluded or empty-window run must degrade to zeros, not
-    # crash — the reference refuses empty input upstream app.py:158-164,
-    # this engine serves the zeros)
-    g = fact.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("ts").alias("min_ts"),
-        F.max("ts").alias("max_ts"),
-        F.coalesce(
-            F.sum(F.when(F.col("status_type") == "Blocked", 1).otherwise(0)),
-            F.lit(0),
-        ).alias("bc"),
-        F.coalesce(
-            F.sum(F.when(F.col("status_type") == "Allowed", 1).otherwise(0)),
-            F.lit(0),
-        ).alias("ac"),
-        F.coalesce(
-            F.sum(F.when(F.col("day_period") == "Day", 1).otherwise(0)), F.lit(0)
-        ).alias("day_n"),
-        F.avg(a).alias("avg_rt"),
-        F.max(a).alias("max_rt"),
-        F.min(a).alias("min_rt"),
-    ).collect()[0]
-    n = g["n"]
+    # global scalars (stats.py:14-52, 441-455); an empty window serves
+    # zeros (the reference refuses empty input upstream app.py:158-164)
+    g = top1("rn_cnt", ()) or _NO_ROWS
+    n = g["cnt"]
     stats["n_data_points"] = n
     stats["total_queries"] = n
     stats["min_date"] = _fmt_span(g["min_ts"])
@@ -153,164 +190,53 @@ def compute_stats(fact: DataFrame, timezone: str = "UTC") -> dict[str, Any]:
     span_s = (g["max_ts"] - g["min_ts"]).total_seconds() if n else None
     stats["data_span_days"] = round(span_s / 86400, 2) if span_s is not None else 0.0
     stats["data_span_str"] = _fmt_duration(span_s)
-    stats["blocked_count"] = g["bc"]
-    stats["allowed_count"] = g["ac"]
-    stats["blocked_pct"] = round(g["bc"] * 100.0 / n, 2) if n else 0.0
-    stats["allowed_pct"] = round(g["ac"] * 100.0 / n, 2) if n else 0.0
+    stats["blocked_count"] = g["blocked"]
+    stats["allowed_count"] = g["allowed"]
+    stats["blocked_pct"] = round(g["blocked"] * 100.0 / n, 2) if n else 0.0
+    stats["allowed_pct"] = round(g["allowed"] * 100.0 / n, 2) if n else 0.0
     # all-NULL reply times → 0.0 (stats.py:452-455, test_stats.py:420-442)
-    stats["avg_reply_time"] = round(g["avg_rt"] * 1000, 3) if g["avg_rt"] is not None else 0.0
-    stats["max_reply_time"] = round(g["max_rt"] * 1000, 3) if g["max_rt"] is not None else 0.0
-    stats["min_reply_time"] = round(g["min_rt"] * 1000, 3) if g["min_rt"] is not None else 0.0
-
-    # J2 — client tops across scopes (stats.py:55-75, 221-234, 270-283)
-    ct = _scoped_tops(fact, "client")
-    stats["top_client"], _ = _top1(ct, "All", "Any", "client")
-    stats["top_allowed_client"], _ = _top1(ct, "All", "Allowed", "client")
-    stats["top_blocked_client"], _ = _top1(ct, "All", "Blocked", "client")
-    for scope in ("Day", "Night"):
-        p = scope.lower()
-        stats[f"{p}_top_client"], _ = _top1(ct, scope, "Any", "client")
-        stats[f"{p}_top_allowed_client"], _ = _top1(ct, scope, "Allowed", "client")
-        stats[f"{p}_top_blocked_client"], _ = _top1(ct, scope, "Blocked", "client")
+    for key, col in (("avg", "avg_rt"), ("max", "max_rt"), ("min", "min_rt")):
+        stats[f"{key}_reply_time"] = round(g[col] * 1000, 3) if g[col] is not None else 0.0
     stats["day_total_queries"] = g["day_n"]
     stats["night_total_queries"] = n - g["day_n"]
 
-    # J3 — domain tops + each top domain's top client (stats.py:78-113,
-    # 236-264, 285-314): one (day_period, status, domain, client) cube.
-    cube = fact.groupBy("day_period", "status_type", "domain", "client").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    scoped = cube.groupBy(
-        F.lit("All").alias("scope"), "status_type", "domain", "client"
-    ).agg(F.sum("cnt").alias("cnt")).unionByName(
-        cube.select(
-            F.col("day_period").alias("scope"), "status_type", "domain", "client", "cnt"
-        )
-    )
-    dom_tot = scoped.groupBy("scope", "status_type", "domain").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    w_dom = Window.partitionBy("scope", "status_type").orderBy(
-        F.col("cnt").desc(), F.col("domain").asc()
-    )
-    top_dom = dom_tot.withColumn("rn", F.row_number().over(w_dom)).filter(
-        F.col("rn") == 1
-    ).drop("rn")
-    w_cli = Window.partitionBy("scope", "status_type", "domain").orderBy(
-        F.col("cnt").desc(), F.col("client").asc()
-    )
-    top_cli = scoped.withColumn("rn", F.row_number().over(w_cli)).filter(
-        F.col("rn") == 1
-    ).select("scope", "status_type", "domain", F.col("client").alias("top_cli"))
-    dt_rows = top_dom.join(
-        F.broadcast(top_cli), ["scope", "status_type", "domain"]
-    ).collect()
+    # client tops (stats.py:55-75, 221-234, 270-283), domain tops and
+    # each top domain's top client (stats.py:78-113, 236-264, 285-314)
+    for prefix, dp in (("", None), ("day_", "Day"), ("night_", "Night")):
+        scope = ("day_period",) if dp else ()
+        for infix, st in (("", None), ("allowed_", "Allowed"), ("blocked_", "Blocked")):
+            status = ("status_type",) if st else ()
+            r = top1("rn_cnt", scope + status + ("client",), dp, st)
+            stats[f"{prefix}top_{infix}client"] = r["client"] if r else "N/A"
+            if st:
+                r = top1("rn_dom", scope + status + ("domain", "client"), dp, st)
+                key = f"{prefix}top_{infix}domain"
+                stats[key] = r["domain"] if r else "N/A"
+                stats[f"{key}_count"] = r["dom_cnt"] if r else 0
+                stats[f"{key}_client"] = r["client"] if r else "N/A"
 
-    def dom_stats(prefix: str, scope: str, status: str) -> None:
-        dom, cnt = _top1(dt_rows, scope, status, "domain")
-        stats[f"{prefix}_domain"] = dom
-        stats[f"{prefix}_domain_count"] = cnt
-        cli = next(
-            (
-                r["top_cli"]
-                for r in dt_rows
-                if r["scope"] == scope and r["status_type"] == status
-            ),
-            "N/A",
-        )
-        stats[f"{prefix}_domain_client"] = cli
+    # persistent client, diverse client, uniques (stats.py:119-146, 418-439)
+    pers = top1("rn_cnt", ("status_type", "domain", "client"), st="Blocked")
+    stats["most_persistent_client"] = pers["client"] if pers else "N/A"
+    stats["most_persistent_blocked_domain"] = pers["domain"] if pers else "N/A"
+    stats["repeat_attempts"] = pers["cnt"] if pers else 0
+    div = top1("rn_div", ("domain", "client"))
+    stats["most_diverse_client"] = div["client"] if div else "N/A"
+    stats["unique_domains_count"] = div["nd"] if div else 0
+    doms, clients = top1("rn_cnt", ("domain",)), top1("rn_cnt", ("client",))
+    stats["unique_domains"] = doms["n_domains"] if doms else 0
+    stats["unique_clients"] = clients["n_clients"] if clients else 0
 
-    dom_stats("top_allowed", "All", "Allowed")
-    dom_stats("top_blocked", "All", "Blocked")
-    dom_stats("day_top_allowed", "Day", "Allowed")
-    dom_stats("day_top_blocked", "Day", "Blocked")
-    dom_stats("night_top_allowed", "Night", "Allowed")
-    dom_stats("night_top_blocked", "Night", "Blocked")
-
-    # J4 — persistent client ∪ diverse client ∪ uniques in ONE job
-    # (stats.py:119-146, 418-439): three ≤1-row subplans with a
-    # harmonized (tag, s1, s2, v1, v2) schema share the cached scan.
-    pers_q = (
-        fact.filter(F.col("status_type") == "Blocked")
-        .groupBy("client", "domain")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("client").asc(), F.col("domain").asc())
-        .limit(1)
-        .select(
-            F.lit("pers").alias("tag"),
-            F.col("client").alias("s1"),
-            F.col("domain").alias("s2"),
-            F.col("cnt").alias("v1"),
-            F.lit(None).cast("long").alias("v2"),
-        )
-    )
-    div_q = (
-        fact.groupBy("client")
-        .agg(F.countDistinct("domain").alias("nd"))
-        .orderBy(F.col("nd").desc(), F.col("client").asc())
-        .limit(1)
-        .select(
-            F.lit("div").alias("tag"),
-            F.col("client").alias("s1"),
-            F.lit(None).cast("string").alias("s2"),
-            F.col("nd").alias("v1"),
-            F.lit(None).cast("long").alias("v2"),
-        )
-    )
-    uniq_q = fact.agg(
-        F.countDistinct("domain").alias("ud"), F.countDistinct("client").alias("uc")
-    ).select(
-        F.lit("uniq").alias("tag"),
-        F.lit(None).cast("string").alias("s1"),
-        F.lit(None).cast("string").alias("s2"),
-        F.col("ud").alias("v1"),
-        F.col("uc").alias("v2"),
-    )
-    j4 = {r["tag"]: r for r in pers_q.unionByName(div_q).unionByName(uniq_q).collect()}
-    pers, div, u = j4.get("pers"), j4.get("div"), j4.get("uniq")
-    stats["most_persistent_client"] = pers["s1"] if pers else "N/A"
-    stats["most_persistent_blocked_domain"] = pers["s2"] if pers else "N/A"
-    stats["repeat_attempts"] = pers["v1"] if pers else 0
-    stats["most_diverse_client"] = div["s1"] if div else "N/A"
-    stats["unique_domains_count"] = div["v1"] if div else 0
-    stats["unique_domains"] = u["v1"] if u else 0
-    stats["unique_clients"] = u["v2"] if u else 0
-
-    # J5 — per-day rollup ∪ per-hour rollup in ONE job
-    # (stats.py:153-206): both are tiny (|days| + 24 rows). Weekday
-    # averages derive from the daily rows driver-side — exact integer
-    # sums with one double division, the same IEEE value the previous
-    # two-level Spark aggregate produced.
-    daily_q = fact.groupBy("date", "day_name").agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col("status_type") == "Blocked", 1).otherwise(0)).alias("blocked"),
-        F.sum(F.when(F.col("status_type") == "Allowed", 1).otherwise(0)).alias("allowed"),
-    ).select(
-        F.lit("daily").alias("tag"),
-        F.col("date").alias("ts_k"),
-        F.col("day_name").alias("s1"),
-        F.col("total").alias("v1"),
-        F.col("blocked").alias("v2"),
-        F.col("allowed").alias("v3"),
-    )
-    hour_q = fact.groupBy("hour").agg(F.count(F.lit(1)).alias("cnt")).select(
-        F.lit("hour").alias("tag"),
-        F.lit(None).cast("timestamp").alias("ts_k"),
-        F.lit(None).cast("string").alias("s1"),
-        F.col("hour").alias("v1"),
-        F.col("cnt").alias("v2"),
-        F.lit(None).cast("long").alias("v3"),
-    )
-    j5 = daily_q.unionByName(hour_q).collect()
-    drows = [r for r in j5 if r["tag"] == "daily"]
-    hrows = [r for r in j5 if r["tag"] == "hour"]
-    for metric, key in (("queries", "v1"), ("blocked", "v2"), ("allowed", "v3")):
+    # per-day and per-hour rollups (stats.py:153-206)
+    drows = [r for r in rows if r["gid"] == _gid("date", "day_name")]
+    hrows = [r for r in rows if r["gid"] == _gid("hour")]
+    for metric, key in (("queries", "cnt"), ("blocked", "blocked"), ("allowed", "allowed")):
         if drows:
-            most = max(drows, key=lambda r: (r[key], -r["ts_k"].timestamp()))
-            least = min(drows, key=lambda r: (r[key], r["ts_k"].timestamp()))
-            stats[f"date_most_{metric}"] = _fmt_date_long(most["ts_k"])
+            most = max(drows, key=lambda r: (r[key], -r["date"].timestamp()))
+            least = min(drows, key=lambda r: (r[key], r["date"].timestamp()))
+            stats[f"date_most_{metric}"] = _fmt_date_long(most["date"])
             stats[f"count_most_{metric}"] = most[key]
-            stats[f"date_least_{metric}"] = _fmt_date_long(least["ts_k"])
+            stats[f"date_least_{metric}"] = _fmt_date_long(least["date"])
             stats[f"count_least_{metric}"] = least[key]
         else:
             stats[f"date_most_{metric}"] = stats[f"date_least_{metric}"] = "N/A"
@@ -318,7 +244,7 @@ def compute_stats(fact: DataFrame, timezone: str = "UTC") -> dict[str, Any]:
     if drows:
         per_day: dict[str, list[int]] = {}
         for r in drows:
-            per_day.setdefault(r["s1"], []).append(r["v1"])
+            per_day.setdefault(r["day_name"], []).append(r["cnt"])
         wk = [
             {"day_name": name, "avg_q": float(sum(tot)) / len(tot)}
             for name, tot in per_day.items()
@@ -333,24 +259,25 @@ def compute_stats(fact: DataFrame, timezone: str = "UTC") -> dict[str, Any]:
         stats["most_active_day"] = stats["least_active_day"] = "N/A"
         stats["most_active_day_avg"] = stats["least_active_day_avg"] = 0
     if hrows:
-        most_h = max(hrows, key=lambda r: (r["v2"], -r["v1"]))
-        least_h = min(hrows, key=lambda r: (r["v2"], r["v1"]))
-        stats["most_active_hour"] = int(most_h["v1"])
-        stats["avg_queries_most"] = most_h["v2"]
-        stats["least_active_hour"] = int(least_h["v1"])
-        stats["avg_queries_least"] = least_h["v2"]
+        most_h = max(hrows, key=lambda r: (r["cnt"], -r["hour"]))
+        least_h = min(hrows, key=lambda r: (r["cnt"], r["hour"]))
+        stats["most_active_hour"] = int(most_h["hour"])
+        stats["avg_queries_most"] = most_h["cnt"]
+        stats["least_active_hour"] = int(least_h["hour"])
+        stats["avg_queries_least"] = least_h["cnt"]
     else:
         stats["most_active_hour"] = stats["least_active_hour"] = "N/A"
         stats["avg_queries_most"] = stats["avg_queries_least"] = 0
 
-    # J6 — longest streaks (stats.py:324-366); the STITCHED kernel —
-    # identical result (tests pin equality), but no unpartitioned
-    # window over the fact table in the one path every dashboard load
-    # hits (the global-window variant is the verification reference).
-    srows = sequential.longest_streaks_stitched(fact).collect()
+    def kernel_row(kernel: str, status: str | None = None):
+        return next(
+            (r for r in rows if r["kernel"] == kernel and r["status_type"] == status),
+            None,
+        )
+
     for status in ("Blocked", "Allowed"):
         key = status.lower()
-        row = next((r for r in srows if r["status_type"] == status), None)
+        row = kernel_row("streak", status)
         stats[f"longest_streak_length_{key}"] = row["streak_len"] if row else 0
         stats[f"longest_streak_date_{key}"] = (
             _fmt_date_long(row["start_ts"]) if row else "N/A"
@@ -358,38 +285,17 @@ def compute_stats(fact: DataFrame, timezone: str = "UTC") -> dict[str, Any]:
         stats[f"longest_streak_hour_{key}"] = (
             row["start_ts"].strftime("%H:%M") if row else "N/A"
         )
-
-    # J7 — idle gap top-1 ∪ avg gap per status in ONE job
-    # (stats.py:369-408, 382-388)
-    gap_q = sequential.idle_gaps_top(fact, 1).select(
-        F.lit("gap").alias("tag"),
-        F.lit(None).cast("string").alias("status_type"),
-        F.col("gap_us").cast("long").alias("v1"),
-        F.col("prev_ts").alias("t1"),
-        F.col("next_ts").alias("t2"),
-        F.lit(None).cast("double").alias("d1"),
-    )
-    avg_q2 = sequential.avg_gap_per_status(fact).select(
-        F.lit("avg").alias("tag"),
-        "status_type",
-        F.lit(None).cast("long").alias("v1"),
-        F.lit(None).cast("timestamp").alias("t1"),
-        F.lit(None).cast("timestamp").alias("t2"),
-        F.col("avg_gap_sec").alias("d1"),
-    )
-    j7 = gap_q.unionByName(avg_q2).collect()
-    gap = [r for r in j7 if r["tag"] == "gap"]
+    gap = kernel_row("gap")
     if gap:
-        stats["max_idle_ms"] = round(gap[0]["v1"] / 1000.0, 3)
-        stats["before_gap"] = _fmt_precise(gap[0]["t1"])
-        stats["after_gap"] = _fmt_precise(gap[0]["t2"])
+        stats["max_idle_ms"] = round(gap["gap_us"] / 1000.0, 3)
+        stats["before_gap"] = _fmt_precise(gap["prev_ts"])
+        stats["after_gap"] = _fmt_precise(gap["next_ts"])
     else:
         stats["max_idle_ms"] = 0.0
         stats["before_gap"] = stats["after_gap"] = "N/A"
-    grows = [r for r in j7 if r["tag"] == "avg"]
     for status in ("Blocked", "Allowed"):
-        row = next((r for r in grows if r["status_type"] == status), None)
-        val = row["d1"] if row else None
+        row = kernel_row("avg_gap", status)
+        val = row["avg_gap_sec"] if row else None
         stats[f"avg_time_between_{status.lower()}"] = (
             round(val, 2) if val is not None else 0.0
         )

@@ -49,19 +49,6 @@ def top_clients_per_status(fact: DataFrame) -> DataFrame:
     )
 
 
-def top_domains_per_status(fact: DataFrame, k: int = 1) -> DataFrame:
-    """Top-K domains within each status bucket (stats.py:78-91)."""
-    counts = fact.groupBy("status_type", "domain").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("status_type").orderBy(
-        F.col("cnt").desc(), F.col("domain").asc()
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("status_type", "domain", "cnt", "rn")
-    )
-
-
 def top_domain_top_client(fact: DataFrame) -> DataFrame:
     """For each status bucket: the top domain AND that domain's top
     client — the reference's two-pass scalar-subquery pattern

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from piholelongtermstats_spark.operators import plotdata
+from piholelongtermstats_spark.operators import plotdata, timeagg
 from tests.conftest import make_fact
 
 
@@ -57,7 +57,7 @@ def test_ellipsization(spark):
 def test_interactive_rollup_path(spark):
     """Callback queries hit only the rollup (plot.py:165-364)."""
     fact = make_fact(spark, _rows())
-    rollup = plotdata.hourly_agg(fact).cache()
+    rollup = timeagg.hourly_rollup(fact).cache()
     full = plotdata.filtered_timeseries(rollup)
     assert full.groupBy().sum("cnt").collect()[0][0] == 100  # zero-fill preserves totals
     one = plotdata.filtered_timeseries(rollup, "c0")

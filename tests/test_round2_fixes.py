@@ -195,7 +195,7 @@ def test_client_activity_zero_fills_hour_spine(spark):
     first and last active hour, nothing outside that span, and an
     EMPTY frame for an absent client (the 'no data' figure,
     plot.py:297-319)."""
-    from piholelongtermstats_spark.operators import plotdata
+    from piholelongtermstats_spark.operators import plotdata, timeagg
 
     fact = make_fact(
         spark,
@@ -205,7 +205,7 @@ def test_client_activity_zero_fills_hour_spine(spark):
             (3, "2024-01-01T05:30:00", "10.0.0.2", "b.com", "Blocked", 0.02),
         ],
     )
-    rollup = plotdata.hourly_agg(fact)
+    rollup = timeagg.hourly_rollup(fact)
     rows = {
         r["hour_bucket"].hour: r["cnt"]
         for r in plotdata.client_activity(rollup, "10.0.0.1").collect()

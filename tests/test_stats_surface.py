@@ -110,9 +110,9 @@ def test_empty_fact_degrades_to_zeros(spark):
 
 
 def test_stats_surface_collect_round_trips(spark, monkeypatch):
-    """r3 VERDICT #9: the whole ~60-scalar surface must assemble in at
-    most 8 driver round-trips (it currently uses 7 — tiny-result
-    families are UNIONed into shared jobs). Counted by instrumenting
+    """The whole ~60-scalar surface assembles in exactly one driver
+    round-trip: one grouping-sets aggregate with the streak and gap
+    kernels unioned into the same collect. Counted by instrumenting
     DataFrame.collect, which every family funnels through.
 
     Patches the CLASSIC DataFrame class: in PySpark 4 instances are
@@ -130,7 +130,7 @@ def test_stats_surface_collect_round_trips(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
     stats = compute_stats(make_fact(spark, _mixed_rows()))
-    assert 0 < calls["n"] <= 8, calls["n"]
+    assert calls["n"] == 1, calls["n"]
     # the batching must not change a single value
     assert stats["total_queries"] == 48
     assert stats["unique_domains"] == 4
