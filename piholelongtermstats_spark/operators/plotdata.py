@@ -32,28 +32,25 @@ def generate_plot_data(fact: DataFrame, top_k_clients: int = 5) -> dict[str, Dat
     UDF (plot.py:26-27) but as a native expression.
     """
     short_dom = ellipsize(F.col("domain")).alias("domain")
+
+    def top_domains(status: str) -> DataFrame:
+        return (
+            fact.filter(F.col("status_type") == status)
+            .select(short_dom)
+            .groupBy("domain")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .orderBy(F.col("cnt").desc(), F.col("domain").asc())
+            .limit(10)
+        )
+
     top_clients = topk.top_k_counts(fact, "client", top_k_clients)
     heat = timeagg.day_hour_heatmap
     return {
         # stacked bar: top-K clients × status (plot.py:29-35)
         "top_clients_stacked": topk.semi_join_top_clients(fact, top_k_clients),
         # top blocked/allowed domains, ellipsized (plot.py:52-70)
-        "blocked_df": (
-            fact.filter(F.col("status_type") == "Blocked")
-            .select(short_dom)
-            .groupBy("domain")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("domain").asc())
-            .limit(10)
-        ),
-        "allowed_df": (
-            fact.filter(F.col("status_type") == "Allowed")
-            .select(short_dom)
-            .groupBy("domain")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("domain").asc())
-            .limit(10)
-        ),
+        "blocked_df": top_domains("Blocked"),
+        "allowed_df": top_domains("Allowed"),
         # daily mean reply time in ms (plot.py:76-82)
         "reply_time_df": timeagg.daily_avg_reply(fact),
         # dropdown inventory (plot.py:151-162)

@@ -6,18 +6,22 @@ gaps-and-islands streak detection (stats.py:506-515 flags,
 stats.py:324-366 aggregation).
 
 Total-order caveat (SURVEY.md §2.6): a naive ``Window.orderBy(ts)``
-with no partitioning funnels the whole table through one task. The gap
-operators here use the distributed decomposition instead:
+with no partitioning funnels the whole table through one task. The
+operators here avoid it:
 
-  1. lag within date partitions (parallel — date is derived from ts so
-     partition order ⊂ global order), plus
-  2. cross-midnight gaps from a per-date first/last summary (one row
-     per date — tiny), unioned in.
+  - idle gaps: lag within date partitions (parallel — date is derived
+    from ts so partition order ⊂ global order), plus cross-midnight
+    gaps from a per-date first/last summary (one row per date — tiny),
+    unioned in;
+  - streaks: a run's key is (status, count of other-status events
+    before it), built from per-date row numbers plus prefix sums of
+    per-(date, status) and per-(month, status) counts — the only
+    unpartitioned window orders ≤3 rows per month;
+  - average gap per status: the gaps of one status telescope to
+    last ts − first ts, so it is one aggregate with no window at all.
 
-This yields exactly the global-order result with no single-task stage
-over the fact table. Streak detection keeps a documented global-order
-window on a 3-column projection (ts, id, status) — see
-``longest_streaks`` for the scale plan.
+Each yields exactly the global-order result. ``longest_streaks`` keeps
+the global-order window as the verification reference.
 
 Event order is pinned to (ts, event_id): timestamps can tie, and an
 unpinned order would be nondeterministic under oracle hashing.
@@ -25,62 +29,43 @@ unpinned order would be nondeterministic under oracle hashing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def consecutive_gaps(
-    df: DataFrame,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    date_col: str = "date",
-    stream_keys: list[str] | None = None,
-) -> DataFrame:
+def consecutive_gaps(df: DataFrame) -> DataFrame:
     """(prev_ts, next_ts, gap_us) for every consecutive pair in global
-    (ts, id) order — distributed via date-partition + boundary stitch.
-
-    ``stream_keys`` splits the input into independent ordered streams
-    (e.g. per status_type) computed in ONE pass: all windows partition
-    by (stream_keys…, date), the boundary summary by stream key — no
-    per-stream filtered re-scans. Output carries the stream keys.
+    (ts, event_id) order — distributed via date-partition + boundary
+    stitch.
 
     gap_us is exact integer microseconds (both engines compute
     epoch-microsecond BIGINT subtraction — no float drift).
     """
-    keys = list(stream_keys or [])
-    cols = [F.col(k) for k in keys] + [
-        F.col(date_col).alias("_d"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-    ]
-    ev = df.select(*cols)
+    ev = df.select(F.col("date").alias("_d"), "ts", "event_id")
 
-    w_day = Window.partitionBy(*keys, "_d").orderBy("_ts", "_id")
+    w_day = Window.partitionBy("_d").orderBy("ts", "event_id")
     within = (
-        ev.withColumn("prev_ts", F.lag("_ts").over(w_day))
+        ev.withColumn("prev_ts", F.lag("ts").over(w_day))
         .filter(F.col("prev_ts").isNotNull())
-        .select(*keys, "prev_ts", F.col("_ts").alias("next_ts"))
+        .select("prev_ts", F.col("ts").alias("next_ts"))
     )
 
-    per_day = ev.groupBy(*keys, "_d").agg(
-        F.min(F.struct("_ts", "_id")).alias("first_ev"),
-        F.max(F.struct("_ts", "_id")).alias("last_ev"),
+    per_day = ev.groupBy("_d").agg(
+        F.min(F.struct("ts", "event_id")).alias("first_ev"),
+        F.max(F.struct("ts", "event_id")).alias("last_ev"),
     )
-    # one row per (stream, date) — the single-task window is over a
-    # tiny summary, and partitions by stream key when keys are given
-    w_days = Window.partitionBy(*keys).orderBy("_d") if keys else Window.orderBy("_d")
+    # one row per date — the single-task window is over a tiny summary
+    w_days = Window.orderBy("_d")
     boundary = (
         per_day.withColumn("prev_last", F.lag("last_ev").over(w_days))
         .filter(F.col("prev_last").isNotNull())
         .select(
-            *keys,
-            F.col("prev_last._ts").alias("prev_ts"),
-            F.col("first_ev._ts").alias("next_ts"),
+            F.col("prev_last.ts").alias("prev_ts"),
+            F.col("first_ev.ts").alias("next_ts"),
         )
     )
     both = within.unionByName(boundary)
     return both.select(
-        *keys,
         "prev_ts",
         "next_ts",
         (F.unix_micros(F.col("next_ts")) - F.unix_micros(F.col("prev_ts"))).alias(
@@ -105,28 +90,24 @@ def avg_gap_per_status(fact: DataFrame) -> DataFrame:
     """Average seconds between consecutive same-status queries
     (stats.py:382-388, A17), for Blocked and Allowed.
 
-    Consecutive-within-status ⇒ independent per-status streams, all
-    computed in ONE pass via stream-keyed windows (no per-status
-    re-scan of the fact table). A status with <2 events still yields
-    a row (NULL avg) via the left join against the status spine.
-    Exact integer sum of gap_us, one division ⇒ deterministic double.
+    The n − 1 gaps of one status telescope to last ts − first ts, so
+    the average is (max µs − min µs) / (n − 1): one aggregate, one row
+    per status (Blocked, then Allowed), NULL below 2 events. The span
+    is an exact integer, so the double equals the summed-gaps one.
     """
-    statuses = ("Blocked", "Allowed")
-    gaps = consecutive_gaps(
-        fact.filter(F.col("status_type").isin(*statuses)),
-        stream_keys=["status_type"],
-    )
-    agg = gaps.groupBy("status_type").agg(
-        F.round(
-            F.sum("gap_us").cast("double") / F.count(F.lit(1)) / 1000000.0, 6
-        ).alias("avg_gap_sec")
-    )
-    spine = fact.sparkSession.createDataFrame(
-        [(s,) for s in statuses], "status_type string"
-    )
-    return spine.join(agg, "status_type", "left").select(
-        "status_type", "avg_gap_sec"
-    )
+    us = F.unix_micros(F.col("ts"))
+
+    def avg_gap(status: str) -> Column:
+        mine = F.col("status_type") == status
+        n = F.count(F.when(mine, 1))
+        span = F.max(F.when(mine, us)) - F.min(F.when(mine, us))
+        avg = F.round(span.cast("double") / (n - 1) / 1000000.0, 6)
+        return F.struct(
+            F.lit(status).alias("status_type"),
+            F.when(n >= 2, avg).alias("avg_gap_sec"),
+        )
+
+    return fact.agg(F.inline(F.array(avg_gap("Blocked"), avg_gap("Allowed"))))
 
 
 def longest_streaks(fact: DataFrame) -> DataFrame:
@@ -169,127 +150,71 @@ def longest_streaks(fact: DataFrame) -> DataFrame:
         .select("status_type", "streak_len", "start_ts")
     )
 
-def _runs_per_date(fact: DataFrame) -> DataFrame:
-    """Within-date gaps-and-islands: one row per (date, run) with
-    run_idx (ordinal within the date), status_type, streak_len,
-    start_ts, plus n_runs for the date. Fully parallel — every window
-    is PARTITIONED BY date."""
-    ev = fact.select(
-        F.col("date").alias("_d"), "ts", "event_id", "status_type"
-    )
-    w = Window.partitionBy("_d").orderBy("ts", "event_id")
-    chg = F.when(
-        F.lag("status_type").over(w).isNull()
-        | (F.lag("status_type").over(w) != F.col("status_type")),
-        1,
-    ).otherwise(0)
-    run_idx = F.sum("chg").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    runs = (
-        ev.withColumn("chg", chg)
-        .withColumn("run_idx", run_idx)
-        .groupBy("_d", "run_idx", "status_type")
-        .agg(F.count(F.lit(1)).alias("streak_len"), F.min("ts").alias("start_ts"))
-    )
-    n_runs = Window.partitionBy("_d")
-    return runs.withColumn("n_runs", F.max("run_idx").over(n_runs))
+
+def _others_before(order: str, *part: str) -> Column:
+    """Over (part…, order, status_type, n) count rows: the events of
+    other statuses at earlier ``order`` values of the partition."""
+    upto = Window.partitionBy(*part).orderBy(order)  # RANGE frame: peers included
+    at = Window.partitionBy(*part, order)
+    own = Window.partitionBy(*part, "status_type").orderBy(order)
+    n = F.col("n")
+    return F.sum(n).over(upto) - F.sum(n).over(at) - (F.sum(n).over(own) - n)
 
 
 def longest_streaks_stitched(fact: DataFrame) -> DataFrame:
     """Distributed longest_streaks: identical result, no global-order
     window over the fact table — nor over the per-date summary.
 
-    Decomposition (the §7 M4 scale plan), two stitch levels:
+    Two events of one status share a run exactly when no event of
+    another status lies between them, so a run's key is (status, number
+    of other-status events before it). That number is the sum of three
+    parallel parts:
 
-      1. runs within each date partition (parallel);
-      2. only each date's FIRST and LAST run can merge across
-         midnight; interior runs are already maximal. The reduced
-         boundary sequence is ≤2 rows per date;
-      3. level-1 stitch: chain-merge adjacent boundary runs iff same
-         status AND the dates differ (adjacent runs WITHIN a date
-         always alternate status by maximality; first/last of the
-         same date are only pseudo-adjacent in the reduced sequence —
-         the date-differs guard keeps them apart). This window is
-         PARTITIONED BY calendar month — parallel even over decades;
-      4. level-2 stitch: the same reduction one level up. Only each
-         month's first and last chain can merge across a month
-         boundary; interior chains are final. The guard is now
-         month-differs (two same-month chains adjacent in the reduced
-         sequence were already split deliberately at level 1). The
-         one remaining global window orders ≤2 rows per MONTH — ~24
-         rows/year, trivially single-task safe at any horizon;
-      5. interior runs ∪ interior chains ∪ stitched month-chains →
-         top-1 per status, tie-break pinned (len DESC, start_ts ASC)
-         like the reference oracle.
+      1. within the date: row_number over the date minus row_number
+         over (date, status);
+      2. earlier dates of the month: prefix sums of the per-(date,
+         status) counts, partitioned by month;
+      3. earlier months: prefix sums of the per-(month, status) counts
+         — the one unpartitioned window, ≤3 rows per month.
+
+    The offsets (≤3 rows per date) broadcast-join onto the events; a
+    group by (status, key) yields the runs, then top-1 per status with
+    the pinned tie-break (len DESC, start_ts ASC) like the oracle.
     """
-    # Materialize the run relation ONCE (r12, guide §2.4/§5 — the
-    # quality_lift_table localCheckpoint idiom): `runs` feeds both the
-    # interior cut and the boundary-edge chain path, and without a
-    # materialization each consumer re-executes the fact-wide
-    # date-partitioned window + aggregation (PLAN_AUDIT showed 20
-    # WindowExec instances for this query from the fan-out). The run
-    # relation is run-count-sized (maximal streaks per date — far
-    # below the event count), so the checkpoint is cheap at any scale.
-    runs = _runs_per_date(fact).localCheckpoint(eager=True)
-    interior = runs.filter(
-        (F.col("run_idx") > 1) & (F.col("run_idx") < F.col("n_runs"))
-    ).select("status_type", "streak_len", "start_ts")
-
-    edge = runs.filter(
-        (F.col("run_idx") == 1) | (F.col("run_idx") == F.col("n_runs"))
-    ).withColumn("_m", F.trunc("_d", "month"))
-    w_seq = Window.partitionBy("_m").orderBy("_d", "run_idx")
-    new_chain = F.when(
-        F.lag("status_type").over(w_seq).isNull()
-        | (F.lag("status_type").over(w_seq) != F.col("status_type"))
-        | (F.lag("_d").over(w_seq) == F.col("_d")),
-        1,
-    ).otherwise(0)
-    chain_idx = F.sum("new_chain").over(
-        w_seq.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ev = fact.select(F.col("date").alias("_d"), "ts", "event_id", "status_type")
+    day = Window.partitionBy("_d").orderBy("ts", "event_id")
+    day_status = Window.partitionBy("_d", "status_type").orderBy("ts", "event_id")
+    local = ev.select(
+        "_d",
+        "status_type",
+        "ts",
+        (F.row_number().over(day) - F.row_number().over(day_status)).alias("_k"),
     )
-    chains = (
-        edge.withColumn("new_chain", new_chain)
-        .withColumn("chain_idx", chain_idx)
-        .groupBy("_m", "chain_idx", "status_type")
-        .agg(F.sum("streak_len").alias("streak_len"), F.min("start_ts").alias("start_ts"))
-        .withColumn("n_chains", F.max("chain_idx").over(Window.partitionBy("_m")))
-        # same fan-out (interior_chains + medge); ≤2 rows/date input,
-        # month-chain-sized output — materialize once (r12)
-        .localCheckpoint(eager=True)
+    # the counts reach the offsets in one linear chain (each month row
+    # carries its dates through the month level): a second consumer of
+    # the counts would scan the fact again, as Spark does not reuse an
+    # exchange over a cached relation
+    days = ev.groupBy(
+        F.trunc("_d", "month").alias("_m"), "_d", "status_type"
+    ).agg(F.count(F.lit(1)).alias("n"))
+    months = days.select(
+        "_m", "_d", "status_type", "n", _others_before("_d", "_m").alias("_dk")
+    ).groupBy("_m", "status_type").agg(
+        F.sum("n").alias("n"), F.collect_list(F.struct("_d", "_dk")).alias("_days")
     )
-    interior_chains = chains.filter(
-        (F.col("chain_idx") > 1) & (F.col("chain_idx") < F.col("n_chains"))
-    ).select("status_type", "streak_len", "start_ts")
-
-    medge = chains.filter(
-        (F.col("chain_idx") == 1) | (F.col("chain_idx") == F.col("n_chains"))
+    offsets = months.select(
+        "status_type", "_days", _others_before("_m").alias("_mk")
+    ).select("status_type", "_mk", F.inline("_days"))
+    runs = (
+        local.join(F.broadcast(offsets), ["_d", "status_type"])
+        .groupBy("status_type", F.col("_k") + F.col("_dk") + F.col("_mk"))
+        .agg(F.count(F.lit(1)).alias("streak_len"), F.min("ts").alias("start_ts"))
     )
-    w_m = Window.orderBy("_m", "chain_idx")  # ≤2 rows/month — tiny
-    new_chain2 = F.when(
-        F.lag("status_type").over(w_m).isNull()
-        | (F.lag("status_type").over(w_m) != F.col("status_type"))
-        | (F.lag("_m").over(w_m) == F.col("_m")),
-        1,
-    ).otherwise(0)
-    chain2_id = F.sum("new_chain2").over(
-        w_m.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    month_chains = (
-        medge.withColumn("new_chain2", new_chain2)
-        .withColumn("chain2_id", chain2_id)
-        .groupBy("chain2_id", "status_type")
-        .agg(F.sum("streak_len").alias("streak_len"), F.min("start_ts").alias("start_ts"))
-        .select("status_type", "streak_len", "start_ts")
-    )
-
-    candidates = interior.unionByName(interior_chains).unionByName(month_chains)
     w_top = Window.partitionBy("status_type").orderBy(
         F.col("streak_len").desc(), F.col("start_ts").asc()
     )
     return (
-        candidates.withColumn("rn", F.row_number().over(w_top))
+        runs.withColumn("rn", F.row_number().over(w_top))
         .filter(F.col("rn") == 1)
         .select("status_type", "streak_len", "start_ts")
     )

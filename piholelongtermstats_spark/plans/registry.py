@@ -1197,7 +1197,7 @@ SELECT status_type, streak_len, start_ts FROM (
 """,
 )
 def q_streaks_scale_2x(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """longest_streaks (two-level stitch) at 2× fact volume. The
+    """longest_streaks (prefix-count run keys) at 2× fact volume. The
     junction can legally merge the original's tail run with the
     copy's head run — the oracle's global-order SQL sees the same
     doubled sequence, so the comparison is exact either way."""

@@ -241,8 +241,13 @@ def test_stitched_equals_global_randomized(spark):
 
     rng = random.Random(20240813)
     statuses = ["Allowed", "Blocked", "Other"]
-    for trial in range(5):
-        t = dt.datetime(2024, 1, 1, rng.randrange(24), 0, 0)
+    # after the five Jan-1 starts: late December (month prefix sums
+    # across a year) and late in a month (runs across month ends)
+    starts = [(2024, 1, 1)] * 5 + [
+        (2023, 12, 27), (2024, 12, 30), (2024, 1, 29), (2024, 2, 28),
+    ]
+    for trial, (y, m, d) in enumerate(starts):
+        t = dt.datetime(y, m, d, rng.randrange(24), 0, 0)
         rows = []
         for i in range(rng.randrange(30, 120)):
             # mix of sub-minute bursts, hour steps, and >1-day gaps;
@@ -284,6 +289,53 @@ def test_avg_gap_single_pass_matches_filtered(spark):
             ).alias("a")
         ).collect()[0]["a"]
         assert got[st] == gaps
+
+
+def test_avg_gap_ties_and_two_event_status(spark):
+    """Tied timestamps and a status with exactly 2 events (one gap,
+    across midnight): the telescoped average equals the per-status
+    filtered consecutive_gaps mean."""
+    rows = [
+        (1, "2024-01-01T10:00:00", "c", "d", "Allowed", 1.0),
+        (2, "2024-01-01T10:00:00", "c", "d", "Allowed", 1.0),
+        (3, "2024-01-01T10:00:00", "c", "d", "Blocked", 1.0),
+        (4, "2024-01-01T23:59:59", "c", "d", "Allowed", 1.0),
+        (5, "2024-01-02T00:00:30", "c", "d", "Blocked", 1.0),
+        (6, "2024-01-02T00:00:30", "c", "d", "Allowed", 1.0),
+        (7, "2024-01-02T00:00:30", "c", "d", "Other", 1.0),
+        (8, "2024-01-03T07:00:01", "c", "d", "Allowed", 1.0),
+    ]
+    fact = make_fact(spark, rows)
+    got = {r["status_type"]: r["avg_gap_sec"]
+           for r in sequential.avg_gap_per_status(fact).collect()}
+    for st in ("Blocked", "Allowed"):
+        want = sequential.consecutive_gaps(
+            fact.filter(F.col("status_type") == st)
+        ).agg(
+            F.round(
+                F.sum("gap_us").cast("double") / F.count(F.lit(1)) / 1e6, 6
+            ).alias("a")
+        ).collect()[0]["a"]
+        assert got[st] == want
+    assert got["Blocked"] == 50430.0
+
+
+def test_sequential_kernels_build_without_jobs(spark):
+    """Building the stats-path streak and gap kernels is lazy: no Spark
+    job starts until the plan is collected."""
+    from piholelongtermstats_spark.sources.events import dns_fact
+
+    fact = dns_fact(spark, "/root/testdata/sf0.001")
+    sc = spark.sparkContext
+    group = "sequential-kernel-build"
+    sc.setJobGroup(group, "build the sequential kernels")
+    try:
+        sequential.longest_streaks_stitched(fact)
+        sequential.idle_gaps_top(fact, 1)
+        sequential.avg_gap_per_status(fact)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_approx_uniques_error_bound(spark):
