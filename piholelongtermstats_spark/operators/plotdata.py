@@ -69,27 +69,16 @@ def filtered_timeseries(rollup: DataFrame, client: str | None = None) -> DataFra
     """Interactive callback: per-status hourly series for one client
     (or all), zero-filled against the full hour spine — queries ONLY
     the rollup (plot.py:165-265, the reference's sub-second path).
+
+    The rollup is grouped once, so the spine bounds and the status
+    dimension are the whole table's; a client's absent cells sum to
+    NULL and fill to 0.
     """
-    src = rollup if client is None else rollup.filter(F.col("client") == client)
-    series = src.groupBy("hour_bucket", "status_type").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    bounds = rollup.agg(F.min("hour_bucket").alias("lo"), F.max("hour_bucket").alias("hi"))
-    spine = bounds.select(
-        F.explode(
-            F.sequence(F.col("lo"), F.col("hi"), F.expr("INTERVAL 1 HOUR"))
-        ).alias("hour_bucket")
-    )
-    dims = rollup.select("status_type").distinct()
-    return (
-        spine.crossJoin(F.broadcast(dims))
-        .join(F.broadcast(series), ["hour_bucket", "status_type"], "left")
-        .select(
-            "hour_bucket",
-            "status_type",
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-        )
-    )
+    cnt = F.col("cnt")
+    if client is not None:
+        cnt = F.when(F.col("client") == client, cnt)
+    series = rollup.groupBy("hour_bucket", "status_type").agg(F.sum(cnt).alias("cnt"))
+    return timeagg.zero_filled_hours(series, "status_type")
 
 
 def client_activity(rollup: DataFrame, client: str) -> DataFrame:
@@ -105,17 +94,7 @@ def client_activity(rollup: DataFrame, client: str) -> DataFrame:
         .groupBy("hour_bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    bounds = series.agg(
-        F.min("hour_bucket").alias("lo"), F.max("hour_bucket").alias("hi")
-    )
-    spine = bounds.select(
-        F.explode(
-            F.sequence(F.col("lo"), F.col("hi"), F.expr("INTERVAL 1 HOUR"))
-        ).alias("hour_bucket")
-    )
-    return spine.join(F.broadcast(series), "hour_bucket", "left").select(
-        "hour_bucket", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt")
-    )
+    return timeagg.zero_filled_hours(series)
 
 
 def to_payload(frames: dict[str, DataFrame]) -> dict:

@@ -14,7 +14,7 @@ double += reduction is order-dependent and would hash-mismatch.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -49,6 +49,12 @@ def weekday_avg(fact: DataFrame) -> DataFrame:
     )
 
 
+def _hour_bucket() -> Column:
+    """The one hour bucketing of event time, shared by the rollup and
+    every hourly series built from the fact."""
+    return F.date_trunc("HOUR", F.col("ts")).alias("hour_bucket")
+
+
 def hourly_rollup(fact: DataFrame) -> DataFrame:
     """The (hour-bucket, status_type, client) pre-aggregate —
     the reference's resident materialized view (process.py:100-104,
@@ -58,50 +64,55 @@ def hourly_rollup(fact: DataFrame) -> DataFrame:
     every dashboard query then reads the rollup, never the fact table
     (SURVEY.md §4 O5).
     """
-    return fact.groupBy(
-        F.date_trunc("HOUR", F.col("ts")).alias("hour_bucket"),
-        "status_type",
-        "client",
-    ).agg(F.count(F.lit(1)).alias("cnt"))
+    return fact.groupBy(_hour_bucket(), "status_type", "client").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
 
 
-def rollup_by_status(rollup: DataFrame) -> DataFrame:
-    """Collapse the client dimension (plot.py:182-187, A13) — partial
-    re-aggregation of the rollup, never the fact table."""
-    return rollup.groupBy("hour_bucket", "status_type").agg(
-        F.sum("cnt").alias("cnt")
+def zero_filled_hours(series: DataFrame, *dims: str) -> DataFrame:
+    """Zero-fill an hourly series against its hour spine × dims (J3,
+    plot.py:213-225 and 321-331): every hour from the series' first to
+    its last ``hour_bucket``, crossed with every value of each dim, and
+    ``cnt`` 0 where the series has no row (or a NULL ``cnt``).
+
+    ``series`` is grouped by (hour_bucket, *dims) with a BIGINT ``cnt``
+    column. One global aggregate folds it into its bounds, one value
+    set per dim and the list of its rows. One generator emits the
+    spine cells with ``cnt`` 0 followed by those rows, and a hash
+    aggregate sums ``cnt`` per cell — linear in the spine, where a
+    per-cell MAP lookup scans the whole map. The generator's output is
+    one partition, so the sum adds no exchange, and there is no join.
+    An empty series yields no rows.
+    """
+    folded = series.agg(
+        F.min("hour_bucket").alias("_lo"),
+        F.max("hour_bucket").alias("_hi"),
+        *[F.collect_set(d).alias(d) for d in dims],
+        F.collect_list(F.struct("hour_bucket", *dims, "cnt")).alias("_rows"),
+    )
+    cells = F.transform(
+        F.sequence("_lo", "_hi", F.expr("INTERVAL 1 HOUR")),
+        lambda h: F.struct(h.alias("hour_bucket")),
+    )
+    for d in dims:
+        cells = F.flatten(
+            F.transform(cells, lambda c: F.transform(d, lambda v: c.withField(d, v)))
+        )
+    cells = F.transform(cells, lambda c: c.withField("cnt", F.lit(0).cast("long")))
+    return (
+        folded.select(F.inline(F.concat(cells, "_rows")))
+        .groupBy("hour_bucket", *dims)
+        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
 def hour_spine_zerofill(fact: DataFrame) -> DataFrame:
-    """LEFT join the hourly series against a generated hour spine ×
-    status dimension, zero-filling missing buckets (plot.py:213-225, J3).
-
-    Spark shape: one-row min/max agg → sequence() → explode → crossJoin
-    the (tiny, distinct) status dimension → broadcast left join of the
-    aggregated series. The spine is bounded (hours in range), so the
-    crossJoin is safe at any fact-table scale.
-    """
-    series = rollup_by_status(hourly_rollup(fact))
-    bounds = fact.agg(
-        F.date_trunc("HOUR", F.min("ts")).alias("lo"),
-        F.date_trunc("HOUR", F.max("ts")).alias("hi"),
+    """Hourly per-status counts of the fact, zero-filled over the hour
+    spine × status dimension (plot.py:213-225, J3)."""
+    series = fact.groupBy(_hour_bucket(), "status_type").agg(
+        F.count(F.lit(1)).alias("cnt")
     )
-    spine = bounds.select(
-        F.explode(
-            F.sequence(F.col("lo"), F.col("hi"), F.expr("INTERVAL 1 HOUR"))
-        ).alias("hour_bucket")
-    )
-    dims = fact.select("status_type").distinct()
-    return (
-        spine.crossJoin(F.broadcast(dims))
-        .join(F.broadcast(series), ["hour_bucket", "status_type"], "left")
-        .select(
-            "hour_bucket",
-            "status_type",
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"),
-        )
-    )
+    return zero_filled_hours(series, "status_type")
 
 
 def day_hour_heatmap(fact: DataFrame, where=None) -> DataFrame:
@@ -209,7 +220,7 @@ def ffill_client_hourly(
     sel = fact.filter(F.col("client").isin(*clients))
     hourly = (
         sel.filter(F.col("reply_time").isNotNull())
-        .groupBy("client", F.date_trunc("HOUR", F.col("ts")).alias("hour_bucket"))
+        .groupBy("client", _hour_bucket())
         .agg(
             F.count(F.lit(1)).alias("n_obs"),
             # decimal sum → exact accumulation in ANY order, then ONE

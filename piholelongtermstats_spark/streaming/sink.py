@@ -9,8 +9,9 @@ is read-modify-write per affected partition inside foreachBatch:
   1. restrict the existing table to the partitions present in the
      batch (partition pruning — untouched dates are never read);
   2. anti-join existing rows against the batch's keys (survivors);
-  3. union survivors + batch rows, write with DYNAMIC partition
-     overwrite — only the affected date partitions are replaced.
+  3. union survivors + batch rows, write with the writer option
+     partitionOverwriteMode=dynamic — only the affected date
+     partitions are replaced, and the session conf is never touched.
 
 Idempotent: replaying a batch rewrites the same rows to the same
 values. At scale the same loop runs per trigger with partitions
@@ -32,21 +33,19 @@ PART_COL = "p_date"
 
 def merge_batch(spark: SparkSession, batch: DataFrame, target_dir: str) -> None:
     """Upsert one (possibly replayed) batch of rollup rows into the
-    date-partitioned parquet table at target_dir."""
+    date-partitioned parquet table at target_dir. An empty batch
+    writes nothing."""
     batch = batch.withColumn(PART_COL, F.to_date("hour_bucket")).cache()
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(conf_key, None)
     try:
-        if batch.isEmpty():
+        touched = [r[PART_COL] for r in batch.select(PART_COL).distinct().collect()]
+        if not touched:
             return
-        spark.conf.set(conf_key, "dynamic")
         try:
             existing = spark.read.parquet(target_dir)
         except Exception:  # first batch: nothing to merge
             existing = None
         out = batch
         if existing is not None:
-            touched = [r[PART_COL] for r in batch.select(PART_COL).distinct().collect()]
             survivors = existing.filter(F.col(PART_COL).isin(touched)).join(
                 batch.select(*KEY_COLS), KEY_COLS, "left_anti"
             )
@@ -61,15 +60,12 @@ def merge_batch(spark: SparkSession, batch: DataFrame, target_dir: str) -> None:
         out = out.repartition(PART_COL).localCheckpoint(eager=True)
         (
             out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(PART_COL)
             .parquet(target_dir)
         )
     finally:
         batch.unpersist()
-        if prev_mode is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_mode)
 
 
 def start_rollup_upsert(

@@ -265,7 +265,7 @@ def test_stitched_equals_global_randomized(spark):
 
 
 def test_avg_gap_single_pass_matches_filtered(spark):
-    """One-pass stream-keyed gaps == per-status filtered computation."""
+    """One-aggregate telescoped gaps == per-status filtered computation."""
     import datetime as dt
     import random
 

@@ -70,3 +70,36 @@ def test_interactive_rollup_path(spark):
     assert ghost.filter("cnt > 0").count() == 0
     assert ghost.count() > 0
     rollup.unpersist()
+
+
+JOIN_NODES = {
+    "BroadcastHashJoinExec",
+    "ShuffledHashJoinExec",
+    "SortMergeJoinExec",
+    "BroadcastNestedLoopJoinExec",
+    "CartesianProductExec",
+}
+
+
+def test_callbacks_join_free_single_scan(spark, tmp_path):
+    """Each callback is one aggregate plus one generator over the
+    stored rollup: its executed plan has no join node and scans the
+    rollup table exactly once."""
+    from piholelongtermstats_spark.plans.metrics import _walk
+
+    path = str(tmp_path / "rollup")
+    timeagg.hourly_rollup(make_fact(spark, _rows())).write.parquet(path)
+    rollup = spark.read.parquet(path)
+    for frame in (
+        plotdata.filtered_timeseries(rollup, "c0"),
+        plotdata.filtered_timeseries(rollup),
+        plotdata.client_activity(rollup, "c0"),
+    ):
+        frame.collect()
+        nodes = {
+            n.id(): n.getClass().getSimpleName()
+            for n in _walk(frame._jdf.queryExecution().executedPlan())
+        }
+        names = list(nodes.values())
+        assert not JOIN_NODES & set(names), names
+        assert names.count("FileSourceScanExec") == 1, names

@@ -5,7 +5,7 @@ Covers: broadcast-side fix in top_domain_top_client, de-broadcast +
 stop-shingle df_cap path in ngram_jaccard_pairs, pointer-jumping
 connected components (deep chains + convergence error), hardened
 embedding near-dup (adaptive planes, bucket cap, recall), zero-filled
-client_activity, two-level streak stitching across month boundaries,
+client_activity, streak stitching across month boundaries,
 and a 100k-row two-DB SQLite ingest round trip.
 """
 
@@ -220,18 +220,24 @@ def test_client_activity_zero_fills_hour_spine(spark):
 
 
 # ---------------------------------------------------------------------------
-# two-level streak stitching
+# streak stitching by other-status offsets
 # ---------------------------------------------------------------------------
 
 def test_streaks_stitch_across_month_boundaries(spark):
     """A streak spanning Jan→Feb→Mar must stitch through whole months
-    and match the single-window global formulation row-for-row."""
+    and match the single-window global formulation row-for-row.
+    Blocked events in December and earlier in January give the run a
+    non-zero month offset that differs from its January date offset,
+    so the month level is what keeps the run whole."""
     from piholelongtermstats_spark.operators.sequential import (
         longest_streaks,
         longest_streaks_stitched,
     )
 
     rows, eid = [], 0
+    for iso in ("2023-12-20T08:00:00", "2024-01-10T08:00:00", "2024-01-11T08:00:00"):
+        rows.append((eid, iso, "c2", "b.com", "Blocked", 0.02))
+        eid += 1
     # Jan 28 .. Mar 3: one long Allowed run covering a full month
     # boundary plus interleaved Blocked bursts inside single days
     day = dt.datetime(2024, 1, 28, 12, 0, 0)
@@ -255,7 +261,7 @@ def test_streaks_stitch_across_month_boundaries(spark):
 def test_streaks_stitched_no_date_level_global_window(spark):
     """The only unpartitioned window may order the MONTH-reduced
     sequence; a global window ordered by raw date (_d first) would be
-    the r1 shape the two-level stitch removes."""
+    the r1 shape the offset-keyed stitch removes."""
     import re
 
     from piholelongtermstats_spark.operators.sequential import (

@@ -244,6 +244,67 @@ def test_rollup_upsert_sink_incremental(spark, tmp_path):
     }
 
 
+ROLLUP_SCHEMA = "hour_bucket timestamp, status_type string, client string, cnt long"
+
+
+def _rollup_rows(spark, tgt):
+    return sorted(
+        (r["hour_bucket"], r["status_type"], r["client"], r["cnt"])
+        for r in spark.read.parquet(tgt).collect()
+    )
+
+
+def test_merge_batch_empty_batch_writes_nothing(spark, tmp_path):
+    """An empty batch creates no table at a fresh path and leaves an
+    existing table's rows as they are."""
+    import os
+
+    from piholelongtermstats_spark.streaming.sink import merge_batch
+
+    empty = spark.createDataFrame([], ROLLUP_SCHEMA)
+    fresh = str(tmp_path / "fresh")
+    merge_batch(spark, empty, fresh)
+    assert not os.path.exists(fresh)
+
+    tgt = str(tmp_path / "tgt")
+    h = dt.datetime.fromisoformat("2024-01-01T10:00:00")
+    batch = spark.createDataFrame([(h, "Allowed", "c1", 3)], ROLLUP_SCHEMA)
+    merge_batch(spark, batch, tgt)
+    before = _rollup_rows(spark, tgt)
+    merge_batch(spark, empty, tgt)
+    assert _rollup_rows(spark, tgt) == before == [(h, "Allowed", "c1", 3)]
+
+
+def test_merge_batch_leaves_session_conf_alone(spark, tmp_path):
+    """The merge overwrites only the batch's date partitions, and the
+    session's partitionOverwriteMode (the default, static) reads the
+    same before and after each merge."""
+    from piholelongtermstats_spark.streaming.sink import merge_batch
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    tgt = str(tmp_path / "tgt")
+    d1 = dt.datetime.fromisoformat("2024-01-01T10:00:00")
+    d2 = d1 + dt.timedelta(days=1)
+    merge_batch(
+        spark,
+        spark.createDataFrame(
+            [(d1, "Allowed", "c1", 1), (d2, "Blocked", "c2", 2)], ROLLUP_SCHEMA
+        ),
+        tgt,
+    )
+    assert spark.conf.get(key) == mode
+    batch = spark.createDataFrame([(d2, "Blocked", "c2", 5)], ROLLUP_SCHEMA)
+    merge_batch(spark, batch, tgt)
+    assert spark.conf.get(key) == mode
+    # the untouched day survives a static-mode session: the dynamic
+    # overwrite came from the writer, not from the conf
+    assert _rollup_rows(spark, tgt) == [
+        (d1, "Allowed", "c1", 1),
+        (d2, "Blocked", "c2", 5),
+    ]
+
+
 def _has_protobuf() -> bool:
     try:
         from google.protobuf import descriptor  # noqa: F401
