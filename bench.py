@@ -13,8 +13,13 @@ Timing contract (unchanged from r4): the per-query timer wraps plan
 CONSTRUCTION + execution — the driver's real unit of work. What r5
 changes is ATTRIBUTION (r4 VERDICT #4/#5): a full UNTIMED warm pass
 runs first, so every session-scoped cache (shared inputs incl. LSH
-pairs, quantizer training, the Jaccard exactness-guard probe, JVM/
-codegen) is materialized before any timer starts. r4's numbers had
+pairs, quantizer training, the Jaccard exactness-guard probe) is
+materialized before any timer starts. Generated code is NOT: the
+registry compiles more distinct classes than Spark's codegen cache
+holds (session.CODEGEN_CACHE_ENTRIES), so every timed pass recompiles
+most of them — measured on TOP_50 alone at sf0.001 (4 cores), each
+warm pass compiled about 1,070 classes at 1000 entries and about
+1,450 at 100, of about 1,265 distinct. r4's numbers had
 whichever query touched a shared cache first absorbing its build cost
 (dedup_clusters 0.03 ↔ 3.19 s round-over-round artifacts); now
 build_sec measures each query's OWN plan construction. Timed passes:
@@ -73,11 +78,12 @@ def time_queries(spark, sf_dir: str, names: list) -> dict:
     plan construction + collect, keeping each query's minimum.
 
     The warm pass materializes the partitioned layout, every shared
-    persisted input (plans/cache.py), the quantizer/probe memos, and
-    JVM/codegen state — the load-then-serve model: the reference
-    likewise preprocesses its resident frame before answering anything
-    (process.py:100-113). Also a correctness smoke: a query that throws
-    fails HERE, not mid-timing.
+    persisted input (plans/cache.py) and the quantizer/probe memos —
+    the load-then-serve model: the reference likewise preprocesses its
+    resident frame before answering anything (process.py:100-113).
+    Generated code is recompiled on every pass (module docstring).
+    Also a correctness smoke: a query that throws fails HERE, not
+    mid-timing.
     """
     for name in names:
         QUERIES[name](spark, sf_dir).collect()

@@ -20,11 +20,25 @@ Scale notes (100 TB / 1000-executor target):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
+logger = logging.getLogger(__name__)
+
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Size of Spark's generated-class cache (a STATIC conf, default 100,
+# least-recently-used eviction). A 30-day dashboard reload compiles
+# about 243 distinct classes, so at 100 every reload evicted its own
+# classes before the next one and compiled all of them again (241-244
+# compiles per reload, measured with CodegenMetrics over 16 perfbench
+# reloads in one session). A rollup_serve session compiles about 80 at
+# set-up plus 2 per upsert. 1000 keeps a reload's whole working set
+# resident with room for both workloads in one session; a reload then
+# compiles 2-12 classes. Override through get_spark(extra_conf=...).
+CODEGEN_CACHE_ENTRIES = 1000
+_CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
 
 
 def get_spark(
@@ -52,6 +66,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(_CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # PySpark 4's per-API-call site capture (error-message
@@ -81,9 +96,15 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     Per-session (not per-application) because runtime confs are
     session-scoped: `spark.newSession()` shares the applicationId but
     starts from fresh conf state and must be re-pinned. The confs set
-    here are not touched elsewhere at runtime (the one save/restore
-    site, streaming/sink.py, restores what it changes), so
+    here are not touched elsewhere at runtime (streaming/sink.py sets
+    no conf: dynamic partition overwrite is a writer option there), so
     once-per-session is safe.
+
+    Static confs cannot be applied to a session this package did not
+    build. The one that costs time is the generated-class cache size
+    (CODEGEN_CACHE_ENTRIES): a session whose cache is smaller
+    recompiles a dashboard reload's classes on every reload, so one
+    warning is logged per session when it reads below the constant.
     """
     if getattr(spark, "_phlts_defaults_applied", False):
         return spark
@@ -97,5 +118,13 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     # rejects by default; read as nanos-long and convert explicitly
     # (sources/events.py) with µs truncation matching DuckDB.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    cache_entries = int(spark.conf.get(_CODEGEN_CACHE_CONF))
+    if cache_entries < CODEGEN_CACHE_ENTRIES:
+        logger.warning(
+            "%s is %d, below %d: a dashboard reload will recompile its"
+            " generated classes on every run; set it when the session"
+            " is built",
+            _CODEGEN_CACHE_CONF, cache_entries, CODEGEN_CACHE_ENTRIES,
+        )
     spark._phlts_defaults_applied = True
     return spark

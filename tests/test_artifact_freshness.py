@@ -18,10 +18,14 @@ import re
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _registry_size() -> int:
+def _registry_names() -> set:
     from piholelongtermstats_spark.plans import QUERIES
 
-    return len(QUERIES)
+    return set(QUERIES)
+
+
+def _registry_size() -> int:
+    return len(_registry_names())
 
 
 def test_plan_audit_matches_registry():
@@ -47,6 +51,14 @@ def test_plan_audit_matches_registry():
     assert len(rows) == n, (
         f"PLAN_AUDIT.md is stale: {len(rows)} table rows,"
         f" registry has {n} — rerun scripts/query.py audit"
+    )
+    # ... naming exactly the registry's queries. The numeric columns
+    # stay unpinned: AQE moves them from run to run.
+    names = _registry_names()
+    audited = {ln.split("|")[1].strip() for ln in rows}
+    assert audited == names, (
+        f"PLAN_AUDIT.md is stale: missing {sorted(names - audited)},"
+        f" extra {sorted(audited - names)} — rerun scripts/query.py audit"
     )
 
 
