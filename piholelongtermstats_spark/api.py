@@ -17,7 +17,9 @@ This module is that same contract on the Spark engine:
 Time-range bounds resolve driver-side (sources/daterange.py, the S7
 exclusive-end contract) and are applied in the RAW storage domain so
 they reach the parquet scan (sources/events.py). The enriched fact is
-persisted once per run — every downstream consumer shares it.
+persisted once per run — every downstream consumer shares it. The
+stats dict and 9 of the 10 plot frames come from one collect
+(operators/stats.py); the scatter frame is one more small aggregate.
 """
 
 from __future__ import annotations
@@ -47,7 +49,11 @@ def run_dashboard(
     """One parameterized run: range-scan → exclude → enrich → stats +
     plot frames + resident rollup. Re-invoking with new parameters IS
     the reload (app.py:1056-1104) — no engine state to reset beyond
-    unpersisting the returned fact."""
+    unpersisting the returned fact.
+
+    With ``collect_plots`` the plot frames are pandas, built by
+    plotdata.to_payload from the rows compute_stats collected; without
+    it they are generate_plot_data's lazy DataFrames."""
     ensure_session_defaults(spark)
 
     lo = hi = None
@@ -60,12 +66,15 @@ def run_dashboard(
     fact = exclude_domains(fact, exclude_patterns)
     fact = fact.persist()
 
-    frames = plotdata.generate_plot_data(fact)
-    rollup = timeagg.hourly_rollup(fact)
+    summary = stats.compute_stats(fact)
     return {
-        "stats": stats.compute_stats(fact),
-        "plot_data": plotdata.to_payload(frames) if collect_plots else frames,
-        "hourly_agg": rollup,
+        "stats": summary,
+        "plot_data": (
+            plotdata.to_payload(fact, summary.groups)
+            if collect_plots
+            else plotdata.generate_plot_data(fact)
+        ),
+        "hourly_agg": timeagg.hourly_rollup(fact),
         "fact": fact,
     }
 

@@ -173,16 +173,20 @@ def slowest_domains(fact: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
+def avg_reply_ms() -> Column:
+    """Mean reply_time in ms of a group: an exact decimal sum divided
+    once, so every plan that aggregates it gets the same double."""
+    return F.round(
+        F.sum(F.col("reply_time").cast("decimal(18,2)")).cast("double")
+        / F.count("reply_time")
+        * 1000,
+        3,
+    ).alias("avg_reply_ms")
+
+
 def daily_avg_reply(fact: DataFrame) -> DataFrame:
     """Per-date mean reply_time in ms (plot.py:76-82, A15)."""
-    return fact.groupBy("date").agg(
-        F.round(
-            F.sum(F.col("reply_time").cast("decimal(18,2)")).cast("double")
-            / F.count("reply_time")
-            * 1000,
-            3,
-        ).alias("avg_reply_ms")
-    )
+    return fact.groupBy("date").agg(avg_reply_ms())
 
 
 def merge_rollup(old: DataFrame, delta: DataFrame) -> DataFrame:

@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pytest
+from pandas.testing import assert_frame_equal
 from pyspark import StorageLevel
 
 from piholelongtermstats_spark.api import reload, run_dashboard
+from piholelongtermstats_spark.operators import plotdata, stats
+from tests.conftest import make_fact
 
 SF = "/root/testdata/sf0.001"
+EXCLUDE_TEENS = [r'"k": 1[0-9]}']
 
 
 def test_full_run_produces_both_contracts(spark):
@@ -83,6 +90,110 @@ def test_second_reload_reuses_generated_code(spark):
     second["fact"].unpersist()
     assert second["stats"]["total_queries"] > 0
     assert compiled <= 25, f"second reload compiled {compiled} classes"
+
+
+# frames whose row order is part of the contract (ORDER BY ... LIMIT)
+ORDERED_FRAMES = {"top_clients", "blocked_df", "allowed_df"}
+
+
+def _assert_payload_matches_lazy(payload: dict, fact) -> None:
+    """The collected payload equals toPandas of generate_plot_data's
+    lazy frames: same names, columns, column order and dtypes; the
+    ordered frames row for row, the rest as sorted rows."""
+    lazy = {n: df.toPandas() for n, df in plotdata.generate_plot_data(fact).items()}
+    assert list(payload) == list(lazy)
+    for name, want in lazy.items():
+        got = payload[name]
+        if name not in ORDERED_FRAMES:
+            cols = list(want.columns)
+            want = want.sort_values(cols, ignore_index=True)
+            got = got.sort_values(cols, ignore_index=True)
+        assert_frame_equal(got, want, obj=name)
+
+
+def _t(i: int) -> str:
+    return (dt.datetime(2024, 1, 1) + dt.timedelta(minutes=37 * i)).isoformat()
+
+
+LONG_X = "a" * 20 + "x" * 10 + "b" * 20  # both ellipsize to a*20...b*20
+LONG_Y = "a" * 20 + "y" * 10 + "b" * 20
+TIED_CLIENTS = ["c0"] * 9 + ["c1"] * 8 + ["c2"] * 7 + ["c3"] * 6 + ["c4", "c5", "c6"] * 5
+# each status has 45 events over 12 domains: 9 get 4, 3 tie at 3 for 10th
+PAYLOAD_FIXTURES = {
+    "all_blocked": [
+        (i, _t(i), f"c{i % 6}", f"d{i % 13}.com", "Blocked", 0.002 * i) for i in range(60)
+    ],
+    "null_reply_time": [
+        (i, _t(i), f"c{i % 6}", f"d{i % 13}.com", ("Allowed", "Blocked", "Other")[i % 3], None)
+        for i in range(60)
+    ],
+    "ellipsized_collision": [
+        (i, _t(i), f"c{i % 4}", d, ("Blocked", "Allowed")[i % 2], 0.01)
+        for i, d in enumerate([LONG_X] * 4 + [LONG_Y] * 3 + [f"s{k}.com" for k in range(12)] * 5)
+    ],
+    "ties_at_5th_client_and_10th_domain": [
+        (i, _t(i), TIED_CLIENTS[i % 45], f"{'da'[i // 45]}{i % 12:02d}",
+         ("Blocked", "Allowed")[i // 45], 0.01)
+        for i in range(90)
+    ],
+    "null_client": [
+        (i, _t(i), None if i % 3 == 0 else f"c{i % 5}", f"d{i % 7}.com",
+         ("Allowed", "Blocked")[i % 2], 0.01)
+        for i in range(60)
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "window",
+    [
+        {},
+        {"start_date": "2024-01-10", "end_date": "2024-01-10", "exclude_patterns": EXCLUDE_TEENS},
+        {"exclude_patterns": [".*"]},
+    ],
+    ids=["full_span", "one_day_excluded", "empty"],
+)
+def test_reload_payload_matches_lazy_frames(spark, window):
+    """run_dashboard's plot payload, built on the driver from the stats
+    collect, equals the lazy frames it replaces."""
+    res = run_dashboard(spark, SF, collect_plots=True, **window)
+    try:
+        _assert_payload_matches_lazy(res["plot_data"], res["fact"])
+    finally:
+        res["fact"].unpersist()
+
+
+@pytest.mark.parametrize("case", sorted(PAYLOAD_FIXTURES))
+def test_payload_matches_lazy_frames_on_edge_facts(spark, case):
+    """The same equality on constructed facts, through the two calls
+    run_dashboard makes: the edge cases sf0.001 lacks (one status,
+    NULL reply times, ellipsis collisions, rank ties, a NULL client)."""
+    fact = make_fact(spark, PAYLOAD_FIXTURES[case]).persist()
+    try:
+        summary = stats.compute_stats(fact)
+        _assert_payload_matches_lazy(plotdata.to_payload(fact, summary.groups), fact)
+    finally:
+        fact.unpersist()
+
+
+def test_plotted_reload_job_budget(spark):
+    """A plotted reload runs the stats collect plus one scatter
+    aggregate: at most 25 Spark jobs (49 when each plot frame ran its
+    own toPandas)."""
+    sc = spark.sparkContext
+    first = run_dashboard(spark, SF, exclude_patterns=EXCLUDE_TEENS)
+    group = "plotted-reload"
+    sc.setJobGroup(group, "one plotted reload")
+    try:
+        second = reload(
+            spark, first, parquet_dir=SF, start_date="2024-01-03",
+            end_date="2024-01-25", exclude_patterns=EXCLUDE_TEENS,
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(list(sc.statusTracker().getJobIdsForGroup(group)))
+    second["fact"].unpersist()
+    assert jobs <= 25, f"a plotted reload ran {jobs} jobs"
 
 
 def test_build_corpus_surface(spark):
