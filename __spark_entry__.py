@@ -7,7 +7,8 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in ``piholelongtermstats_spark/`` (operators per
 SURVEY.md §2); this module is a thin adapter over the query registry
-(piholelongtermstats_spark/plans/registry.py).
+(piholelongtermstats_spark/plans/: registry.py plus one module per
+query domain).
 """
 
 from __future__ import annotations

@@ -16,8 +16,15 @@ Layout:
     operators/  the analytics operator families (counts, topk, timeagg,
                 sequential, stats assembly, plotdata, dedup, similarity,
                 text, multimodal)
-    plans/      the driver-facing query registry (Spark + oracle SQL)
-    streaming/  Structured Streaming extension (hourly rollup)
+    plans/      the driver-facing query registry (Spark + oracle SQL):
+                registry.py, and one module of queries per domain —
+                dashboard, tpch, stats, lakehouse, corpus, retrieval,
+                media
+    streaming/  Structured Streaming extension: the hourly rollup and
+                its upsert sink, enrichment, sessions, sliding windows,
+                bars, top-k, heavy hitters, stateful streaks, EWMA /
+                Welford state, stream joins, corpus ingest, snapshot
+                sinks and the progress recorder
 """
 
 __version__ = "0.1.0"

@@ -66,17 +66,23 @@ def run_dashboard(
     fact = exclude_domains(fact, exclude_patterns)
     fact = fact.persist()
 
-    summary = stats.compute_stats(fact)
-    return {
-        "stats": summary,
-        "plot_data": (
-            plotdata.to_payload(fact, summary.groups)
-            if collect_plots
-            else plotdata.generate_plot_data(fact)
-        ),
-        "hourly_agg": timeagg.hourly_rollup(fact),
-        "fact": fact,
-    }
+    try:
+        summary = stats.compute_stats(fact)
+        return {
+            "stats": summary,
+            "plot_data": (
+                plotdata.to_payload(fact, summary.groups)
+                if collect_plots
+                else plotdata.generate_plot_data(fact)
+            ),
+            "hourly_agg": timeagg.hourly_rollup(fact),
+            "fact": fact,
+        }
+    except BaseException:
+        # the caller never receives the fact, so nothing else can
+        # release it
+        fact.unpersist()
+        raise
 
 
 def reload(spark: SparkSession, previous: dict[str, Any], **params) -> dict[str, Any]:

@@ -12,11 +12,12 @@ the per-pattern application loop (app.py:165-170). Semantics to keep:
   (process.py:40-43).
 
 The validity check runs driver-side (it is per-pattern, not per-row —
-SURVEY.md §2.10 U3). Note the dialect difference: the reference
-validates with Python ``re`` while execution here is Java regex; for
-the supported pattern surface (literals, classes, anchors, ., *, +)
-they agree, and we validate with Python `re` exactly like the
-reference did.
+SURVEY.md §2.10 U3). The reference validates with Python ``re``, but
+``rlike`` executes Java regex, and some patterns compile in only one
+dialect (``(?P<name>...)`` groups and ``(?#...)`` comments are Python
+only). A pattern is therefore valid only if both Python ``re`` and
+``java.util.regex.Pattern`` compile it; a Python-only pattern is
+skipped with the warning instead of failing the job.
 """
 
 from __future__ import annotations
@@ -24,6 +25,9 @@ from __future__ import annotations
 import logging
 import re
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -31,13 +35,23 @@ logger = logging.getLogger(__name__)
 
 
 def is_valid_regex(pattern: str) -> bool:
-    """Driver-side regex validity check (process.py:11-24)."""
+    """Driver-side regex validity check (process.py:11-24) in both
+    dialects: Python ``re``, and Java regex (what ``rlike`` runs)
+    whenever a SparkContext is running — always the case when
+    ``exclude_domains`` is filtering a DataFrame."""
     if not isinstance(pattern, str) or pattern == "":
         return False
     try:
         re.compile(pattern)
     except re.error:
         return False
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc._jvm.java.util.regex.Pattern.compile(pattern)
+        # PatternSyntaxException, converted by PySpark's py4j handler
+        except (IllegalArgumentException, Py4JJavaError):
+            return False
     return True
 
 

@@ -96,7 +96,7 @@ def ngram_jaccard_pairs(
 
     ``sh``: precomputed (doc_id, shingle) pairs — pass the shared
     persisted shingle set when several dedup tiers run over the same
-    corpus (plans/registry_m7.py) so it is built once, not per query.
+    corpus (plans/corpus.py) so it is built once, not per query.
 
     ``df_cap``: stop-shingle mitigation for the self-join skew. A
     shingle appearing in d documents contributes d² join rows; stop
@@ -259,7 +259,7 @@ def ngram_jaccard_pairs(
         # The probe's verdict depends only on (sh, threshold, df_cap),
         # so it is memoized ON the shingle DataFrame object (r4 ADVICE /
         # VERDICT #2): the registry path passes the session-persisted
-        # shared shingle set (plans/registry_m7._shingles), whose
+        # shared shingle set (plans/corpus._shingles), whose
         # object lifetime IS the cache lifetime — repeat calls, e.g.
         # bench's min-of-N passes, skip the eager scan entirely
         # instead of re-running it per call.

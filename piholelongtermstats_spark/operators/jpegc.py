@@ -253,14 +253,6 @@ def _decode_lut(bits: list, symbols: list) -> tuple:
     return lut, maxlen
 
 
-def _extend(v: int, s: int) -> int:
-    """EXTEND (T.81 F.2.2.1): map s received bits back to the signed
-    coefficient value."""
-    if s == 0:
-        return 0
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
 # ---------------------------------------------------------------------------
 # Encoder
 

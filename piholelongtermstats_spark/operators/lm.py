@@ -81,7 +81,7 @@ def bigram_counts(docs: DataFrame, bg: DataFrame | None = None) -> DataFrame:
 
     ``bg``: precomputed (doc_id, w1, w2) stream — pass the shared
     persisted stream when several LM queries run over the same corpus
-    (the shingle-set convention, plans/registry_m7._shingles)."""
+    (the shingle-set convention, plans/corpus._shingles)."""
     bg = bg if bg is not None else bigram_stream(docs)
     return bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt"))
 

@@ -837,20 +837,6 @@ def _png_chunk(typ: bytes, body: bytes) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """Paeth predictor (RFC 2083 §6.6): nearest of left/up/up-left.
-    Reference form, pinned exhaustively by tests/test_m65.py; the
-    decode hot loop in _png_parse inlines the same arithmetic (a
-    per-pixel function call there was the profile's top cost)."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _png_filter_row(ftype: int, cur: "object", prev: "object") -> bytes:
     """Apply scanline filter ``ftype`` to row ``cur`` (uint8, len 3w)
     given the prior UNFILTERED row ``prev`` (zeros for row 0). bpp=3.
@@ -916,13 +902,6 @@ def _png_encode(px: "object") -> bytes:
         + idats
         + _png_chunk(b"IEND", b"")
     )
-
-
-def _png_pixel(media_id: int, r: int, c: int, ch: int) -> int:
-    """Stored-order pixel byte (ch 0/1/2 = R/G/B, PNG's order):
-    (id·31 + r·13 + c·17 + ch·7) % 256 — the _bmp_pixel closed form
-    with PNG's channel order, replayed exactly by the oracle."""
-    return (media_id * 31 + r * 13 + c * 17 + ch * 7) % 256
 
 
 def synth_png_corpus(docs: DataFrame) -> DataFrame:

@@ -87,31 +87,6 @@ def concat_chunk_manifest(
     )
 
 
-def concat_chunk_manifest_global(
-    docs: DataFrame, seq_len: int = 512
-) -> DataFrame:
-    """Single-global-window reference formulation — kept ONLY as the
-    differential-test baseline (one task over the whole corpus; never
-    use at scale)."""
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
-    w = Window.orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = docs.select("doc_id", n_tok.alias("n_tok")).withColumn(
-        "_cum", F.sum("n_tok").over(w)
-    )
-    start = F.col("_cum") - F.col("n_tok")
-    return cum.select(
-        "doc_id",
-        "n_tok",
-        start.alias("start_off"),
-        F.floor(start / F.lit(float(seq_len))).cast("long").alias("first_chunk"),
-        F.floor((F.col("_cum") - 1) / F.lit(float(seq_len)))
-        .cast("long")
-        .alias("last_chunk"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Epoch shuffle — deterministic training order
 # ---------------------------------------------------------------------------
@@ -170,26 +145,6 @@ def epoch_shuffle(
     )
 
 
-def epoch_shuffle_global(
-    docs: DataFrame, epoch: int = 1, n_shards: int = 8
-) -> DataFrame:
-    """Single-global-window formulation — differential-test baseline
-    only (one task over the whole corpus; never use at scale)."""
-    key = md5_hash60(
-        F.concat(F.lit(f"epoch:{epoch}:"), F.col("doc_id").cast("string"))
-    )
-    w = Window.orderBy("_key", "doc_id")
-    return (
-        docs.select("doc_id", key.alias("_key"))
-        .withColumn("global_pos", F.row_number().over(w).cast("long") - 1)
-        .select(
-            "doc_id",
-            (F.col("_key") % n_shards).alias("shard"),
-            "global_pos",
-        )
-    )
-
-
 def epoch_pack_manifest(
     docs: DataFrame,
     epoch: int = 1,
@@ -240,32 +195,6 @@ def epoch_pack_manifest(
         F.floor((F.col("_cum") - 1) / F.lit(float(seq_len)))
         .cast("long")
         .alias("last_chunk"),
-    )
-
-
-def write_training_shards(
-    docs: DataFrame,
-    path: str,
-    epoch: int = 1,
-    n_shards: int = 8,
-    key_buckets: int = 256,
-) -> None:
-    """Materialize the epoch's training shards: join the shuffle
-    manifest, route every document to its shard (one hash shuffle),
-    and write `shard=N/` parquet directories with rows in epoch order
-    WITHIN each shard (sortWithinPartitions — a per-shard local sort,
-    never a global one). A trainer reads shard directories
-    round-robin ordered by global_pos; re-running the same epoch
-    reproduces byte-identical shard contents (keys are deterministic).
-    """
-    order = epoch_shuffle(docs, epoch, n_shards, key_buckets)
-    (
-        docs.join(order, "doc_id")
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "global_pos")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
     )
 
 

@@ -46,7 +46,7 @@ POISSON1_CUM_PPB = [
 
 
 def _md5_60bit(col: F.Column) -> F.Column:
-    """The engine-wide 60-bit md5 integer primitive (registry_m7
+    """The engine-wide 60-bit md5 integer primitive (plans/corpus.py
     convention: bit-identical to DuckDB's ('0x'||substr(md5,1,15))."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 

@@ -971,7 +971,7 @@ def holt_winters_daily(
 # Shared Cramer formula TEXT for the 3-parameter normal equations —
 # evaluated verbatim by F.expr on the Spark side and pasted verbatim
 # into the DuckDB oracle, so the operand trees are identical by
-# construction (registry_m56). Columns: n, st, sw, stt, stw (exact
+# construction (plans/stats.py). Columns: n, st, sw, stt, stw (exact
 # DECIMAL/HUGEINT moments; sww = sw because w² = w) and the rhs
 # sy, sty, swy.
 WK_DET = (

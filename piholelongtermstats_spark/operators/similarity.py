@@ -95,7 +95,7 @@ def cosine_topk(emb: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame
 def plane_signs(dim_count: int, plane: int) -> list[float]:
     """±1 components of deterministic hyperplane ``plane``: bit 0 of
     md5(p || ':' || j). Exposed so the DuckDB oracle can embed the
-    identical planes as SQL array literals (plans/registry_m7.py)."""
+    identical planes as SQL array literals (plans/corpus.py)."""
     return [
         1.0
         if int(hashlib.md5(f"{plane}:{j}".encode()).hexdigest()[:15], 16) & 1

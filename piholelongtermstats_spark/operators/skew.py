@@ -23,7 +23,7 @@ It composes with — not replaces — AQE.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -39,23 +39,6 @@ def salted_count(
         F.count(F.lit(1)).alias("_c")
     )
     return partial.groupBy(key).agg(F.sum("_c").cast("long").alias("cnt"))
-
-
-def salted_avg(
-    df: DataFrame, key: str, val: str, salt_src: str, n_salt: int = 32
-) -> DataFrame:
-    """groupBy(key).avg(val) via salted (sum, count) partials — the
-    decomposition that stays exact under re-aggregation (an avg of
-    partial avgs would weight groups wrongly)."""
-    salt = (F.crc32(F.col(salt_src).cast("string")) % n_salt).alias("_salt")
-    partial = (
-        df.select(F.col(key), F.col(val), salt)
-        .groupBy(key, "_salt")
-        .agg(F.sum(val).alias("_s"), F.count(val).alias("_n"))
-    )
-    return partial.groupBy(key).agg(
-        (F.sum("_s") / F.sum("_n")).alias("avg_val")
-    )
 
 
 def key_skew_report(df: DataFrame, col: str, top_k: int = 10) -> DataFrame:

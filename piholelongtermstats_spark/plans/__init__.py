@@ -15,7 +15,7 @@ the top 50 is curated, not accidental:
 - every reference-parity operator (the PiHole dashboard surface),
 - the TPC-H-shaped join suite,
 - one representative per LLM-pipeline tier, preferring the fused
-  panels (registry_panels.py) so one slot verifies several operators,
+  ``*_panel`` queries so one slot verifies several operators,
 - scale-variant twins (capped Jaccard / star-contraction clusters)
   over their differential baselines — same oracle, same result, the
   baseline stays pytest-verified below the line.
@@ -27,69 +27,13 @@ order (their driver row is the weakest signal).
 
 # Each import registers its module's queries.
 from piholelongtermstats_spark.plans import (  # noqa: F401
-    registry_m7,
-    registry_m8,
-    registry_m9,
-    registry_m10,
-    registry_m11,
-    registry_m12,
-    registry_m13,
-    registry_m14,
-    registry_m15,
-    registry_m16,
-    registry_m17,
-    registry_m18,
-    registry_m19,
-    registry_m20,
-    registry_m21,
-    registry_m22,
-    registry_m23,
-    registry_m24,
-    registry_m25,
-    registry_m26,
-    registry_m27,
-    registry_m28,
-    registry_m29,
-    registry_m30,
-    registry_m31,
-    registry_m32,
-    registry_m33,
-    registry_m34,
-    registry_m35,
-    registry_m36,
-    registry_m37,
-    registry_m38,
-    registry_m39,
-    registry_m40,
-    registry_m41,
-    registry_m42,
-    registry_m43,
-    registry_m44,
-    registry_m45,
-    registry_m46,
-    registry_m47,
-    registry_m48,
-    registry_m49,
-    registry_m50,
-    registry_m51,
-    registry_m52,
-    registry_m53,
-    registry_m54,
-    registry_m55,
-    registry_m56,
-    registry_m57,
-    registry_m58,
-    registry_m59,
-    registry_m60,
-    registry_m61,
-    registry_m62,
-    registry_m63,
-    registry_m64,
-    registry_m65,
-    registry_m66,
-    registry_m67,
-    registry_m68,
-    registry_panels,
+    dashboard,
+    tpch,
+    stats,
+    lakehouse,
+    corpus,
+    retrieval,
+    media,
 )
 from piholelongtermstats_spark.plans.registry import META, ORACLE, QUERIES  # noqa: F401
 

@@ -53,10 +53,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def colocated_join(
     spark: SparkSession, left: str, right: str, on: list[str], how: str = "inner"
 ) -> DataFrame:

@@ -136,7 +136,7 @@ def dns_fact(
 
 
 # DuckDB oracle prelude: the exact same fact derivation in ANSI-ish SQL.
-# Every oracle query in plans/registry.py is written as
+# Every oracle query in plans/ is written as
 #   FACT_CTE + "SELECT ... FROM fact ..."
 FACT_CTE = """
 WITH fact AS (

@@ -237,60 +237,3 @@ def scan_events_date_partitioned(
     schema (events.project_fact)."""
     ev = prune_dates(read_parquet_memo(spark, path), lo, hi)
     return project_fact(ev, lo, hi)
-
-
-def compact_partition_files(
-    spark: SparkSession,
-    root: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    partition_glob: str = "p_date=*",
-) -> dict:
-    """Small-file compaction for a hive-partitioned layout: rewrite
-    every partition directory whose file count exceeds the byte-target
-    implies (ceil(dir_bytes / target_bytes) files) down to exactly
-    that many files — THE recurring 100 TB maintenance job (streaming
-    and incremental ingest leave thousands of KB-scale files per
-    partition; each file under-target wastes a scan task and its
-    open/footer overhead, and at 10⁵ partitions the NameNode/listing
-    cost compounds).
-
-    Mechanics per oversized partition: read the partition directory
-    alone (no full-table scan), coalesce(ceil(bytes/target)) — a
-    NARROW repartitioning, no shuffle — and stage+rename like
-    ensure_layout, so concurrent readers see the old or the new
-    complete directory, never a mix. Row contents are untouched
-    (identity is test-pinned); only file boundaries change. Returns
-    {partition: (files_before, files_after)} for the partitions
-    rewritten."""
-    import glob as _glob
-    import math
-
-    out = {}
-    for pdir in sorted(_glob.glob(os.path.join(root, partition_glob))):
-        files = [
-            f
-            for f in _glob.glob(os.path.join(pdir, "*.parquet"))
-            if os.path.isfile(f)
-        ]
-        if not files:
-            continue
-        total = sum(os.path.getsize(f) for f in files)
-        want = max(1, math.ceil(total / target_bytes))
-        if len(files) <= want:
-            continue
-        df = spark.read.parquet(pdir)
-        staging = pdir + ".compact_tmp"
-        shutil.rmtree(staging, ignore_errors=True)
-        with micros_write(spark):
-            df.coalesce(want).write.mode("overwrite").parquet(staging)
-        old = pdir + ".compact_old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(pdir, old)
-        os.rename(staging, pdir)
-        shutil.rmtree(old, ignore_errors=True)
-        invalidate_read_memo(spark, root)
-        n_after = len(
-            [f for f in _glob.glob(os.path.join(pdir, "*.parquet"))]
-        )
-        out[os.path.basename(pdir)] = (len(files), n_after)
-    return out

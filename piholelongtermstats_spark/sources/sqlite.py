@@ -46,13 +46,6 @@ def _connect(db_path: str) -> sqlite3.Connection:
     return conn
 
 
-def probe_time_bounds(db_path: str) -> tuple[int | None, int | None]:
-    """MIN/MAX timestamp probe (db.py:54-61), one query not two."""
-    with _connect(db_path) as conn:
-        row = conn.execute("SELECT MIN(timestamp), MAX(timestamp) FROM queries").fetchone()
-    return (row[0], row[1]) if row else (None, None)
-
-
 def _iter_chunks(
     db_path: str,
     start_epoch: int | None,

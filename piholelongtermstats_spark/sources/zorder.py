@@ -40,12 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.sources.events import canonical_ts, project_fact
-from piholelongtermstats_spark.sources.layout import (
-    PARTITION_COL,
-    _materialize,
-    micros_write,
-    prune_dates,
-)
+from piholelongtermstats_spark.sources.layout import _materialize, micros_write
 from piholelongtermstats_spark.sources.parquet import (
     invalidate_read_memo,
     load_table,
@@ -135,101 +130,6 @@ def write_events_zordered(
             .repartitionByRange(n_files, "_z")
             .sortWithinPartitions("_z")
             .drop("_z")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    invalidate_read_memo(spark, path)
-
-
-def write_events_zordered_by_date(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    bits: int = BITS,
-    files_per_day: int = 4,
-) -> None:
-    """The PRODUCTION composition (r5 VERDICT #6): hive ``p_date``
-    directories (directory-level date pruning, exactly layout.py's
-    contract) with each day's files z-ordered on (client,
-    hour-of-day) — a daily-ingest job z-orders only its own day, so
-    the layout is maintainable incrementally while a (client, range)
-    drill-down prunes TWICE: Catalyst drops out-of-range directories,
-    then the parquet reader drops row groups whose user_id min/max
-    misses the client.
-
-    Within a day the time dimension is HOUR-OF-DAY (fixed 0-23 domain
-    — no per-day stats pass needed); the cross-day time dimension
-    lives entirely in the directory key. One repartitionByRange over
-    (p_date, z) gives every output task a contiguous (day, z-stripe)
-    slice ⇒ ~files_per_day files per directory, each covering a tight
-    (client, hour) rectangle."""
-    ev, hour = _events_with_hour(spark, sf_dir)
-    if ev.isEmpty():
-        keyed = ev.withColumn(PARTITION_COL, F.to_date(F.col("ts")))
-        keyed.write.mode("overwrite").parquet(path)
-        invalidate_read_memo(spark, path)
-        return
-    r = ev.select(
-        F.min(F.col("user_id")).alias("u0"),
-        F.max(F.col("user_id")).alias("u1"),
-        F.countDistinct(F.floor(hour / 24)).alias("n_days"),
-    ).first()
-
-    def _scale_user(col: Column) -> Column:
-        span = max(int(r["u1"]) - int(r["u0"]) + 1, 1)
-        return F.floor(
-            (col - F.lit(int(r["u0"]))) * F.lit(1 << bits) / F.lit(span)
-        ).cast("long")
-
-    hod = hour % 24
-    z = zvalue(
-        _scale_user(F.col("user_id")),
-        F.floor(hod * F.lit(1 << bits) / F.lit(24)).cast("long"),
-        bits,
-    )
-    n_part = max(int(r["n_days"] or 1), 1) * files_per_day
-    with micros_write(spark):
-        (
-            ev.withColumn("_z", z)
-            .withColumn(PARTITION_COL, F.to_date(F.col("ts")))
-            .repartitionByRange(n_part, PARTITION_COL, "_z")
-            .sortWithinPartitions(PARTITION_COL, "_z")
-            .drop("_z")
-            .write.mode("overwrite")
-            .partitionBy(PARTITION_COL)
-            .parquet(path)
-        )
-    invalidate_read_memo(spark, path)
-
-
-def scan_events_zdate(
-    spark: SparkSession,
-    path: str,
-    client_id: "int | None" = None,
-    lo: "dt.datetime | None" = None,
-    hi: "dt.datetime | None" = None,
-) -> DataFrame:
-    """Enriched-fact scan over the composed layout: p_date directory
-    pruning (UTC calendar dates of the bound instants, hi exclusive —
-    layout.scan_events_date_partitioned's contract) + user_id/raw-ts
-    PushedFilters against the per-file stats the within-day z-sort
-    tightened."""
-    ev = prune_dates(read_parquet_memo(spark, path), lo, hi)
-    return project_fact(ev, lo, hi, client_id)
-
-
-def write_events_time_sorted(
-    spark: SparkSession, sf_dir: str, path: str, n_files: int = N_FILES
-) -> None:
-    """The single-dimension baseline layout (sorted by raw ts into the
-    same file count) — exists so tests can measure the z-order pruning
-    delta against an equally-sized, equally-sorted alternative."""
-    ev = load_table(spark, sf_dir, "events")
-    with micros_write(spark):
-        (
-            canonical_ts(ev)
-            .repartitionByRange(n_files, "ts")
-            .sortWithinPartitions("ts")
             .write.mode("overwrite")
             .parquet(path)
         )

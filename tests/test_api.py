@@ -65,6 +65,24 @@ def test_dashboard_owns_the_fact_cache_until_reload(spark):
     second["fact"].unpersist()
 
 
+def test_failed_run_releases_the_fact(spark, monkeypatch):
+    """When the stats step raises, the caller never receives the fact,
+    so run_dashboard must release it before re-raising."""
+    seen = []
+
+    def boom(fact):
+        seen.append(fact)
+        raise RuntimeError("stats failed")
+
+    monkeypatch.setattr(stats, "compute_stats", boom)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache.isEmpty()
+    with pytest.raises(RuntimeError, match="stats failed"):
+        run_dashboard(spark, SF)
+    assert seen and seen[0].storageLevel == StorageLevel.NONE
+    assert cache.isEmpty() == was_empty
+
+
 def _compiled_classes(spark) -> int:
     """Classes Spark's code generator has compiled in this JVM so far
     (cache hits are not counted)."""

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import logging
+
+import pytest
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.functions.exclude import exclude_domains, is_valid_regex
@@ -39,6 +42,20 @@ def test_invalid_pattern_is_noop(spark):
     """Invalid regex skipped, not raised (process.py:40-43)."""
     out = exclude_domains(_frame(spark), ["[unclosed"]).collect()
     assert len(out) == 4
+
+
+@pytest.mark.parametrize("pattern", ["(?P<a>ads)", "(?#c)ads"])
+def test_python_only_pattern_is_skipped_with_warning(spark, caplog, pattern):
+    """Python ``re`` compiles these, Java regex (rlike) does not: the
+    pattern is skipped with the warning while the valid one filters."""
+    assert not is_valid_regex(pattern)
+    with caplog.at_level(logging.WARNING):
+        out = exclude_domains(_frame(spark), [pattern, r"\.net$"]).collect()
+    assert sorted(r["id"] for r in out) == [1, 2, 3]
+    assert any(
+        "Skipping invalid regex pattern" in r.getMessage() and pattern in r.getMessage()
+        for r in caplog.records
+    )
 
 
 def test_no_patterns_is_identity(spark):

@@ -138,7 +138,7 @@ def test_scale_2x_twin_identity(spark, emb):
     top-2k is exactly the single-corpus top-k with every vector
     paired with its twin (originals sort before twins on the vec_id
     tie-break)."""
-    from piholelongtermstats_spark.plans.registry_m9 import doubled_embeddings
+    from piholelongtermstats_spark.plans.retrieval import doubled_embeddings
 
     OFF = 1_000_000
     single = knn.knn_join_ivf(emb, centroids=_CENTS).collect()

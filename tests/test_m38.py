@@ -210,7 +210,8 @@ def test_cell_margins_ppm_grid_clearance(spark):
 
 
 def test_cell_margins_nonnegative_and_complete(spark):
-    from piholelongtermstats_spark.plans.registry_m9 import _SEM_CENTS, _emb
+    from piholelongtermstats_spark.plans.registry import _emb
+    from piholelongtermstats_spark.plans.retrieval import _SEM_CENTS
 
     got = semdedup.semdedup_cell_margins(
         _emb(spark, "/root/testdata/sf0.001"), _SEM_CENTS

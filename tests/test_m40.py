@@ -79,7 +79,8 @@ def test_profile_distance_invariant_under_doubling(spark):
     """The 64-day shift preserves hour-of-day, so the doubled fact
     yields IDENTICAL per-client distances — the behavioral tier's
     doubling proof."""
-    from piholelongtermstats_spark.plans.registry import _fact, _fact2x
+    from piholelongtermstats_spark.plans.dashboard import _fact2x
+    from piholelongtermstats_spark.plans.registry import _fact
 
     sf = "/root/testdata/sf0.001"
     one = {

@@ -7,7 +7,7 @@ from piholelongtermstats_spark.operators import text as _text
 
 
 def test_pit_enrich_alive_and_dead_probes(spark):
-    """Fixture rules (registry_m11): version 0 holds doc_id % 2 = 0,
+    """Fixture rules (plans/lakehouse.py): version 0 holds doc_id % 2 = 0,
     version 1 holds doc_id % 3 != 0. A doc divisible by 6 exists only
     at v0 (alive 0 / dead 1); an odd non-multiple-of-3 doc only at v1
     (dead 0 / alive 1); doc_id % 6 == 2 or 4 exists at both."""

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from piholelongtermstats_spark.plans.registry_m58 import (
+from piholelongtermstats_spark.plans.retrieval import (
     q_trained_ann_recall_panel,
 )
 

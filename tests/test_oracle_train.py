@@ -73,8 +73,7 @@ def test_trained_oracles_empty_corpus_yield_zero_rows():
     against an empty embeddings table: every leg must degrade to zero
     rows (matching the Spark side's empty-index contract pinned in
     tests/test_empty_inputs.py / test_knn.py)."""
-    from piholelongtermstats_spark.plans.registry_m7 import _IVF_TR_SQL
-    from piholelongtermstats_spark.plans.registry_m10 import _KNN_TR_SQL
+    from piholelongtermstats_spark.plans.retrieval import _IVF_TR_SQL, _KNN_TR_SQL
 
     con = duckdb.connect()
     empty = pd.DataFrame(

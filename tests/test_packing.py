@@ -8,9 +8,55 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import packing
+from piholelongtermstats_spark.operators.text import md5_hash60
+
+
+def concat_chunk_manifest_global(
+    docs: DataFrame, seq_len: int = 512
+) -> DataFrame:
+    """Single-global-window reference formulation of
+    packing.concat_chunk_manifest (one task over the whole corpus)."""
+    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    w = Window.orderBy("doc_id").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    cum = docs.select("doc_id", n_tok.alias("n_tok")).withColumn(
+        "_cum", F.sum("n_tok").over(w)
+    )
+    start = F.col("_cum") - F.col("n_tok")
+    return cum.select(
+        "doc_id",
+        "n_tok",
+        start.alias("start_off"),
+        F.floor(start / F.lit(float(seq_len))).cast("long").alias("first_chunk"),
+        F.floor((F.col("_cum") - 1) / F.lit(float(seq_len)))
+        .cast("long")
+        .alias("last_chunk"),
+    )
+
+
+def epoch_shuffle_global(
+    docs: DataFrame, epoch: int = 1, n_shards: int = 8
+) -> DataFrame:
+    """Single-global-window reference formulation of
+    packing.epoch_shuffle (one task over the whole corpus)."""
+    key = md5_hash60(
+        F.concat(F.lit(f"epoch:{epoch}:"), F.col("doc_id").cast("string"))
+    )
+    w = Window.orderBy("_key", "doc_id")
+    return (
+        docs.select("doc_id", key.alias("_key"))
+        .withColumn("global_pos", F.row_number().over(w).cast("long") - 1)
+        .select(
+            "doc_id",
+            (F.col("_key") % n_shards).alias("shard"),
+            "global_pos",
+        )
+    )
 
 
 def _docs(spark, rows):
@@ -30,7 +76,7 @@ def test_matches_global_window_on_awkward_ids(spark):
         map(tuple, packing.concat_chunk_manifest(docs, seq_len=50).collect())
     )
     want = sorted(
-        map(tuple, packing.concat_chunk_manifest_global(docs, seq_len=50).collect())
+        map(tuple, concat_chunk_manifest_global(docs, seq_len=50).collect())
     )
     assert got == want
     # manifest invariants: offsets are the prefix sums in doc_id order
@@ -78,7 +124,7 @@ def test_epoch_shuffle_matches_global_window(spark):
         got = sorted(
             map(tuple, packing.epoch_shuffle(docs, epoch, key_buckets=8).collect())
         )
-        want = sorted(map(tuple, packing.epoch_shuffle_global(docs, epoch).collect()))
+        want = sorted(map(tuple, epoch_shuffle_global(docs, epoch).collect()))
         assert got == want
         # global_pos is a permutation of 0..n-1
         assert sorted(t[2] for t in got) == list(range(len(rows)))
@@ -108,37 +154,6 @@ def test_epoch_shuffle_no_unpartitioned_window_over_corpus_rows(spark):
     assert not bad, opt
 
 
-def test_write_training_shards_roundtrip(spark, tmp_path):
-    import pyarrow.parquet as papq
-    import glob as _glob
-    import os
-
-    docs = _docs(
-        spark, [(i, " ".join(["w"] * (i % 5 + 1)), "en", "s") for i in range(64)]
-    )
-    path = str(tmp_path / "shards")
-    packing.write_training_shards(docs, path, epoch=1, n_shards=4)
-    # every document lands exactly once, in its manifest shard
-    back = spark.read.parquet(path)
-    assert back.count() == 64
-    manifest = {
-        r["doc_id"]: (r["shard"], r["global_pos"])
-        for r in packing.epoch_shuffle(docs, 1, 4).collect()
-    }
-    for r in back.select("doc_id", "shard", "global_pos").collect():
-        assert manifest[r["doc_id"]] == (int(r["shard"]), r["global_pos"])
-    # within each shard file, rows are in epoch order (local sort)
-    for f in _glob.glob(os.path.join(path, "shard=*", "*.parquet")):
-        gp = papq.read_table(f).column("global_pos").to_pylist()
-        assert gp == sorted(gp)
-    # deterministic re-run: same shard contents
-    path2 = str(tmp_path / "shards2")
-    packing.write_training_shards(docs, path2, epoch=1, n_shards=4)
-    a = sorted(map(tuple, spark.read.parquet(path).collect()))
-    b = sorted(map(tuple, spark.read.parquet(path2).collect()))
-    assert a == b
-
-
 def test_epoch_pack_matches_shuffled_global_window(spark):
     # differential: epoch_pack_manifest == prefix sum over the
     # epoch_shuffle order computed naively
@@ -146,7 +161,7 @@ def test_epoch_pack_matches_shuffled_global_window(spark):
     got = {r["doc_id"]: (r["start_off"], r["first_chunk"], r["last_chunk"])
            for r in packing.epoch_pack_manifest(docs, epoch=2, seq_len=16, key_buckets=8).collect()}
     order = sorted(
-        packing.epoch_shuffle_global(docs, 2).collect(), key=lambda r: r["global_pos"]
+        epoch_shuffle_global(docs, 2).collect(), key=lambda r: r["global_pos"]
     )
     ntok = {r["doc_id"]: r["n_tok"] for r in packing.concat_chunk_manifest(docs).collect()}
     run = 0

@@ -1,4 +1,4 @@
-"""ANN doubling proof (plans/registry_m9.py:ann_scale_2x): under a
+"""ANN doubling proof (plans/retrieval.py:ann_scale_2x): under a
 2× corpus the bucketed path must return the expected id-twin results
 with an unchanged plan shape — the measured counterpart of the
 "buckets bound the scan" claim."""
@@ -6,7 +6,7 @@ with an unchanged plan shape — the measured counterpart of the
 from __future__ import annotations
 
 from piholelongtermstats_spark.operators import similarity
-from piholelongtermstats_spark.plans.registry_m9 import (
+from piholelongtermstats_spark.plans.retrieval import (
     _ANN2X_OFFSET,
     doubled_embeddings,
 )

@@ -90,21 +90,6 @@ def test_salted_count_matches_direct(spark):
     assert salted == direct
 
 
-def test_salted_avg_matches_direct(spark):
-    fact = load_table(spark, SF, "events")
-    direct = {
-        r["event_type"]: r["a"]
-        for r in fact.groupBy("event_type").agg(F.avg("value").alias("a")).collect()
-    }
-    salted = {
-        r["event_type"]: r["avg_val"]
-        for r in skew.salted_avg(fact, "event_type", "value", "event_id").collect()
-    }
-    assert set(salted) == set(direct)
-    for k in direct:
-        assert salted[k] == pytest.approx(direct[k], rel=1e-12)
-
-
 def test_date_partitioned_scan_prunes_partitions(spark, tmp_path_factory):
     """r3 VERDICT #7: the S4 range scan over the date-partitioned
     layout must prune whole date DIRECTORIES at plan time
@@ -374,34 +359,3 @@ def test_runtime_bloom_filter_prunes_fact_before_shuffle(spark, tmp_path_factory
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_compact_partition_files_identity_and_counts(spark, tmp_path):
-    """Small-file compaction: oversized partitions collapse to the
-    byte-target's file count, rows byte-identical, right-sized
-    partitions untouched."""
-    from pyspark.sql import functions as F
-
-    from piholelongtermstats_spark.sources import layout
-
-    root = str(tmp_path / "frag")
-    df = spark.range(2000).select(
-        F.col("id"),
-        (F.col("id") % 2).cast("string").alias("p_date"),
-    )
-    # fragment: 16 files per partition
-    df.repartition(16).write.partitionBy("p_date").parquet(root)
-    import glob
-
-    before = {r[0] for r in spark.read.parquet(root).collect()}
-    n0 = len(glob.glob(root + "/p_date=0/*.parquet"))
-    assert n0 > 4
-    out = layout.compact_partition_files(spark, root, target_bytes=10**9)
-    # huge target → 1 file per partition
-    assert set(out) == {"p_date=0", "p_date=1"}
-    assert all(a == 1 and b > 1 for p, (b, a) in out.items())
-    assert len(glob.glob(root + "/p_date=0/*.parquet")) == 1
-    after = {r[0] for r in spark.read.parquet(root).collect()}
-    assert after == before
-    # rerun: nothing to do
-    assert layout.compact_partition_files(spark, root, target_bytes=10**9) == {}

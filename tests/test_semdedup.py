@@ -137,7 +137,7 @@ def test_doubled_corpus_identity(spark):
     # copy, every copy is removed (its original shares the cell at
     # rounded cosine 1.0 with a lower id) and the ORIGINAL survivor
     # set is unchanged.
-    from piholelongtermstats_spark.plans.registry_m9 import (
+    from piholelongtermstats_spark.plans.retrieval import (
         _ANN2X_OFFSET,
         doubled_embeddings,
     )
@@ -158,7 +158,7 @@ def test_pairs_backends_agree(spark):
     # grouped-matmul pairs == pure-Column pairs, decision for
     # decision, on both the single and doubled corpora (the fp-margin
     # test guarantees this CAN hold; this pins that it DOES)
-    from piholelongtermstats_spark.plans.registry_m9 import doubled_embeddings
+    from piholelongtermstats_spark.plans.retrieval import doubled_embeddings
 
     cents = ivf.fixed_centroids(64, semdedup.N_CLUSTERS)
     for base in (

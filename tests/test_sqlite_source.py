@@ -6,10 +6,7 @@ import sqlite3
 
 import pytest
 
-from piholelongtermstats_spark.sources.sqlite import (
-    probe_time_bounds,
-    read_sqlite,
-)
+from piholelongtermstats_spark.sources.sqlite import read_sqlite
 
 DDL = """CREATE TABLE queries (
   id INTEGER, timestamp INTEGER, type INTEGER, status INTEGER,
@@ -37,13 +34,6 @@ def dbs(tmp_path):
         conn.close()
         paths.append(p)
     return paths
-
-
-def test_probe_bounds(dbs):
-    """MIN/MAX probe (db.py:54-61)."""
-    lo, hi = probe_time_bounds(dbs[0])
-    assert lo == 1_700_000_000
-    assert hi == 1_700_000_000 + 49 * 60
 
 
 def test_projection_and_schema(spark, dbs):

@@ -16,10 +16,31 @@ from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.plans.metrics import _walk
 from piholelongtermstats_spark.sources import zorder
-from piholelongtermstats_spark.sources.events import filter_raw_ts
+from piholelongtermstats_spark.sources.events import canonical_ts, filter_raw_ts
+from piholelongtermstats_spark.sources.layout import micros_write
+from piholelongtermstats_spark.sources.parquet import invalidate_read_memo, load_table
 from tests.conftest import duck_fact_rows, fact_rows
 
 SF = "/root/testdata/sf0.01"
+
+
+def write_events_time_sorted(
+    spark, sf_dir: str, path: str, n_files: int = zorder.N_FILES
+) -> None:
+    """The single-dimension baseline layout (sorted by raw ts into the
+    same file count as the z-ordered layout), so the tests can measure
+    the z-order pruning delta against an equally-sized, equally-sorted
+    alternative."""
+    ev = load_table(spark, sf_dir, "events")
+    with micros_write(spark):
+        (
+            canonical_ts(ev)
+            .repartitionByRange(n_files, "ts")
+            .sortWithinPartitions("ts")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+    invalidate_read_memo(spark, path)
 
 
 def _scan_rows(df) -> int:
@@ -53,7 +74,7 @@ def layouts(spark, tmp_path_factory):
     out = tmp_path_factory.mktemp("zorder")
     zp, tp = str(out / "z"), str(out / "t")
     zorder.write_events_zordered(spark, SF, zp)
-    zorder.write_events_time_sorted(spark, SF, tp)
+    write_events_time_sorted(spark, SF, tp)
     return zp, tp
 
 
@@ -106,63 +127,3 @@ def test_ensure_layout_idempotent(spark, tmp_path, monkeypatch):
     p2 = zorder.ensure_zorder_layout(spark, SF)
     assert p1 == p2
     assert os.path.getmtime(os.path.join(p2, "_SUCCESS")) == mtime
-
-
-@pytest.fixture(scope="module")
-def composed_layout(spark, tmp_path_factory):
-    from piholelongtermstats_spark.sources.layout import (
-        write_events_date_partitioned,
-    )
-
-    out = tmp_path_factory.mktemp("zdate")
-    zd, dp = str(out / "zdate"), str(out / "pdate")
-    zorder.write_events_zordered_by_date(spark, SF, zd)
-    write_events_date_partitioned(spark, SF, dp)
-    return zd, dp
-
-
-def test_zdate_combined_pruning_beats_both_baselines(
-    spark, layouts, composed_layout
-):
-    """r5 VERDICT #6: for a (client, 2-day) predicate the composed
-    layout (p_date dirs + within-day z-order) must out-prune BOTH
-    single-dimension layouts — the date-only directories (which read
-    every row of the in-window days) and the flat z-order (which has
-    no directory pruning, so the 2-day window leaks across z-files).
-    numOutputRows = rows surviving directory + row-group pruning,
-    before Spark's residual Filter."""
-    zd, dp = composed_layout
-    zp, _ = layouts
-    lo, hi = dt.datetime(2024, 1, 10), dt.datetime(2024, 1, 12)
-
-    def _pred(df):
-        df = df.filter(F.col("user_id") == 42)
-        return filter_raw_ts(df, lo, hi).select("event_id")
-
-    def _dated(path):
-        df = spark.read.parquet(path)
-        df = df.filter(
-            (F.col("p_date") >= F.lit("2024-01-10").cast("date"))
-            & (F.col("p_date") <= F.lit("2024-01-11").cast("date"))
-        )
-        return _pred(df)
-
-    composed = _scan_rows(_dated(zd))
-    date_only = _scan_rows(_dated(dp))
-    flat_z = _scan_rows(_pred(spark.read.parquet(zp)))
-    total = spark.read.parquet(zp).count()
-    # directory pruning alone caps both dated layouts at the window's
-    # share of rows; the within-day z-sort must cut strictly deeper
-    assert composed < date_only, (composed, date_only)
-    assert composed < flat_z, (composed, flat_z)
-    assert composed <= 0.05 * total, (composed, total)
-
-
-def test_zdate_scan_matches_flat_scan(spark, composed_layout):
-    """Layout transparency for the composition: scan_events_zdate
-    returns row-for-row DuckDB's fact over the flat file."""
-    zd, _ = composed_layout
-    lo, hi = dt.datetime(2024, 1, 10), dt.datetime(2024, 1, 18)
-    zdf = zorder.scan_events_zdate(spark, zd, client_id=7, lo=lo, hi=hi)
-    expected = duck_fact_rows(SF, lo, hi, client="7")
-    assert fact_rows(zdf) == expected and expected
