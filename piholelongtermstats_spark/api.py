@@ -20,6 +20,15 @@ they reach the parquet scan (sources/events.py). The enriched fact is
 persisted once per run — every downstream consumer shares it. The
 stats dict and 9 of the 10 plot frames come from one collect
 (operators/stats.py); the scatter frame is one more small aggregate.
+
+How a run executes is chosen from its input size before any plan is
+built: the bytes of the ``p_date`` directories the window keeps
+(sources/layout.window_bytes). Below one AQE advisory partition the
+whole run — fact, stats, payload, rollup and lazy frames — is built
+on a child session with AQE off and one shuffle partition per core
+(session.sized_session): 3 Spark jobs for a plotted reload instead of
+22. At or above it the run uses the caller's session as given. The
+caller's ``spark.conf`` is never written.
 """
 
 from __future__ import annotations
@@ -31,7 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from piholelongtermstats_spark.functions.exclude import exclude_domains
 from piholelongtermstats_spark.operators import plotdata, stats, timeagg
-from piholelongtermstats_spark.session import ensure_session_defaults
+from piholelongtermstats_spark.session import ensure_session_defaults, sized_session
+from piholelongtermstats_spark.sources import layout
 from piholelongtermstats_spark.sources.daterange import date_range_epochs
 from piholelongtermstats_spark.sources.events import dns_fact
 
@@ -53,7 +63,10 @@ def run_dashboard(
 
     With ``collect_plots`` the plot frames are pandas, built by
     plotdata.to_payload from the rows compute_stats collected; without
-    it they are generate_plot_data's lazy DataFrames."""
+    it they are generate_plot_data's lazy DataFrames.
+
+    Every returned frame belongs to the session the run chose
+    (session.sized_session), which may be a child of ``spark``."""
     ensure_session_defaults(spark)
 
     lo = hi = None
@@ -62,6 +75,8 @@ def run_dashboard(
         lo = dt.datetime.fromtimestamp(lo_s, dt.timezone.utc)
         hi = dt.datetime.fromtimestamp(hi_s, dt.timezone.utc)
 
+    path = layout.ensure_layout(spark, parquet_dir)
+    spark = sized_session(spark, layout.window_bytes(path, lo, hi))
     fact = dns_fact(spark, parquet_dir, lo=lo, hi=hi)
     fact = exclude_domains(fact, exclude_patterns)
     fact = fact.persist()

@@ -9,7 +9,11 @@ is deliberately dropped (SURVEY.md §2.1 S2).
 Scale notes (100 TB / 1000-executor target):
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic broadcast decisions replace every hand-tuned knob the
-  reference has.
+  reference has. The one exception is a dashboard reload whose pruned
+  input is below ``spark.sql.adaptive.advisoryPartitionSizeInBytes``:
+  it runs on a child session with AQE off and one shuffle partition
+  per core (``sized_session``), because below one advisory partition
+  AQE's per-stage re-planning and cache stages are all it adds.
 - ``spark.sql.shuffle.partitions`` is a *default*; at cluster scale AQE
   coalesces it down and the initial value should be ~2-3x total cores.
 - Session TZ is pinned to UTC so event-time derivations (date/hour/
@@ -100,6 +104,10 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     no conf: dynamic partition overwrite is a writer option there), so
     once-per-session is safe.
 
+    ``sized_session``'s child is marked applied when it is made and so
+    bypasses this: it is cloned from a session that went through here,
+    and re-pinning AQE on would undo the one conf it exists to change.
+
     Static confs cannot be applied to a session this package did not
     build. The one that costs time is the generated-class cache size
     (CODEGEN_CACHE_ENTRIES): a session whose cache is smaller
@@ -128,3 +136,51 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
         )
     spark._phlts_defaults_applied = True
     return spark
+
+
+_ADVISORY_CONF = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def sized_session(spark: SparkSession, input_bytes: int) -> SparkSession:
+    """The session to run a job over ``input_bytes`` of input on.
+
+    At or above one AQE advisory partition
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, 64 MB by
+    default) that is ``spark`` itself: AQE's coalescing and skew splits
+    keep wide shuffles cheap at scale. Below it, AQE would coalesce
+    every shuffle to about one partition anyway, and what it adds is
+    fixed cost: a re-plan per stage and one cache stage per scan of a
+    persisted frame. Such a job runs on a child session with AQE off
+    and ``spark.sql.shuffle.partitions`` equal to the core count.
+
+    The child is a clone of ``spark`` (``cloneSession``): it shares
+    the SparkContext, the cache manager and the JVM's generated-class
+    cache, starts from ``spark``'s runtime SQL conf and changes only
+    those two confs in its own conf, so ``spark.conf`` is never
+    written. It is memoized on ``spark`` with the conf it was cloned
+    from, so its reader memo (``sources/parquet.read_parquet_memo``)
+    stays warm across calls, and it is cloned again when ``spark``'s
+    runtime conf has changed since. Frames must be built from the
+    child's own readers: a frame built on ``spark`` runs under
+    ``spark``'s conf wherever it is used.
+    """
+    threshold = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get(_ADVISORY_CONF)
+    )
+    if input_bytes >= threshold:
+        return spark
+    # one py4j call: spark.conf.getAll converts the map entry by entry
+    # (~45 ms). The memo compares text, so an equal conf printed in
+    # another order costs only a needless clone.
+    conf = spark._jsparkSession.conf().getAll().toString()
+    memo = spark.__dict__.get("_phlts_sized_child")
+    if memo is not None and memo[0] == conf:
+        return memo[1]
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    child.conf.set("spark.sql.adaptive.enabled", "false")
+    child.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    child._phlts_defaults_applied = True
+    spark._phlts_sized_child = (conf, child)
+    return child

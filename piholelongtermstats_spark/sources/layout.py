@@ -53,20 +53,26 @@ from piholelongtermstats_spark.sources.parquet import (
 PARTITION_COL = "p_date"
 
 
+_TS_TYPE_CONF = "spark.sql.parquet.outputTimestampType"
+
+
 class micros_write:
-    """Scoped outputTimestampType=TIMESTAMP_MICROS (save/restore)."""
+    """Scoped outputTimestampType=TIMESTAMP_MICROS (save/restore). A
+    session that never set the conf gets it unset again, so its
+    ``spark.conf.getAll`` reads the same after the write as before."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
     def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.parquet.outputTimestampType")
-        self.spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
+        self.prev = self.spark.conf.getAll.get(_TS_TYPE_CONF)
+        self.spark.conf.set(_TS_TYPE_CONF, "TIMESTAMP_MICROS")
 
     def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.parquet.outputTimestampType", self.prev)
+        if self.prev is None:
+            self.spark.conf.unset(_TS_TYPE_CONF)
+        else:
+            self.spark.conf.set(_TS_TYPE_CONF, self.prev)
 
 # One write per (application, layout path): the existence check alone
 # would race a concurrent in-session write of the same path.
@@ -195,6 +201,15 @@ def _utc_date(t: dt.datetime) -> dt.date:
     return dt.datetime.fromtimestamp(_epoch_us(t) / 1e6, tz=dt.timezone.utc).date()
 
 
+def _date_bounds(
+    lo: "dt.datetime | None", hi: "dt.datetime | None"
+) -> "tuple[dt.date | None, dt.date | None]":
+    """First and last p_date a [lo, hi) window keeps (None: unbounded)."""
+    first = None if lo is None else _utc_date(lo)
+    last = None if hi is None else _utc_date(hi - dt.timedelta(microseconds=1))
+    return first, last
+
+
 def prune_dates(
     ev: DataFrame,
     lo: "dt.datetime | None" = None,
@@ -215,14 +230,48 @@ def prune_dates(
     UTC calendar date, not its local wall-clock date, or the directory
     holding in-range rows would be pruned away.
     """
-    if lo is not None:
-        ev = ev.filter(
-            F.col(PARTITION_COL) >= F.lit(_utc_date(lo).isoformat()).cast("date")
-        )
-    if hi is not None:
-        last = _utc_date(hi - dt.timedelta(microseconds=1))
+    first, last = _date_bounds(lo, hi)
+    if first is not None:
+        ev = ev.filter(F.col(PARTITION_COL) >= F.lit(first.isoformat()).cast("date"))
+    if last is not None:
         ev = ev.filter(F.col(PARTITION_COL) <= F.lit(last.isoformat()).cast("date"))
     return ev
+
+
+def window_bytes(
+    path: str,
+    lo: "dt.datetime | None" = None,
+    hi: "dt.datetime | None" = None,
+) -> int:
+    """Bytes of the data files in the p_date directories of the layout
+    at ``path`` that prune_dates keeps for [lo, hi) — the input size of
+    a windowed scan, known before any plan runs. A local directory
+    listing; hidden and ``_``-prefixed files are skipped as Spark's
+    reader skips them. The NULL-date directory is kept only by an
+    unbounded window, and an unpartitioned (empty-source) layout has
+    no directories, so it reads 0."""
+    first, last = _date_bounds(lo, hi)
+    prefix = PARTITION_COL + "="
+    total = 0
+    with os.scandir(path) as entries:
+        for d in entries:
+            if not (d.is_dir() and d.name.startswith(prefix)):
+                continue
+            try:
+                day = dt.date.fromisoformat(d.name[len(prefix):])
+            except ValueError:  # __HIVE_DEFAULT_PARTITION__: NULL p_date
+                if first is not None or last is not None:
+                    continue
+            else:
+                if (first is not None and day < first) or (last is not None and day > last):
+                    continue
+            with os.scandir(d.path) as files:
+                total += sum(
+                    f.stat().st_size
+                    for f in files
+                    if f.is_file() and not f.name.startswith((".", "_"))
+                )
+    return total
 
 
 def scan_events_date_partitioned(

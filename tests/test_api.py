@@ -10,6 +10,8 @@ from pyspark import StorageLevel
 
 from piholelongtermstats_spark.api import reload, run_dashboard
 from piholelongtermstats_spark.operators import plotdata, stats
+from piholelongtermstats_spark.session import sized_session
+from piholelongtermstats_spark.sources import layout
 from tests.conftest import make_fact
 
 SF = "/root/testdata/sf0.001"
@@ -119,14 +121,18 @@ def _assert_payload_matches_lazy(payload: dict, fact) -> None:
     lazy frames: same names, columns, column order and dtypes; the
     ordered frames row for row, the rest as sorted rows."""
     lazy = {n: df.toPandas() for n, df in plotdata.generate_plot_data(fact).items()}
-    assert list(payload) == list(lazy)
-    for name, want in lazy.items():
-        got = payload[name]
+    _assert_payloads_equal(payload, lazy)
+
+
+def _assert_payloads_equal(got: dict, want: dict, **tol) -> None:
+    assert list(got) == list(want)
+    for name, w in want.items():
+        g = got[name]
         if name not in ORDERED_FRAMES:
-            cols = list(want.columns)
-            want = want.sort_values(cols, ignore_index=True)
-            got = got.sort_values(cols, ignore_index=True)
-        assert_frame_equal(got, want, obj=name)
+            cols = list(w.columns)
+            w = w.sort_values(cols, ignore_index=True)
+            g = g.sort_values(cols, ignore_index=True)
+        assert_frame_equal(g, w, obj=name, **tol)
 
 
 def _t(i: int) -> str:
@@ -196,8 +202,10 @@ def test_payload_matches_lazy_frames_on_edge_facts(spark, case):
 
 def test_plotted_reload_job_budget(spark):
     """A plotted reload runs the stats collect plus one scatter
-    aggregate: at most 25 Spark jobs (49 when each plot frame ran its
-    own toPandas)."""
+    aggregate: at most 8 Spark jobs. Its sub-advisory input runs on the
+    child session with AQE off, so the collect is 2 jobs and the
+    scatter 1 (22 with AQE's per-scan cache stages, 49 when each plot
+    frame ran its own toPandas)."""
     sc = spark.sparkContext
     first = run_dashboard(spark, SF, exclude_patterns=EXCLUDE_TEENS)
     group = "plotted-reload"
@@ -211,7 +219,102 @@ def test_plotted_reload_job_budget(spark):
         sc._jsc.clearJobGroup()
     jobs = len(list(sc.statusTracker().getJobIdsForGroup(group)))
     second["fact"].unpersist()
-    assert jobs <= 25, f"a plotted reload ran {jobs} jobs"
+    assert jobs <= 8, f"a plotted reload ran {jobs} jobs"
+
+
+def _force_profile(monkeypatch, profile: str) -> None:
+    """Pin run_dashboard's size-chosen session: ``child`` reads the
+    window as empty (below any threshold), ``caller`` as huge."""
+    nbytes = 0 if profile == "child" else 1 << 62
+    monkeypatch.setattr(layout, "window_bytes", lambda *a: nbytes)
+
+
+def _assert_stats_equal(got: dict, want: dict) -> None:
+    """Strings and integers equal, floats within 1e-12 relative."""
+    assert list(got) == list(want)
+    for k, w in want.items():
+        g = got[k]
+        if isinstance(w, float) and isinstance(g, float):
+            assert g == pytest.approx(w, rel=1e-12, nan_ok=True), k
+        else:
+            assert g == w, k
+
+
+SF01 = "/root/testdata/sf0.01"
+PROFILE_WINDOWS = {
+    "full_span": {},
+    "one_day_excluded": {
+        "start_date": "2024-01-10", "end_date": "2024-01-10",
+        "exclude_patterns": EXCLUDE_TEENS,
+    },
+    "empty": {"exclude_patterns": [".*"]},
+}
+
+
+@pytest.mark.parametrize("window", sorted(PROFILE_WINDOWS))
+def test_reload_profiles_agree(spark, monkeypatch, window):
+    """A reload gives the same stats dict and payload on the child
+    session (AQE off, one shuffle partition per core) as on the
+    caller's session (AQE on): the input size that picks the profile
+    must not change a result."""
+    res = {}
+    for profile in ("caller", "child"):
+        _force_profile(monkeypatch, profile)
+        res[profile] = run_dashboard(spark, SF01, **PROFILE_WINDOWS[window])
+        res[profile]["fact"].unpersist()
+    assert res["child"]["fact"].sparkSession is not spark
+    assert res["caller"]["fact"].sparkSession is spark
+    _assert_stats_equal(res["child"]["stats"], res["caller"]["stats"])
+    _assert_payloads_equal(res["child"]["plot_data"], res["caller"]["plot_data"], rtol=1e-12)
+
+
+@pytest.mark.parametrize("case", sorted(PAYLOAD_FIXTURES))
+def test_edge_facts_agree_across_profiles(spark, case):
+    """The same equality on the constructed edge facts, through the two
+    calls run_dashboard makes, each fact built on its own session."""
+    out = []
+    for session in (spark, sized_session(spark, 0)):
+        fact = make_fact(session, PAYLOAD_FIXTURES[case]).persist()
+        try:
+            summary = stats.compute_stats(fact)
+            out.append((summary, plotdata.to_payload(fact, summary.groups)))
+        finally:
+            fact.unpersist()
+    (want, want_payload), (got, got_payload) = out
+    _assert_stats_equal(got, want)
+    _assert_payloads_equal(got_payload, want_payload, rtol=1e-12)
+
+
+@pytest.mark.parametrize("profile", ["child", "caller"])
+def test_reload_leaves_session_conf_alone(spark, monkeypatch, profile):
+    """Neither profile writes the caller's conf, and a runtime SQL conf
+    the caller changes between reloads reaches the next reload's
+    execution session. A first reload of a new source writes its
+    layout on the caller's session, so that write must not either."""
+    _force_profile(monkeypatch, profile)
+    key = "spark.sql.caseSensitive"
+    before = spark.conf.getAll
+    with layout.micros_write(spark):
+        assert spark.conf.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS"
+    assert spark.conf.getAll == before
+    first = run_dashboard(spark, SF, exclude_patterns=EXCLUDE_TEENS)
+    second = reload(spark, first, parquet_dir=SF, start_date="2024-01-05",
+                    end_date="2024-01-10")
+    assert spark.conf.getAll == before
+    assert second["fact"].sparkSession.conf.get(key) == spark.conf.get(key)
+    flipped = "false" if spark.conf.get(key) == "true" else "true"
+    spark.conf.set(key, flipped)
+    try:
+        third = reload(spark, second, parquet_dir=SF, start_date="2024-01-05",
+                       end_date="2024-01-10")
+        third["fact"].unpersist()
+        assert third["fact"].sparkSession.conf.get(key) == flipped
+    finally:
+        if key in before:
+            spark.conf.set(key, before[key])
+        else:
+            spark.conf.unset(key)
+    assert spark.conf.getAll == before
 
 
 def test_build_corpus_surface(spark):
