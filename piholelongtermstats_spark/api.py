@@ -21,14 +21,12 @@ persisted once per run — every downstream consumer shares it. The
 stats dict and 9 of the 10 plot frames come from one collect
 (operators/stats.py); the scatter frame is one more small aggregate.
 
-How a run executes is chosen from its input size before any plan is
-built: the bytes of the ``p_date`` directories the window keeps
-(sources/layout.window_bytes). Below one AQE advisory partition the
-whole run — fact, stats, payload, rollup and lazy frames — is built
-on a child session with AQE off and one shuffle partition per core
-(session.sized_session): 3 Spark jobs for a plotted reload instead of
-22. At or above it the run uses the caller's session as given. The
-caller's ``spark.conf`` is never written.
+A run executes on a child session with AQE off (session.sized_session)
+and is built there whole: fact, stats, payload, rollup and lazy frames.
+Its shuffle partition count comes from its input size, known before
+any plan is built: the bytes of the ``p_date`` directories the window
+keeps (sources/layout.window_bytes). A plotted reload runs 3 Spark jobs
+(22 with AQE on). The caller's ``spark.conf`` is never written.
 """
 
 from __future__ import annotations
@@ -65,8 +63,8 @@ def run_dashboard(
     plotdata.to_payload from the rows compute_stats collected; without
     it they are generate_plot_data's lazy DataFrames.
 
-    Every returned frame belongs to the session the run chose
-    (session.sized_session), which may be a child of ``spark``."""
+    Every returned frame belongs to the run's child session
+    (session.sized_session), not to ``spark``."""
     ensure_session_defaults(spark)
 
     lo = hi = None

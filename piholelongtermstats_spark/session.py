@@ -9,11 +9,11 @@ is deliberately dropped (SURVEY.md §2.1 S2).
 Scale notes (100 TB / 1000-executor target):
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic broadcast decisions replace every hand-tuned knob the
-  reference has. The one exception is a dashboard reload whose pruned
-  input is below ``spark.sql.adaptive.advisoryPartitionSizeInBytes``:
-  it runs on a child session with AQE off and one shuffle partition
-  per core (``sized_session``), because below one advisory partition
-  AQE's per-stage re-planning and cache stages are all it adds.
+  reference has. The one exception is a dashboard reload: it runs on
+  a child session with AQE off and a shuffle partition count sized to
+  its pruned input (``sized_session``), because on every measured
+  reload AQE's per-stage re-planning and cache stages cost more than
+  its coalescing saved.
 - ``spark.sql.shuffle.partitions`` is a *default*; at cluster scale AQE
   coalesces it down and the initial value should be ~2-3x total cores.
 - Session TZ is pinned to UTC so event-time derivations (date/hour/
@@ -138,20 +138,30 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     return spark
 
 
-_ADVISORY_CONF = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+# On-disk input bytes (compressed parquet in the window's p_date
+# directories) that one shuffle partition of a dashboard reload is
+# sized for. Measured on local[4] with perfbench's generator at 1, 2
+# and 4 partitions (SCALING.md, "Session:"): one partition was level
+# with four at 67 KB, about 5% slower at 135 KB, 10% at 254 KB, 25% at
+# 506 KB and 45% at 3.9 MB. Splitting pays from about here on.
+RELOAD_TASK_INPUT_BYTES = 64 << 10
+_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
 
 
 def sized_session(spark: SparkSession, input_bytes: int) -> SparkSession:
-    """The session to run a job over ``input_bytes`` of input on.
+    """The session a dashboard reload over ``input_bytes`` of on-disk
+    input runs on: a child of ``spark`` with AQE off and
+    ``spark.sql.shuffle.partitions`` set to one partition per
+    RELOAD_TASK_INPUT_BYTES of input, at least 1 and at most
+    ``defaultParallelism``.
 
-    At or above one AQE advisory partition
-    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, 64 MB by
-    default) that is ``spark`` itself: AQE's coalescing and skew splits
-    keep wide shuffles cheap at scale. Below it, AQE would coalesce
-    every shuffle to about one partition anyway, and what it adds is
-    fixed cost: a re-plan per stage and one cache stage per scan of a
-    persisted frame. Such a job runs on a child session with AQE off
-    and ``spark.sql.shuffle.partitions`` equal to the core count.
+    AQE is off because on every measured reload input (20k to 16M rows,
+    SCALING.md) its per-stage re-planning and its one cache stage per
+    scan of the persisted fact cost more than its coalescing saved. With
+    AQE off nothing coalesces a shuffle, so the partition count comes
+    from the input and not from the cluster alone: a small window on a
+    large cluster runs a few tasks per exchange, not one per core. It
+    stops at the core count, where more tasks would only queue.
 
     The child is a clone of ``spark`` (``cloneSession``): it shares
     the SparkContext, the cache manager and the JVM's generated-class
@@ -162,25 +172,23 @@ def sized_session(spark: SparkSession, input_bytes: int) -> SparkSession:
     stays warm across calls, and it is cloned again when ``spark``'s
     runtime conf has changed since. Frames must be built from the
     child's own readers: a frame built on ``spark`` runs under
-    ``spark``'s conf wherever it is used.
+    ``spark``'s conf wherever it is used. A lazy frame from an earlier
+    call runs with the partition count of the latest call.
     """
-    threshold = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get(_ADVISORY_CONF)
-    )
-    if input_bytes >= threshold:
-        return spark
+    cores = spark.sparkContext.defaultParallelism
+    partitions = str(max(1, min(cores, -(-input_bytes // RELOAD_TASK_INPUT_BYTES))))
     # one py4j call: spark.conf.getAll converts the map entry by entry
     # (~45 ms). The memo compares text, so an equal conf printed in
     # another order costs only a needless clone.
     conf = spark._jsparkSession.conf().getAll().toString()
     memo = spark.__dict__.get("_phlts_sized_child")
     if memo is not None and memo[0] == conf:
-        return memo[1]
-    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    child._phlts_defaults_applied = True
-    spark._phlts_sized_child = (conf, child)
+        child = memo[1]
+    else:
+        child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+        child.conf.set("spark.sql.adaptive.enabled", "false")
+        child._phlts_defaults_applied = True
+        spark._phlts_sized_child = (conf, child)
+    if child.conf.get(_PARTITIONS_CONF) != partitions:
+        child.conf.set(_PARTITIONS_CONF, partitions)
     return child

@@ -8,9 +8,10 @@ import pytest
 from pandas.testing import assert_frame_equal
 from pyspark import StorageLevel
 
+from piholelongtermstats_spark import api
 from piholelongtermstats_spark.api import reload, run_dashboard
 from piholelongtermstats_spark.operators import plotdata, stats
-from piholelongtermstats_spark.session import sized_session
+from piholelongtermstats_spark.session import RELOAD_TASK_INPUT_BYTES, sized_session
 from piholelongtermstats_spark.sources import layout
 from tests.conftest import make_fact
 
@@ -202,10 +203,10 @@ def test_payload_matches_lazy_frames_on_edge_facts(spark, case):
 
 def test_plotted_reload_job_budget(spark):
     """A plotted reload runs the stats collect plus one scatter
-    aggregate: at most 8 Spark jobs. Its sub-advisory input runs on the
-    child session with AQE off, so the collect is 2 jobs and the
-    scatter 1 (22 with AQE's per-scan cache stages, 49 when each plot
-    frame ran its own toPandas)."""
+    aggregate: at most 8 Spark jobs. It runs on the child session with
+    AQE off, so the collect is 2 jobs and the scatter 1 (22 with AQE's
+    per-scan cache stages, 49 when each plot frame ran its own
+    toPandas)."""
     sc = spark.sparkContext
     first = run_dashboard(spark, SF, exclude_patterns=EXCLUDE_TEENS)
     group = "plotted-reload"
@@ -223,10 +224,11 @@ def test_plotted_reload_job_budget(spark):
 
 
 def _force_profile(monkeypatch, profile: str) -> None:
-    """Pin run_dashboard's size-chosen session: ``child`` reads the
-    window as empty (below any threshold), ``caller`` as huge."""
-    nbytes = 0 if profile == "child" else 1 << 62
-    monkeypatch.setattr(layout, "window_bytes", lambda *a: nbytes)
+    """Pin run_dashboard's execution session: ``child`` is the
+    package's (session.sized_session), ``caller`` the session passed
+    in, with AQE on."""
+    chosen = sized_session if profile == "child" else lambda s, nbytes: s
+    monkeypatch.setattr(api, "sized_session", chosen)
 
 
 def _assert_stats_equal(got: dict, want: dict) -> None:
@@ -254,9 +256,9 @@ PROFILE_WINDOWS = {
 @pytest.mark.parametrize("window", sorted(PROFILE_WINDOWS))
 def test_reload_profiles_agree(spark, monkeypatch, window):
     """A reload gives the same stats dict and payload on the child
-    session (AQE off, one shuffle partition per core) as on the
-    caller's session (AQE on): the input size that picks the profile
-    must not change a result."""
+    session (AQE off, shuffle partitions sized to the input) as on the
+    caller's session (AQE on): the execution profile must not change a
+    result."""
     res = {}
     for profile in ("caller", "child"):
         _force_profile(monkeypatch, profile)
@@ -285,13 +287,11 @@ def test_edge_facts_agree_across_profiles(spark, case):
     _assert_payloads_equal(got_payload, want_payload, rtol=1e-12)
 
 
-@pytest.mark.parametrize("profile", ["child", "caller"])
-def test_reload_leaves_session_conf_alone(spark, monkeypatch, profile):
-    """Neither profile writes the caller's conf, and a runtime SQL conf
+def test_reload_leaves_session_conf_alone(spark):
+    """A reload does not write the caller's conf, and a runtime SQL conf
     the caller changes between reloads reaches the next reload's
     execution session. A first reload of a new source writes its
     layout on the caller's session, so that write must not either."""
-    _force_profile(monkeypatch, profile)
     key = "spark.sql.caseSensitive"
     before = spark.conf.getAll
     with layout.micros_write(spark):
@@ -308,6 +308,7 @@ def test_reload_leaves_session_conf_alone(spark, monkeypatch, profile):
         third = reload(spark, second, parquet_dir=SF, start_date="2024-01-05",
                        end_date="2024-01-10")
         third["fact"].unpersist()
+        assert third["fact"].sparkSession is not spark
         assert third["fact"].sparkSession.conf.get(key) == flipped
     finally:
         if key in before:
@@ -315,6 +316,28 @@ def test_reload_leaves_session_conf_alone(spark, monkeypatch, profile):
         else:
             spark.conf.unset(key)
     assert spark.conf.getAll == before
+
+
+def test_child_partitions_follow_input(spark, monkeypatch):
+    """With AQE off nothing coalesces a shuffle, so the child's
+    partition count follows the input: one per RELOAD_TASK_INPUT_BYTES,
+    at least 1, and the core count only once the input fills every
+    core. A large cluster does not give a small window thousands of
+    partitions. The patched core count is read, never used to start
+    a task."""
+    monkeypatch.setattr(
+        type(spark.sparkContext), "defaultParallelism", property(lambda sc: 4000)
+    )
+
+    def partitions(nbytes: int) -> int:
+        return int(sized_session(spark, nbytes).conf.get("spark.sql.shuffle.partitions"))
+
+    assert partitions(0) == 1
+    assert partitions(RELOAD_TASK_INPUT_BYTES) == 1
+    assert partitions(RELOAD_TASK_INPUT_BYTES + 1) == 2
+    assert partitions(1 << 50) == 4000
+    assert sized_session(spark, 0) is sized_session(spark, 1 << 50)
+    assert spark.conf.get("spark.sql.shuffle.partitions") != "4000"
 
 
 def test_build_corpus_surface(spark):

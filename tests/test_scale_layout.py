@@ -5,11 +5,14 @@ checkable at test scale."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from piholelongtermstats_spark.operators import skew
-from piholelongtermstats_spark.sources import bucketing
+from piholelongtermstats_spark.sources import bucketing, layout
 from piholelongtermstats_spark.sources.parquet import load_table
 from tests.conftest import duck_fact_rows, fact_rows
 
@@ -177,6 +180,31 @@ def test_dns_fact_scans_date_layout(spark):
     assert pushed, plan
     assert "GreaterThanOrEqual(ts," in pushed[0], pushed[0]
     assert "LessThan(ts," in pushed[0], pushed[0]
+
+
+def test_window_bytes_counts_the_kept_days(spark):
+    """layout.window_bytes sums the data files of exactly the p_date
+    directories a [lo, hi) window keeps: each day alone is non-empty,
+    the days add up to their span, an empty window reads 0, and the
+    unbounded window adds only the NULL-date directory, if any."""
+    path = layout.ensure_layout(spark, SF)
+    days = sorted(
+        dt.datetime.fromisoformat(d.name.removeprefix("p_date=")).replace(tzinfo=dt.timezone.utc)
+        for d in os.scandir(path)
+        if d.name.startswith("p_date=2")
+    )
+    one = [layout.window_bytes(path, d, d + dt.timedelta(days=1)) for d in days]
+    assert len(one) > 1 and min(one) > 0
+    span = layout.window_bytes(path, days[0], days[-1] + dt.timedelta(days=1))
+    assert span == sum(one)
+    assert layout.window_bytes(path, days[0], days[0]) == 0
+    nulls = os.path.join(path, "p_date=__HIVE_DEFAULT_PARTITION__")
+    null_bytes = (
+        sum(f.stat().st_size for f in os.scandir(nulls) if not f.name.startswith((".", "_")))
+        if os.path.isdir(nulls)
+        else 0
+    )
+    assert layout.window_bytes(path) == span + null_bytes
 
 
 def test_bucketed_join_revenue_no_exchange_under_join(spark):
