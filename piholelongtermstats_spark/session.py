@@ -11,9 +11,9 @@ Scale notes (100 TB / 1000-executor target):
   dynamic broadcast decisions replace every hand-tuned knob the
   reference has. The one exception is a dashboard reload: it runs on
   a child session with AQE off and a shuffle partition count sized to
-  its pruned input (``sized_session``), because on every measured
-  reload AQE's per-stage re-planning and cache stages cost more than
-  its coalescing saved.
+  its pruned input (``sized_session``), because on no measured reload
+  did AQE's coalescing win back its per-stage re-planning and cache
+  stages.
 - ``spark.sql.shuffle.partitions`` is a *default*; at cluster scale AQE
   coalesces it down and the initial value should be ~2-3x total cores.
 - Session TZ is pinned to UTC so event-time derivations (date/hour/
@@ -106,7 +106,7 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
 
     ``sized_session``'s child is marked applied when it is made and so
     bypasses this: it is cloned from a session that went through here,
-    and re-pinning AQE on would undo the one conf it exists to change.
+    and re-pinning AQE on would undo the conf it exists to change.
 
     Static confs cannot be applied to a session this package did not
     build. The one that costs time is the generated-class cache size
@@ -155,9 +155,10 @@ def sized_session(spark: SparkSession, input_bytes: int) -> SparkSession:
     RELOAD_TASK_INPUT_BYTES of input, at least 1 and at most
     ``defaultParallelism``.
 
-    AQE is off because on every measured reload input (20k to 16M rows,
-    SCALING.md) its per-stage re-planning and its one cache stage per
-    scan of the persisted fact cost more than its coalescing saved. With
+    AQE is off because it adds a re-plan per stage and one cache stage
+    per scan of the persisted fact (22 jobs for a small plotted reload,
+    not 3), and on no measured reload input (20k to 16M rows,
+    SCALING.md) was it faster by more than the run spread. With
     AQE off nothing coalesces a shuffle, so the partition count comes
     from the input and not from the cluster alone: a small window on a
     large cluster runs a few tasks per exchange, not one per core. It
